@@ -3,10 +3,11 @@
 - ``exact_dedup``: hash-groupBy on a normalized fingerprint — one
   shuffle, keeps the smallest id per group.
 - ``minhash_lsh_pairs``: MinHash + banded LSH: shingle → K minhashes →
-  B bands → self-join on (band, band-hash) buckets → verified Jaccard.
-  Everything native: the K permutations are ``xxhash64(shingle, seed_i)``
-  minima computed with higher-order array functions; the band join is an
-  equi-join Catalyst shuffles on the band key (no cross join anywhere).
+  B bands → pairs within each (band, band-hash) bucket → verified
+  Jaccard. The K minhashes come from one Arrow pass
+  (``_minhash_sig_udf``: blake2b per shingle, K seeded splitmix64
+  mixes), the library's only signature family; the bucket grouping
+  shuffles on the band key (no cross join anywhere).
 - ``simhash``: 64-bit SimHash per document via bit-vote aggregation over
   token hashes (native transform/aggregate), with a banded join for
   hamming-neighbor candidate pairs.
@@ -56,35 +57,6 @@ def exact_dedup(
         .filter(F.col(id_col) == F.col("_keep"))
         .drop("_fp", "_keep")
     )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """K-permutation MinHash signatures.
-
-    Shape chosen for scale: explode shingles → K ``min(xxhash64(g, i))``
-    aggregations per doc. The mins partial-aggregate map-side, so the
-    only shuffle carries K longs per doc — not the shingle sets — and
-    each shingle is hashed K times in one codegen'd pass (the
-    ``array_min(transform(...))`` alternative builds a K-branch
-    expression tree that blows past codegen limits for K ≳ 50)."""
-    sh = shingles(F.col(text_col), shingle_k)
-    base = df.select(F.col(id_col), sh.alias("_sh"))
-    # one string hash per shingle, K seeded long hashes (see
-    # minhash_lsh_pairs for the r7 rationale)
-    exploded = base.select(id_col, F.explode("_sh").alias("_gs")).select(
-        id_col, F.xxhash64(F.col("_gs")).alias("_g")
-    )
-    aggs = [F.min(F.xxhash64(F.col("_g"), F.lit(i))).alias(f"_h{i}") for i in range(num_hashes)]
-    sigs = exploded.groupBy(id_col).agg(*aggs).select(
-        id_col, F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("_mh")
-    )
-    return base.join(sigs, on=id_col)
 
 
 _MINHASH_SIG_UDFS: dict = {}

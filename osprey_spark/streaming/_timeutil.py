@@ -1,8 +1,8 @@
 """Shared pandas→epoch conversion for the stateful fold operators.
 
-The folds in cep_state / cep_tws / escalation_state / escalation_tws all
-need event time as float64 epoch seconds, converted columnar (one numpy
-pass per Arrow chunk) rather than per-row ``.timestamp()``. A bare
+The folds in cep_tws and escalation_tws both need event time as float64
+epoch seconds, converted columnar (one numpy pass per Arrow chunk)
+rather than per-row ``.timestamp()``. A bare
 ``series.astype("int64") / 1e9`` has two silent failure modes this
 helper closes:
 

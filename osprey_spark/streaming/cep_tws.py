@@ -1,20 +1,24 @@
-"""Streaming CEP on Spark 4's ``transformWithStateInPandas``.
+"""Streaming CEP: ordered-pattern matching across micro-batches on
+Spark 4's ``transformWithStateInPandas``.
 
-Twin of :mod:`osprey_spark.streaming.cep_state` (ordered-pattern matching
-across micro-batches with out-of-order arrival) on the current-generation
-arbitrary-state API. The out-of-order buffer — turns that arrived ahead
-of the next expected ``turn_idx`` — lives in a typed **ListState**
-instead of being packed into parallel arrays inside one value row: the
-RocksDB provider stores list elements as separate entries, so a
-conversation whose buffer grows large (a long out-of-order backlog)
-appends O(new elements) per batch rather than rewriting one ever-growing
-blob, and the progress scalar stays a tiny ValueState.
+The streaming counterpart of ``operators.sessions.match_sequence``,
+keyed by conversation. Turns may arrive across any number of
+micro-batches and **out of order** (files/partitions carry no ordering
+guarantee): the state buffers turns that arrive ahead of the next
+expected ``turn_idx`` (contiguous per conversation, FIXTURES F1) and
+feeds the pattern state machine strictly in turn order, so the result
+is independent of arrival order — the exactly-once/replay-safe property
+the batch operator gets for free from sort_array.
 
-Same contract as the applyInPandasWithState operator: step predicates
-are folded JVM-side into a bitmask before the stateful op (no text
-crosses into Python), results are independent of arrival order, and the
-two implementations are pinned output-identical by
-tests/test_streaming_state.py::test_tws_cep_matches_apply_in_pandas.
+The out-of-order buffer lives in a typed **ListState**: the RocksDB
+provider stores list elements as separate entries, so a conversation
+whose buffer grows large (a long out-of-order backlog) appends
+O(new elements) per batch rather than rewriting one ever-growing blob,
+and the progress scalar stays a tiny ValueState.
+
+The step predicates are evaluated *before* the stateful operator as a
+boolean-bitmask column (JVM-side), so the Python fold only sees longs —
+the Arrow payload is (key, turn_idx, ts, mask), not text.
 """
 
 from __future__ import annotations
@@ -30,9 +34,9 @@ from pyspark.sql.streaming.stateful_processor import (
     TimerValues,
 )
 
-from osprey_spark.streaming.cep_state import OUTPUT_SCHEMA
 from osprey_spark.streaming._timeutil import epoch_seconds
 
+OUTPUT_SCHEMA = "conv_id string, matched_at_turn long, matched_at_ts timestamp"
 _COLS = ["conv_id", "matched_at_turn", "matched_at_ts"]
 
 
@@ -70,7 +74,7 @@ class _CepProcessor(StatefulProcessor):
                     pending[t] = (float(s), int(m))
 
         out_rows = []
-        # consume strictly contiguous turns (same fold as cep_state.py)
+        # consume strictly contiguous turns
         while not done and next_turn in pending:
             ts, mask = pending.pop(next_turn)
             if (
@@ -110,10 +114,9 @@ def streaming_match_sequence_tws(
     ts_col: str = "ts",
     within_seconds: "int | None" = None,
 ) -> DataFrame:
-    """transformWithStateInPandas twin of
-    :func:`osprey_spark.streaming.cep_state.streaming_match_sequence` —
-    identical output contract. Requires the RocksDB state store
-    provider."""
+    """Attach to a (possibly streaming) DataFrame of turns; emits one row
+    per key when the ordered pattern completes. Requires the RocksDB
+    state store provider."""
     mask = None
     for i, s in enumerate(steps):
         bit = F.when(F.coalesce(s.cast("boolean"), F.lit(False)), F.lit(1 << i)).otherwise(

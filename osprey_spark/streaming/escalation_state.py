@@ -1,34 +1,9 @@
-"""Stateful streaming escalation sessions.
+"""Row and keyed-state schemas of the streaming escalation-sessions
+operator (:func:`osprey_spark.streaming.escalation_tws.streaming_escalation_sessions_tws`).
 
-The streaming counterpart of ``operators.sessions.escalation_sessions``
-(multi-turn escalation rules over gap-based sessions — the north-star's
-"flatMapGroupsWithState-style session state"): per-conversation keyed
-state tracks the open session (start, last event time, turn and trigger
-counts); when the trigger count reaches ``min_triggers`` the escalation
-row is emitted IMMEDIATELY (append mode, once per session) rather than
-at session close — a safety pipeline wants the alert at the crossing
-turn, not minutes later when the session gap elapses.
-
-Sessions split on event-time gaps > ``gap_seconds``. State for idle
-conversations is evicted by an event-time timeout driven by the stream's
-watermark (set ``withWatermark`` upstream), so lifetime state is bounded
-by the number of conversations active inside one watermark horizon —
-the property that keeps this runnable against a 10^12-turn stream.
-
-The trigger predicate is evaluated JVM-side into a boolean column before
-the stateful operator, so the Arrow payload per turn is (key, ts,
-is_trigger) — no text crosses into Python.
+Times in the state row are float64 epoch seconds; output rows carry
+timestamps.
 """
-
-from __future__ import annotations
-
-from typing import Iterator
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from osprey_spark.streaming._timeutil import epoch_seconds
 
 OUTPUT_SCHEMA = (
     "conv_id string, session_start timestamp, escalated_at timestamp, "
@@ -38,123 +13,3 @@ STATE_SCHEMA = (
     "session_start double, last_ts double, n_turns long, n_triggers long, "
     "emitted boolean"
 )
-
-
-def _make_escalation_fn(gap_seconds: float, min_triggers: int):
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        cols = ["conv_id", "session_start", "escalated_at", "n_turns", "n_triggers"]
-        if state.hasTimedOut:
-            # idle past the watermark: the open session can never extend
-            state.remove()
-            yield pd.DataFrame(columns=cols)
-            return
-        if state.exists:
-            session_start, last_ts, n_turns, n_triggers, emitted = state.get
-        else:
-            session_start, last_ts, n_turns, n_triggers, emitted = 0.0, None, 0, 0, False
-
-        rows = []
-        # Materialize ALL Arrow chunks for this key before sorting:
-        # applyInPandasWithState guarantees no cross-chunk ordering within
-        # a micro-batch, so sorting per-chunk (the round-2 shape) could
-        # process a large conversation out of event-time order — last_ts
-        # moving backwards mis-splits sessions. One concat + one sort per
-        # (key, batch); memory is bounded by a key's rows in one batch.
-        chunks = list(pdfs)
-        batch = (
-            pd.concat(chunks, ignore_index=True)
-            if chunks
-            else pd.DataFrame({"ts": [], "is_trigger": []})
-        )
-        if len(batch):
-            # vectorized sort + epoch conversion (numpy) before the
-            # inherently-sequential session fold — bounds Python-per-row
-            # work on fat groups (hot conversations) to the fold itself
-            batch = batch.dropna(subset=["ts"]).sort_values("ts", kind="stable")
-            ts_arr = epoch_seconds(batch["ts"])
-            trig_arr = batch["is_trigger"].to_numpy()
-            for t, trig in zip(ts_arr, trig_arr):
-                t = float(t)
-                if last_ts is None or t - last_ts > gap_seconds:
-                    # new session
-                    session_start, n_turns, n_triggers, emitted = t, 0, 0, False
-                last_ts = t
-                n_turns += 1
-                if bool(trig):
-                    n_triggers += 1
-                    if n_triggers == min_triggers and not emitted:
-                        emitted = True
-                        rows.append(
-                            (
-                                key[0],
-                                pd.Timestamp(session_start, unit="s"),
-                                pd.Timestamp(t, unit="s"),
-                                n_turns,
-                                n_triggers,
-                            )
-                        )
-
-        state.update((session_start, last_ts, n_turns, n_triggers, emitted))
-        # evict once the watermark passes the session gap — CLAMPED to
-        # just past the current watermark: a conversation whose last
-        # event-time is already far behind the stream's watermark (late
-        # keys in a day-spanning backfill batch) would otherwise request
-        # a timeout in the past, which Spark rejects with
-        # "timeout timestamp cannot be earlier than watermark"
-        timeout_ms = int((last_ts + gap_seconds) * 1000)
-        wm_ms = state.getCurrentWatermarkMs()
-        state.setTimeoutTimestamp(max(timeout_ms, wm_ms + 1))
-        yield pd.DataFrame(rows, columns=cols)
-
-    return fn
-
-
-def streaming_escalation_sessions(
-    stream: DataFrame,
-    trigger: Column,
-    key: str = "conv_id",
-    ts_col: str = "ts",
-    gap_seconds: float = 1800.0,
-    min_triggers: int = 2,
-    candidates: "DataFrame | None" = None,
-) -> DataFrame:
-    """Attach to a (streaming) DataFrame of turns; emits one row per
-    session the moment its trigger count reaches ``min_triggers``.
-
-    ``candidates`` (optional, the group-count bound for dense inputs):
-    a non-streaming DataFrame whose FIRST column lists conversation ids
-    to consider; the stream is stream-static LEFT SEMI joined against it
-    (broadcast — candidate sets are id-only) BEFORE the stateful
-    operator, so ``applyInPandasWithState`` pays its ~1 Python
-    dispatch per (group, batch) only for candidate conversations.
-
-    Exactness contract: the set must contain every conversation that
-    ever has a trigger turn (an over-approximation is fine). Then the
-    output is IDENTICAL to the unfiltered operator: a candidate
-    conversation keeps ALL its turns (the semi-join is per conversation,
-    not per row), and a non-candidate conversation has zero triggers so
-    it can never reach ``min_triggers`` — its state would only ever be
-    created and evicted. At 10^12-turn scale the set is the cheap
-    JVM-side index of convs-with-recent-triggers (a distinct over the
-    trigger predicate, or a bloom maintained alongside ingest), which
-    bounds Python group dispatch by the trigger density instead of the
-    conversation density."""
-    prepared = stream.select(
-        F.col(key).alias("conv_id"),
-        F.col(ts_col).alias("ts"),
-        F.coalesce(trigger.cast("boolean"), F.lit(False)).alias("is_trigger"),
-    )
-    if candidates is not None:
-        cand = candidates.select(
-            F.col(candidates.columns[0]).cast("string").alias("conv_id")
-        ).distinct()
-        prepared = prepared.join(F.broadcast(cand), on="conv_id", how="leftsemi")
-    return prepared.groupBy("conv_id").applyInPandasWithState(
-        _make_escalation_fn(gap_seconds, min_triggers),
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )

@@ -1,29 +1,34 @@
-"""Escalation sessions on Spark 4's ``transformWithStateInPandas``.
+"""Stateful streaming escalation sessions on Spark 4's
+``transformWithStateInPandas``.
 
-Same semantics as :mod:`osprey_spark.streaming.escalation_state` (gap
-sessions, alert emitted AT the turn that crosses ``min_triggers``, once
-per session, event-time state eviction) re-expressed on the
-current-generation arbitrary-state API (StatefulProcessor + typed state
-handles + named timers) instead of ``applyInPandasWithState``. What the
-new API buys at scale:
+The streaming counterpart of ``operators.sessions.escalation_sessions``
+(multi-turn escalation rules over gap-based sessions): per-conversation
+keyed state tracks the open session (start, last event time, turn and
+trigger counts); when the trigger count reaches ``min_triggers`` the
+escalation row is emitted IMMEDIATELY (append mode, once per session)
+rather than at session close — a safety pipeline wants the alert at the
+crossing turn, not minutes later when the session gap elapses.
+
+Sessions split on event-time gaps > ``gap_seconds``. State for idle
+conversations is evicted by an event-time timer driven by the stream's
+watermark (set ``withWatermark`` upstream), so lifetime state is bounded
+by the number of conversations active inside one watermark horizon —
+the property that keeps this runnable against a 10^12-turn stream.
+
+What the StatefulProcessor API gives this operator at scale:
 
 - **RocksDB-backed state with changelog checkpointing** — keyed state
   lives off-heap and snapshots incrementally, the configuration a
   10^12-turn stream needs (`spark.sql.streaming.stateStore.providerClass
   = ...RocksDBStateStoreProvider`, required by transformWithState).
-- **Typed state + TTL** — the session struct is a ValueState with
-  schema; timer bookkeeping is explicit (register/delete) instead of the
-  single implicit timeout slot.
+- **Typed state + named timers** — the session struct is a ValueState
+  with schema; timer bookkeeping is explicit (register/delete).
 - **Initial state** — a bootstrap DataFrame can seed sessions on
-  migration (``initialState`` arg), which applyInPandasWithState lacks.
+  migration (``initialState`` arg, see :func:`escalation_bootstrap_state`).
 
-The operator keeps the same trigger-column contract (JVM-evaluated
-boolean before the stateful op — no text crosses into Python) and the
-same optional ``candidates`` semi-join bound on group dispatch.
-
-Interchangeability is pinned by
-tests/test_streaming_state.py::test_tws_escalation_matches_apply_in_pandas
-— both implementations must produce identical rows on the same input.
+The trigger predicate is evaluated JVM-side into a boolean column before
+the stateful operator, so the Arrow payload per turn is (key, ts,
+is_trigger) — no text crosses into Python.
 """
 
 from __future__ import annotations
@@ -71,12 +76,14 @@ class _EscalationProcessor(StatefulProcessor):
             else pd.DataFrame({"ts": [], "is_trigger": []})
         )
         if len(batch):
-            # one vectorized event-time sort per (key, batch) — the same
-            # cross-chunk ordering guarantee as escalation_state.py, with
-            # the sort and the epoch conversion done columnar (numpy)
-            # before the inherently-sequential session fold; on a fat
-            # group (hot conversation) this keeps Python-per-row work to
-            # the fold itself
+            # Sort ALL Arrow chunks of this key together: the operator
+            # guarantees no cross-chunk ordering within a micro-batch, so
+            # a per-chunk sort could fold a large conversation out of
+            # event-time order (last_ts moving backwards mis-splits
+            # sessions). One vectorized sort + epoch conversion (numpy)
+            # per (key, batch) before the inherently-sequential session
+            # fold keeps Python-per-row work on a fat group (hot
+            # conversation) to the fold itself
             batch = batch.dropna(subset=["ts"]).sort_values("ts", kind="stable")
             ts_arr = epoch_seconds(batch["ts"])
             trig_arr = batch["is_trigger"].to_numpy()
@@ -100,10 +107,14 @@ class _EscalationProcessor(StatefulProcessor):
                             )
                         )
 
+        if last_ts is None:
+            # a new key whose rows all had null ts: nothing folded, so no
+            # state to keep and no event time to evict by
+            yield pd.DataFrame(out, columns=_COLS)
+            return
         self.sess.update((session_start, last_ts, n_turns, n_triggers, emitted))
         # ONE live eviction timer per key: delete stale ones (registerTimer
-        # accumulates, unlike the old single-slot setTimeoutTimestamp),
-        # clamped past the current watermark for late keys
+        # accumulates), clamped past the current watermark for late keys
         for t_old in list(self.handle.listTimers()):
             self.handle.deleteTimer(t_old)
         timeout_ms = int((last_ts + self.gap_seconds) * 1000)
@@ -201,15 +212,35 @@ def streaming_escalation_sessions_tws(
     candidates: "DataFrame | None" = None,
     initial_state: "DataFrame | None" = None,
 ) -> DataFrame:
-    """transformWithStateInPandas twin of
-    :func:`osprey_spark.streaming.escalation_state.streaming_escalation_sessions`
-    — identical output contract. Requires the RocksDB state store
-    provider (set ``spark.sql.streaming.stateStore.providerClass`` to
+    """Attach to a (streaming) DataFrame of turns; emits one row per
+    session the moment its trigger count reaches ``min_triggers``.
+    Requires the RocksDB state store provider (set
+    ``spark.sql.streaming.stateStore.providerClass`` to
     ``org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``
-    before starting the query). ``initial_state``: per-conversation open
-    sessions to seed on the FIRST batch (build with
-    :func:`escalation_bootstrap_state`) — the redeploy-without-replay
-    migration path."""
+    before starting the query).
+
+    ``candidates`` (optional, the group-count bound for dense inputs):
+    a non-streaming DataFrame whose FIRST column lists conversation ids
+    to consider; the stream is stream-static LEFT SEMI joined against it
+    (broadcast — candidate sets are id-only) BEFORE the stateful
+    operator, so the operator pays its ~1 Python dispatch per
+    (group, batch) only for candidate conversations.
+
+    Exactness contract: the set must contain every conversation that
+    ever has a trigger turn (an over-approximation is fine). Then the
+    output is IDENTICAL to the unfiltered operator: a candidate
+    conversation keeps ALL its turns (the semi-join is per conversation,
+    not per row), and a non-candidate conversation has zero triggers so
+    it can never reach ``min_triggers`` — its state would only ever be
+    created and evicted. At 10^12-turn scale the set is the cheap
+    JVM-side index of convs-with-recent-triggers (a distinct over the
+    trigger predicate, or a bloom maintained alongside ingest), which
+    bounds Python group dispatch by the trigger density instead of the
+    conversation density.
+
+    ``initial_state``: per-conversation open sessions to seed on the
+    FIRST batch (build with :func:`escalation_bootstrap_state`) — the
+    redeploy-without-replay migration path."""
     prepared = stream.select(
         F.col(key).alias("conv_id"),
         F.col(ts_col).alias("ts"),

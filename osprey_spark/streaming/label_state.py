@@ -94,7 +94,6 @@ class LabelStateStore:
         path: str,
         num_partitions: int = 64,
         max_delta_files: int = 8,
-        snapshot_cache: bool = False,
     ):
         self.store = HashPartitionedStateStore(
             path,
@@ -103,7 +102,6 @@ class LabelStateStore:
             num_partitions=num_partitions,
             max_delta_files=max_delta_files,
             resolve_fn=label_resolver,
-            snapshot_cache=snapshot_cache,
         )
         self.path = path
 

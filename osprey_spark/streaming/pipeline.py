@@ -18,10 +18,11 @@ previous batch** — the reference applies label effects after execution
 replay the state stores' ``before_batch`` reads pin that same snapshot
 even if the crash landed after the state delta was applied.
 
-Commit protocol (exactly-once, crash anywhere): label + verdict state
-deltas apply FIRST (idempotent per batch id), the sink's commit marker
-lands LAST. A replayed batch re-applies nothing that already landed and
-re-writes the (invisible, uncommitted) data files.
+Commit protocol (exactly-once, crash anywhere): one fixed order per
+batch — label merge, then verdict merge (each idempotent per batch id),
+then the sink's commit marker LAST. A replayed batch re-applies nothing
+that already landed and re-writes the (invisible, uncommitted) data
+files.
 
 Resume: Spark's ``checkpointLocation`` tracks the source offsets; batch
 replay after a crash hits the sink's committed-batch guard → no
@@ -82,8 +83,6 @@ class RuleStreamPipeline:
         maintenance_every: int = 16,
         keep_versions: int = 8,
         label_max_delta_files: int = 8,
-        snapshot_cache: bool = False,
-        concurrent_merges: bool = True,
     ):
         """``maintenance_every``: every N committed batches, expire state
         snapshots unreachable from the newest ``keep_versions`` manifests
@@ -114,25 +113,14 @@ class RuleStreamPipeline:
         self.salt_buckets = salt_buckets
         self.maintenance_every = maintenance_every
         self.keep_versions = keep_versions
-        self.concurrent_merges = concurrent_merges
         self.sink = IdempotentParquetSink(os.path.join(workdir, "results"))
         # label_max_delta_files bounds MOR read amplification per bucket
         # (lazy compaction past it); together with snapshot expiry it also
         # bounds DISK: delta generations stay live until compaction folds
         # them, after which expiry reclaims the superseded files
-        # snapshot_cache (OPT-IN): per-batch HasLabel/verdict reads come
-        # from an incrementally-maintained RESOLVED snapshot in executor
-        # storage instead of re-running the MOR resolution over
-        # base+deltas. Measured at parity with the MOR scan in steady
-        # state at bench scale (compaction + filter pushdown already
-        # bound the scan — see state_store._cached_snapshot cost model
-        # and BENCH.md attribution), so the default stays the scan;
-        # enable for resolution-heavy/unfilterable read patterns. Replay
-        # reads still pin the pre-batch version via the MOR scan.
         self.labels = LabelStateStore(
             os.path.join(workdir, "labels"),
             max_delta_files=label_max_delta_files,
-            snapshot_cache=snapshot_cache,
         )
         self.checkpoint = os.path.join(workdir, "checkpoint")
         # verdict counts are additive, so merge-on-read resolution is a
@@ -146,7 +134,6 @@ class RuleStreamPipeline:
             resolve_fn=lambda df: df.groupBy(key_col).agg(
                 F.sum("prior_verdict_count").alias("prior_verdict_count")
             ),
-            snapshot_cache=snapshot_cache,
         )
         schema_str = input_schema or TRANSCRIPT_SCHEMA
         from pyspark.sql.types import _parse_datatype_string
@@ -270,65 +257,17 @@ class RuleStreamPipeline:
         try:
             # -- single evaluation: the first action below materializes the
             # cache; everything after reads it
-            if self.plan.labels and self.track_verdict_state:
-                # BOTH state merges are due. They write to disjoint
-                # stores, each is small (delta-sized, a handful of
-                # partitions) and underutilizes the cluster alone, and
-                # both are idempotent per batch_id. Ordering vs the sink
-                # commit marker is preserved either way: both merges
-                # complete (or raise) before the sink write below.
-                mutations = self.plan.label_mutation_rows(out)
-                if self.concurrent_merges:
-                    # Materialize the persist BEFORE sharing it across
-                    # threads: single-evaluation requires compute-once
-                    # (rules may be nondeterministic — RandomBool), and
-                    # on a multi-executor cluster two concurrent first
-                    # jobs could each compute a partition before either
-                    # caches it. The noop-format write scans and caches
-                    # JVM-side in ONE stage — no count() final-agg
-                    # exchange, no rows to the driver.
-                    out.write.format("noop").mode("overwrite").save()
-                    from concurrent.futures import ThreadPoolExecutor, wait
-
-                    with ThreadPoolExecutor(max_workers=2) as pool:
-                        f1 = pool.submit(
-                            self.labels.apply_mutations, mutations, batch_id
-                        )
-                        f2 = pool.submit(self._update_verdict_state, out, batch_id)
-                        # surface BOTH failures: if the label and verdict
-                        # merges each raise, losing the second exception
-                        # hides the verdict-side cause from logs
-                        wait([f1, f2])
-                        errs = [
-                            (name, f.exception())
-                            for name, f in (("label-merge", f1), ("verdict-merge", f2))
-                            if f.exception() is not None
-                        ]
-                        if errs:
-                            primary = errs[0][1]
-                            for name, extra in errs[1:]:
-                                primary.add_note(
-                                    f"concurrent {name} also failed: {extra!r}"
-                                )
-                            raise primary
-                else:
-                    # folded variant: merge #1's first action materializes
-                    # the persist itself, eliminating the dedicated
-                    # materialization job (one fewer fixed job per batch
-                    # at the cost of serializing the two small merges) —
-                    # measured against concurrent in BENCH.md
-                    self.labels.apply_mutations(mutations, batch_id=batch_id)
-                    self._update_verdict_state(out, batch_id)
-            elif self.plan.labels:
+            if self.plan.labels:
                 # mutation rows explode the structs column of the SAME
                 # evaluated frame (HasLabel-dependent apply_if conditions
                 # included — the raw batch would miss resolved lookups)
                 mutations = self.plan.label_mutation_rows(out)
-                # state deltas FIRST, sink commit marker LAST: a crash in
-                # between replays into idempotent per-batch state merges,
-                # so mutations are never lost or double-applied
+                # state deltas FIRST (label, then verdict), sink commit
+                # marker LAST: a crash anywhere in between replays into
+                # idempotent per-batch state merges, so mutations are
+                # never lost or double-applied
                 self.labels.apply_mutations(mutations, batch_id=batch_id)
-            elif self.track_verdict_state:
+            if self.track_verdict_state:
                 self._update_verdict_state(out, batch_id)
             prev_hw = self._read_high_watermark()
             obs = Observation()

@@ -8,27 +8,22 @@ per-batch O(|state|) rewrite is a scale-killer.
 
 State is hash-partitioned into ``num_partitions`` buckets by key
 (``pmod(xxhash64(keys), P)`` — the same bucketing a real cluster would
-use for co-located state). Two write paths:
+use for co-located state). One write path, merge-on-read
+(``merge_append``): a batch appends ONLY its delta rows as new
+per-bucket parquet files — O(|delta|) writes, no read of current state
+at all — and ``read()`` resolves base+deltas to one row per key with a
+caller-supplied associative ``resolve_fn`` (default: latest generation
+wins, Iceberg MOR's equality-delete semantics). The round-3 full-stack
+run showed why a copy-on-write rewrite of dirty buckets cannot serve
+here: with dense deltas every bucket is dirty each batch (150k active
+conversations → all 64 buckets touched), so the rewrite grows with the
+whole flagged set (15.5k→47.9k rows/batch). A bucket whose live
+file-list exceeds ``max_delta_files`` is compacted lazily during the
+merge that trips the threshold: its files fold into one resolved base
+file, bounding read amplification at O(max_delta_files) while keeping
+amortized write cost O(|delta|).
 
-**merge-on-read (``merge_append``, the default for dense deltas).** The
-round-3 full-stack run showed the copy-on-write path degrade when every
-bucket is dirty each batch (150k active conversations → all 64 buckets
-touched → the merge rewrites the entire growing flagged set, 15.5k→47.9k
-rows/batch). Merge-on-read fixes that: a batch appends ONLY its delta
-rows as new per-bucket parquet files — O(|delta|) writes, no read of
-current state at all — and ``read()`` resolves base+deltas to one row
-per key with a caller-supplied associative ``resolve_fn`` (default:
-latest generation wins, Iceberg MOR's equality-delete semantics). A
-bucket whose live file-list exceeds ``max_delta_files`` is compacted
-lazily during the merge that trips the threshold: its files fold into
-one resolved base file, bounding read amplification at O(max_delta_files)
-while keeping amortized write cost O(|delta|).
-
-**copy-on-write (``merge``).** For sparse deltas or non-associative
-merge logic: reads ONLY the dirty buckets' current (resolved) rows,
-applies ``merge_fn``, rewrites those buckets.
-
-Both paths publish a new manifest (bucket id → ordered file list) plus
+Each merge publishes a new manifest (bucket id → ordered file list) plus
 pointer atomically. This is the plain-parquet stand-in for an
 Iceberg/Delta MOR table: the manifest is Iceberg's snapshot manifest,
 the pointer file is the catalog's atomic swap, delta files are
@@ -70,21 +65,6 @@ GEN_COL = "__state_gen"
 _GEN_DIR_RE = re.compile(r"^d\d+x?$")
 
 
-def _unpersist_local_checkpoint(df: DataFrame) -> None:
-    """Release the executor-storage blocks behind an eager
-    ``localCheckpoint`` DataFrame. ``DataFrame.unpersist()`` cannot do
-    this — it only uncaches catalog-cached queries — so we unpersist the
-    materialized RDD held by the checkpoint's ``LogicalRDD`` plan node.
-    Safe only once nothing will read the frame again: a locally
-    checkpointed RDD has no lineage to recompute from."""
-    try:
-        plan = df._jdf.queryExecution().logical()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass  # session teardown race / API drift — worst case GC reclaims
-
-
 def latest_wins(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """Default MOR resolution: the newest generation's row wins per key
     (Iceberg equality-delete semantics). One hash aggregation with
@@ -105,35 +85,21 @@ class HashPartitionedStateStore:
         key_cols: list[str],
         schema: str,
         num_partitions: int = 64,
-        max_generations: int = 16,
         max_delta_files: int = 8,
         resolve_fn: Optional[Callable[[DataFrame], DataFrame]] = None,
-        snapshot_cache: bool = False,
     ):
         """``resolve_fn(df) -> df`` collapses rows to one per key. It
         receives the raw base+delta rows with an extra ``__state_gen``
         long column (monotone write order) and must be ASSOCIATIVE and
         insensitive to physical row order — compaction applies it to any
         prefix of a bucket's files and the result must resolve identically
-        against later deltas. Default: :func:`latest_wins`.
-
-        ``snapshot_cache=True`` keeps an incrementally-maintained RESOLVED
-        snapshot in executor storage (see :meth:`_cached_snapshot`): each
-        ``read()`` of the current version returns one-row-per-key data with
-        NO resolution aggregate in the read plan, and a version bump folds
-        only the new delta files onto the cached snapshot (associativity
-        of ``resolve_fn`` makes the fold exact). Purely a performance
-        layer — replay reads (``before_batch``) of older versions fall
-        back to the merge-on-read scan."""
+        against later deltas. Default: :func:`latest_wins`."""
         self.path = path
         self.key_cols = key_cols
         self.schema = schema  # DDL string of the full state row
         self.num_partitions = num_partitions
-        self.max_generations = max_generations
         self.max_delta_files = max_delta_files
         self.resolve_fn = resolve_fn
-        self.snapshot_cache = snapshot_cache
-        self._cache: Optional[dict] = None
         self.last_merge_stats: dict = {}
         os.makedirs(path, exist_ok=True)
 
@@ -233,157 +199,14 @@ class HashPartitionedStateStore:
         ``before_batch=b``, the snapshot as of before batch ``b`` was
         applied (replay-consistent reads). Filters on the key columns
         push below the MOR resolution (they are grouping columns), so a
-        per-label HasLabel read still prunes at the scan.
-
-        With ``snapshot_cache`` on, the current version is served from the
-        incrementally-maintained resolved snapshot — no resolution
-        aggregate in the read plan at all. Replay reads of an OLDER
-        version bypass the cache (correctness first: the scan path is
-        always available).
-
-        LIFETIME (ADVICE r6): with ``snapshot_cache=True`` the returned
-        frame is backed by an eager ``localCheckpoint`` whose blocks are
-        RELEASED when a later ``merge`` + ``read`` advances the cache —
-        execute (or ``persist`` + materialize) the frame before the next
-        merge if you must hold it across generations; a lazy reference
-        executed after the advance fails with a checkpoint-block-not-found
-        SparkException rather than silently recomputing."""
+        per-label HasLabel read still prunes at the scan."""
         ptr = self.pointer()
         v = int(ptr["version"])
         if before_batch is not None and ptr["batch_id"] == before_batch:
             v -= 1  # this batch already applied (crash between state and sink)
         if v < 0:
             return self._empty(spark)
-        if self.snapshot_cache:
-            c = self._cache
-            if c is not None and c["session"] is spark and c["version"] == v:
-                return c["df"].drop(_PART)
-            if v == self.current_version():
-                return self._cached_snapshot(spark, v)
         return self._scan(spark, self._manifest(v))
-
-    # -- incrementally-maintained resolved snapshot ---------------------------
-
-    def _cached_snapshot(self, spark: SparkSession, v: int) -> DataFrame:
-        """Build (or incrementally advance) the materialized resolved
-        snapshot for version ``v`` and return it.
-
-        The scale problem this solves (round-4 full-stack bench): every
-        HasLabel site's per-batch read re-ran the MOR resolution aggregate
-        over base+deltas — a parquet decode + shuffle per site per batch,
-        ~2.4× total-throughput tax vs the stateless pipeline. Instead the
-        store keeps the RESOLVED one-row-per-key snapshot in executor
-        storage (``localCheckpoint``: materialized, lineage truncated so
-        the plan does not grow across batches) and advances it per
-        version bump with an incremental fold:
-
-        - a bucket whose manifest file-list is UNCHANGED passes its cached
-          rows through untouched — no re-aggregation;
-        - a bucket whose list GREW (delta appends) folds cached rows +
-          ONLY the new files through ``resolve_fn`` — exact because the
-          resolver is associative and cached rows are stamped with a
-          generation older than any new file's;
-        - a bucket whose list was REPLACED (compaction) or is NEW is
-          re-read from its (just-compacted, single) file — cached rows
-          are discarded for it, so non-idempotent resolvers (e.g. SUM)
-          never double-count.
-
-        Cost model (measured, round 5 — BENCH.md "snapshot cache
-        attribution"): the advance is an EAGER ``localCheckpoint`` — one
-        dedicated O(|state|) job per store per batch whose steady-state
-        per-batch cost measured AT PARITY with the plain MOR scan at
-        bench scale, because lazy compaction already bounds that scan at
-        ``max_delta_files`` delta files and HasLabel's (entity_type,
-        label_name) filters push into it, so there was little aggregate
-        left to avoid. A LAZY variant (persist, materialize in the
-        consumer, truncate lineage every K advances) was tried and
-        measured strictly worse (fold-over-fold chains degraded 9→55s
-        per batch) — do not resurrect it. Hence ``snapshot_cache``
-        defaults OFF and is the opt-in materialized-view path for
-        resolution-heavy read patterns. Its measured WINNING regime
-        (BENCH.md "winning regime"): deep delta stacks — with compaction
-        deferred (``max_delta_files=64``, 32-file stacks) the scan's
-        per-batch wall grows with stack depth while the cache's stays
-        flat at the delta size, a 1.6× steady-state win. Flip it on
-        where compaction is deferred or rewrite-cost-bound (write-hot
-        tables on object stores). On a real cluster the
-        checkpoint blocks live on executors (MEMORY_AND_DISK), the same
-        placement an Iceberg materialized view would give."""
-        buckets = self._manifest(v)
-        c = self._cache
-        if c is not None and (c["session"] is not spark):
-            c = None  # cache belongs to another session — rebuild
-        out_cols = self._empty(spark).columns
-
-        if c is None:
-            snap = self._scan(spark, buckets)
-        else:
-            untouched, grown_cached, inc_paths = [], [], []
-            for b, rels in buckets.items():
-                old = c["buckets"].get(b)
-                if old is not None and rels[: len(old)] == old:
-                    if len(rels) == len(old):
-                        untouched.append(int(b))
-                    else:
-                        grown_cached.append(int(b))
-                        inc_paths += rels[len(old):]
-                else:
-                    # new bucket, or compaction rebased its file list:
-                    # read fully, drop cached rows (SUM-safe)
-                    inc_paths += rels
-            cached = c["df"]  # carries _PART
-            parts = []
-            if untouched:
-                parts.append(cached.filter(F.col(_PART).isin(untouched)).drop(_PART))
-            fold_inputs = []
-            if grown_cached:
-                # stamp with the cache's version: every appended file's
-                # generation is a later publish version, so latest-wins
-                # resolvers order correctly; SUM-like resolvers ignore it
-                fold_inputs.append(
-                    cached.filter(F.col(_PART).isin(grown_cached))
-                    .drop(_PART)
-                    .withColumn(GEN_COL, F.lit(c["version"]))
-                )
-            if inc_paths:
-                fold_inputs.append(
-                    spark.read.schema(self._data_schema()).parquet(
-                        *[os.path.join(self.path, rel) for rel in inc_paths]
-                    )
-                )
-            if fold_inputs:
-                fold = fold_inputs[0]
-                for extra in fold_inputs[1:]:
-                    fold = fold.unionByName(extra)
-                parts.append(self._resolve(fold))
-            if not parts:
-                snap = self._empty(spark)
-            else:
-                snap = parts[0].select(*out_cols)
-                for extra in parts[1:]:
-                    snap = snap.unionByName(extra.select(*out_cols))
-
-        materialized = (
-            snap.select(*out_cols)
-            .withColumn(_PART, self._part_of())
-            .localCheckpoint(eager=True)
-        )
-        # free the superseded checkpoint's executor storage NOW: eager
-        # localCheckpoint means `materialized` no longer references the
-        # old snapshot's blocks, and waiting on GC + ContextCleaner lets
-        # stale snapshots pile up on a long-lived driver. NOTE
-        # DataFrame.unpersist() does NOT release localCheckpoint blocks
-        # (it only uncaches catalog-cached queries) — the persisted RDD
-        # under the checkpoint's LogicalRDD must be unpersisted directly.
-        if c is not None and c["df"] is not materialized:
-            _unpersist_local_checkpoint(c["df"])
-        self._cache = {
-            "version": v,
-            "df": materialized,
-            "buckets": buckets,
-            "session": spark,
-        }
-        return materialized.drop(_PART)
 
     def approx_size_bytes(self) -> int:
         """Total bytes of the current snapshot's live data files, from the
@@ -491,78 +314,6 @@ class HashPartitionedStateStore:
             # physical write volume this merge: the delta itself plus any
             # amortized compaction — O(|delta|) steady-state, NOT O(|state|)
             "rows_rewritten": rows_appended + rows_compacted,
-        }
-        self._publish(manifest, batch_id, stats=stats)
-        return v
-
-    # -- copy-on-write write path ----------------------------------------------
-
-    def merge(
-        self,
-        delta: DataFrame,
-        merge_fn: Callable[[DataFrame, DataFrame], DataFrame],
-        batch_id: Optional[int] = None,
-    ) -> int:
-        """Copy-on-write merge of ``delta`` via ``merge_fn(current_dirty,
-        delta)``. ``merge_fn`` receives ONLY the dirty buckets' current
-        (resolved) rows plus the delta, and must return the replacement
-        rows for those buckets' keys. Untouched buckets keep their
-        existing files. Idempotent per ``batch_id``. Prefer
-        :meth:`merge_append` when deltas are dense and the merge logic is
-        associative — this path's cost is O(|delta| + |state in dirty
-        buckets|), which degrades to O(|state|) when every bucket is
-        dirty."""
-        if batch_id is not None and self.last_batch_id() == batch_id:
-            return self.current_version()  # replay → already applied
-        spark = delta.sparkSession
-
-        dirty_rows = (
-            delta.select(self._part_of().alias(_PART)).distinct().collect()
-        )
-        old_doc = self._load_manifest(self.current_version())
-        old_manifest = old_doc["buckets"]
-        if not dirty_rows:
-            self.last_merge_stats = {"partitions_rewritten": 0, "rows_rewritten": 0}
-            return self.current_version()
-        dirty = sorted(int(r[_PART]) for r in dirty_rows)
-
-        # compaction: too many live generations → fold everything this merge
-        generations = {rel.split("/", 1)[0] for rels in old_manifest.values() for rel in rels}
-        compact = len(generations) >= self.max_generations
-        if compact:
-            dirty = sorted(set(dirty) | {int(b) for b in old_manifest})
-
-        current_dirty = self._scan(spark, old_manifest, dirty)
-        merged = merge_fn(current_dirty, delta)
-
-        v = self.current_version() + 1
-        gen_dir = f"d{v}"
-        (
-            merged.withColumn(GEN_COL, F.lit(v))
-            .withColumn(_PART, self._part_of())
-            .repartition(min(len(dirty), 32), F.col(_PART))
-            .write.partitionBy(_PART)
-            .mode("overwrite")
-            .parquet(os.path.join(self.path, gen_dir))
-        )
-
-        manifest = {b: list(rels) for b, rels in old_manifest.items()}
-        stats = dict(old_doc["stats"])
-        rows_rewritten = 0
-        written = set()
-        for d in glob.glob(os.path.join(self.path, gen_dir, f"{_PART}=*")):
-            b = int(d.rsplit("=", 1)[1])
-            written.add(b)
-            rel = f"{gen_dir}/{_PART}={b}"
-            manifest[str(b)] = [rel]
-            stats[rel] = _dir_stats(d)
-            rows_rewritten += stats[rel][0]
-        for b in dirty:
-            if b not in written:  # bucket emptied by the merge
-                manifest.pop(str(b), None)
-        self.last_merge_stats = {
-            "partitions_rewritten": len(dirty),
-            "rows_rewritten": rows_rewritten,
         }
         self._publish(manifest, batch_id, stats=stats)
         return v

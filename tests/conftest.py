@@ -46,3 +46,20 @@ def golden_check(request):
 def spark():
     s = get_spark(cores=4, app_name="osprey_spark_tests", shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture
+def rocksdb(spark):
+    """Run under the RocksDB state store provider, which
+    ``transformWithStateInPandas`` requires; the previous provider is
+    restored afterwards."""
+    key = "spark.sql.streaming.stateStore.providerClass"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(
+        key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )
+    yield spark
+    if prev is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, prev)

@@ -75,3 +75,77 @@ def _assert_value_eq(got: Any, exp: Any, label: str) -> None:
         assert list(got or []) == exp, f"{label}: {got} != {exp}"
     else:
         assert got == exp, f"{label}: {got!r} != {exp!r}"
+
+
+# -- in-memory stand-in for transformWithStateInPandas state ------------------
+
+
+class FakeValueState:
+    def __init__(self):
+        self.value = None
+
+    def exists(self):
+        return self.value is not None
+
+    def get(self):
+        return self.value
+
+    def update(self, v):
+        self.value = tuple(v)
+
+
+class FakeListState:
+    def __init__(self):
+        self.items = []
+
+    def get(self):
+        return iter(list(self.items))
+
+    def appendList(self, items):
+        self.items.extend(tuple(i) for i in items)
+
+    def clear(self):
+        self.items = []
+
+
+class FakeHandle:
+    """The part of ``StatefulProcessorHandle`` the stateful operators use
+    (named value/list state, event-time timers), in memory — so a
+    processor's fold runs without Spark."""
+
+    def __init__(self):
+        self.states = {}
+        self.timers = set()
+
+    def getValueState(self, name, schema):
+        return self.states.setdefault(name, FakeValueState())
+
+    def getListState(self, name, schema):
+        return self.states.setdefault(name, FakeListState())
+
+    def listTimers(self):
+        return iter(sorted(self.timers))
+
+    def registerTimer(self, ms):
+        self.timers.add(ms)
+
+    def deleteTimer(self, ms):
+        self.timers.discard(ms)
+
+
+class FakeTimerValues:
+    def __init__(self, watermark_ms: int = 0):
+        self.watermark_ms = watermark_ms
+
+    def getCurrentWatermarkInMs(self):
+        return self.watermark_ms
+
+
+def fold_batch(processor, key: tuple, chunks: list, watermark_ms: int = 0):
+    """One micro-batch for one key through ``processor.handleInputRows``;
+    ``chunks`` are that key's Arrow chunks as pandas frames. Returns the
+    concatenated output rows."""
+    import pandas as pd
+
+    out = list(processor.handleInputRows(key, iter(chunks), FakeTimerValues(watermark_ms)))
+    return pd.concat(out, ignore_index=True)

@@ -105,36 +105,12 @@ def test_ngram_uncapped_is_single_pass_at_scale_shape(spark):
 
 
 def test_escalation_sorts_across_chunks():
-    """applyInPandasWithState gives no cross-chunk ordering for a key:
+    """The stateful operator gives no cross-chunk ordering for a key:
     events split out-of-order across chunks in ONE batch must still be
     processed in event-time order (session_start = earliest, escalation
     at the crossing turn)."""
-    from osprey_spark.streaming.escalation_state import _make_escalation_fn
-
-    class FakeState:
-        def __init__(self):
-            self._v = None
-            self.hasTimedOut = False
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-        def remove(self):
-            self._v = None
-
-        def setTimeoutTimestamp(self, ms):
-            pass
-
-        def getCurrentWatermarkMs(self):
-            return 0
+    from osprey_spark.streaming.escalation_tws import _EscalationProcessor
+    from tests.helpers import FakeHandle, fold_batch
 
     def chunk(ts_list, trig_list):
         return pd.DataFrame(
@@ -144,12 +120,10 @@ def test_escalation_sorts_across_chunks():
             }
         )
 
-    fn = _make_escalation_fn(gap_seconds=5.0, min_triggers=2)
-    state = FakeState()
+    proc = _EscalationProcessor(gap_seconds=5.0, min_triggers=2)
+    proc.init(FakeHandle())
     # one micro-batch, two chunks, LATER event in the first chunk
-    out = pd.concat(
-        list(fn(("c",), iter([chunk([3], [True]), chunk([0], [True])]), state))
-    )
+    out = fold_batch(proc, ("c",), [chunk([3], [True]), chunk([0], [True])])
     assert len(out) == 1
     assert out.iloc[0]["session_start"] == pd.Timestamp(2024, 1, 1, 0, 0, 0)
     assert out.iloc[0]["escalated_at"] == pd.Timestamp(2024, 1, 1, 0, 0, 3)

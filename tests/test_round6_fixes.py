@@ -2,15 +2,10 @@
 
 - epoch conversion in the stateful folds is ns-normalized and NaT-safe
   (a us-resolution pandas column was off by 1000x; NaT became INT64_MIN);
-- the snapshot cache unpersists the superseded localCheckpoint on each
-  advance (no executor-storage pile-up on long-lived drivers);
 - the stream-stream join rejects alert columns that would shadow turn
   columns and offers alert_prefix namespacing;
 - dedupe_alerts: the hot-key prefilter for the alert side, batch and
-  streaming;
-- the both-merges path has a folded (one-fewer-job) variant that must
-  produce byte-identical results to the concurrent one, and concurrent
-  failures surface BOTH exceptions.
+  streaming.
 """
 
 import datetime
@@ -48,16 +43,12 @@ def test_cep_fold_skips_nat_rows():
     """A NaT-timestamped turn is treated as not-yet-arrived by the CEP
     fold (skipped at ingestion) instead of entering the state machine
     with a huge negative epoch that would poison `within_seconds`."""
-    from osprey_spark.streaming.cep_state import _make_state_fn
+    from osprey_spark.streaming.cep_tws import _CepProcessor
+    from tests.helpers import FakeHandle, fold_batch
 
-    class FakeState:
-        hasTimedOut = False
-        exists = False
-
-        def update(self, v):
-            self.value = v
-
-    fn = _make_state_fn(n_steps=2, within_seconds=3600)
+    proc = _CepProcessor(n_steps=2, within_seconds=3600)
+    handle = FakeHandle()
+    proc.init(handle)
     pdf = pd.DataFrame(
         {
             "turn_idx": [0, 1, 2],
@@ -65,28 +56,29 @@ def test_cep_fold_skips_nat_rows():
             "mask": [1, 2, 2],
         }
     )
-    st = FakeState()
-    (out,) = list(fn(("c",), iter([pdf]), st))
+    out = fold_batch(proc, ("c",), [pdf])
     # turn 1 (NaT) was skipped -> contiguous consumption stalls at turn 1,
     # no match emitted, turn 2 stays buffered
     assert len(out) == 0
-    step, first_ts, done, next_turn, buf_turn, buf_ts, buf_mask = st.value
+    step, first_ts, done, next_turn = handle.states["prog"].value
     assert next_turn == 1 and not done
-    assert list(buf_turn) == [2]
+    assert [t for t, _, _ in handle.states["buf"].items] == [2]
     assert first_ts == pytest.approx(pd.Timestamp(T0).timestamp())
 
 
-def test_escalation_streaming_ignores_null_ts(spark, tmp_path):
+def test_escalation_streaming_ignores_null_ts(spark, rocksdb, tmp_path):
     """A null-ts row reaching the escalation fold is dropped (dropna)
     rather than folded as an INT64_MIN-epoch turn that would split every
-    session. End-to-end through applyInPandasWithState."""
-    from osprey_spark.streaming.escalation_state import streaming_escalation_sessions
+    session; a conversation whose only row has a null ts keeps no state
+    and emits nothing. End-to-end through transformWithStateInPandas."""
+    from osprey_spark.streaming.escalation_tws import streaming_escalation_sessions_tws
 
     m = datetime.timedelta(minutes=1)
     rows = [
         ("a", 0, "user", "bad", "", T0),
         ("a", 1, "user", "ok", "", None),  # null ts — must not reset the session
         ("a", 2, "user", "bad", "", T0 + m),
+        ("n", 0, "user", "bad", "", None),  # a conversation with no event time
         ("z", 0, "user", "ok", "", T0 + 600 * m),
     ]
     src = str(tmp_path / "src")
@@ -94,7 +86,7 @@ def test_escalation_streaming_ignores_null_ts(spark, tmp_path):
     stream = (
         spark.readStream.schema(TSCHEMA).parquet(src).withWatermark("ts", "10 minutes")
     )
-    out = streaming_escalation_sessions(
+    out = streaming_escalation_sessions_tws(
         stream, trigger=F.col("text") == "bad", gap_seconds=1800, min_triggers=2
     )
     q = (
@@ -106,46 +98,10 @@ def test_escalation_streaming_ignores_null_ts(spark, tmp_path):
         .start()
     )
     q.awaitTermination()
-    got = spark.sql(
-        "SELECT conv_id, n_turns, n_triggers FROM r6_esc_nullts WHERE conv_id='a'"
-    ).collect()
+    got = spark.sql("SELECT conv_id, n_turns, n_triggers FROM r6_esc_nullts").collect()
     # the two 'bad' turns are one session (null-ts row dropped): one alert
     # at the second trigger, having seen exactly the 2 non-null turns
     assert [(r[0], r[1], r[2]) for r in got] == [("a", 2, 2)]
-
-
-# -- snapshot cache unpersist -------------------------------------------------
-
-
-def test_cache_advance_unpersists_superseded_snapshot(spark, tmp_path):
-    from osprey_spark.streaming.state_store import HashPartitionedStateStore
-
-    store = HashPartitionedStateStore(
-        str(tmp_path / "st"),
-        key_cols=["k"],
-        schema="k string, n long",
-        num_partitions=4,
-        resolve_fn=lambda df: df.groupBy("k").agg(F.sum("n").alias("n")),
-        snapshot_cache=True,
-    )
-    sc = spark.sparkContext._jsc.sc()
-
-    def cached_rdd_ids():
-        return {i.id() for i in sc.getRDDStorageInfo() if i.numCachedPartitions() > 0}
-
-    store.merge_append(spark.createDataFrame([("a", 1), ("b", 2)], "k string, n long"), 0)
-    before = cached_rdd_ids()
-    store.read(spark)
-    first_ids = cached_rdd_ids() - before
-    assert first_ids, "first cache advance must materialize checkpoint blocks"
-    first = store._cache["df"]
-    store.merge_append(spark.createDataFrame([("a", 10)], "k string, n long"), 1)
-    out = {r["k"]: r["n"] for r in store.read(spark).collect()}
-    assert out == {"a": 11, "b": 2}
-    assert store._cache["df"] is not first
-    # superseded checkpoint's blocks were released eagerly, not left to
-    # GC + ContextCleaner (DataFrame.unpersist alone would leave them)
-    assert not (first_ids & cached_rdd_ids())
 
 
 # -- stream-stream join column hygiene + dedupe_alerts ------------------------
@@ -267,77 +223,3 @@ def test_dedupe_alerts_streaming_feeds_join(spark, tmp_path):
     # exactly ONE surviving alert matched the turn (20 would have without
     # the prefilter — join fan-out bounded by buckets, not alert volume)
     assert len(rows) == 1 and rows[0]["kind"].startswith("k")
-
-
-# -- merge strategies ---------------------------------------------------------
-
-
-RULES = {
-    "main.sml": """
-ConvId: Entity[str] = EntityJson(type='Conversation', path='$.conv_id')
-Text: str = JsonData(path='$.text')
-Flagged = HasLabel(entity=ConvId, label='flagged')
-Hello = Rule(when_all=[TextContains(text=Text, phrase='hello')], description='d')
-Repeat = Rule(when_all=[Hello, Flagged], description='r')
-WhenRules(rules_any=[Hello], then=[DeclareVerdict(verdict='flag'), LabelAdd(entity=ConvId, label='flagged')])
-WhenRules(rules_any=[Repeat], then=[DeclareVerdict(verdict='repeat')])
-"""
-}
-
-
-def _run_pipeline(spark, workdir, concurrent):
-    from osprey_spark.streaming.pipeline import RuleStreamPipeline
-
-    pipe = RuleStreamPipeline(
-        spark, RULES, workdir, track_verdict_state=True,
-        concurrent_merges=concurrent,
-    )
-    for b in range(3):
-        rows = [
-            (f"c{i}", b, "user", "hello" if i % 2 == 0 else "ok", "",
-             T0 + datetime.timedelta(minutes=b))
-            for i in range(4)
-        ]
-        pipe.process_batch(spark.createDataFrame(rows, TSCHEMA), b)
-    return pipe
-
-
-def test_folded_merges_match_concurrent(spark, tmp_path):
-    """concurrent_merges=False (merge #1 materializes the persist — one
-    fewer fixed job per batch) must be result- and state-identical to the
-    concurrent default."""
-    a = _run_pipeline(spark, str(tmp_path / "conc"), True)
-    b = _run_pipeline(spark, str(tmp_path / "fold"), False)
-    cols = ["conv_id", "turn_idx", "prior_verdict_count", "__verdicts"]
-    ra = sorted(map(tuple, a.results().select(*cols).collect()))
-    rb = sorted(map(tuple, b.results().select(*cols).collect()))
-    assert ra == rb and len(ra) == 12
-    sa = sorted(map(tuple, a.labels.read(spark).collect()))
-    sb = sorted(map(tuple, b.labels.read(spark).collect()))
-    assert sa == sb and len(sa) > 0
-
-
-def test_concurrent_merge_surfaces_both_failures(spark, tmp_path):
-    """If the label AND verdict merges both raise inside the concurrent
-    window, the propagated exception must carry the second failure as a
-    note instead of silently dropping it."""
-    from osprey_spark.streaming.pipeline import RuleStreamPipeline
-
-    pipe = RuleStreamPipeline(
-        spark, RULES, str(tmp_path / "p"), track_verdict_state=True
-    )
-
-    def boom_labels(mutations, batch_id=None, **kw):
-        raise RuntimeError("label-side failure")
-
-    def boom_verdicts(out, bid):
-        raise RuntimeError("verdict-side failure")
-
-    pipe.labels.apply_mutations = boom_labels
-    pipe._update_verdict_state = boom_verdicts
-    rows = [("c0", 0, "user", "hello", "", T0)]
-    with pytest.raises(RuntimeError) as ei:
-        pipe.process_batch(spark.createDataFrame(rows, TSCHEMA), 0)
-    notes = getattr(ei.value, "__notes__", [])
-    combined = str(ei.value) + " ".join(notes)
-    assert "label-side failure" in combined and "verdict-side failure" in combined

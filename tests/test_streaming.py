@@ -147,8 +147,8 @@ def test_label_state_merge_semantics(spark, workdir):
     assert out == {"u3": True, "u9": False}
 
 
-def test_streaming_cep(spark, workdir):
-    from osprey_spark.streaming.cep_state import streaming_match_sequence
+def test_streaming_cep(spark, rocksdb, workdir):
+    from osprey_spark.streaming.cep_tws import streaming_match_sequence_tws
 
     input_dir = os.path.join(workdir, "cep_in")
     rows = [
@@ -166,7 +166,7 @@ def test_streaming_cep(spark, workdir):
         spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(input_dir)
     )
     steps = [F.col("tool") == s for s in ("search", "code_exec", "send_email")]
-    matched = streaming_match_sequence(stream, steps)
+    matched = streaming_match_sequence_tws(stream, steps)
     q = (
         matched.writeStream.outputMode("append")
         .format("memory")
@@ -245,26 +245,8 @@ def test_cep_state_fn_out_of_order():
     before turns 0/1 (across separate micro-batches) and still match."""
     import pandas as pd
 
-    from osprey_spark.streaming.cep_state import _make_state_fn
-
-    class FakeState:
-        def __init__(self):
-            self._v = None
-            self.hasTimedOut = False
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-        def remove(self):
-            self._v = None
+    from osprey_spark.streaming.cep_tws import _CepProcessor
+    from tests.helpers import FakeHandle, fold_batch
 
     def batch(rows):
         return pd.DataFrame(
@@ -275,16 +257,16 @@ def test_cep_state_fn_out_of_order():
             }
         )
 
-    fn = _make_state_fn(3, None)
-    state = FakeState()
+    proc = _CepProcessor(3, None)
+    proc.init(FakeHandle())
     # batch 1: turn 2 (send_email step bit 2) arrives FIRST
-    out1 = pd.concat(list(fn(("a",), iter([batch([(2, 0b100)])]), state)))
+    out1 = fold_batch(proc, ("a",), [batch([(2, 0b100)])])
     assert out1.empty
     # batch 2: turns 0 (search) and 1 (code_exec) arrive late
-    out2 = pd.concat(list(fn(("a",), iter([batch([(0, 0b001), (1, 0b010)])]), state)))
+    out2 = fold_batch(proc, ("a",), [batch([(0, 0b001), (1, 0b010)])])
     assert len(out2) == 1 and out2.iloc[0]["matched_at_turn"] == 2
     # replays of already-consumed turns are ignored
-    out3 = pd.concat(list(fn(("a",), iter([batch([(1, 0b010)])]), state)))
+    out3 = fold_batch(proc, ("a",), [batch([(1, 0b010)])])
     assert out3.empty
 
 

@@ -1,10 +1,10 @@
 """Incremental state maintenance + commit-protocol durability tests.
 
 Round-2 additions: per-batch state merges must be O(|delta|), not
-O(|state|) (hash-partitioned dirty-bucket rewrite); label/verdict state
-applies BEFORE the sink's commit marker so a crash between them can
-never lose a batch's mutations; HasLabel-dependent label rules resolve
-against the evaluated frame."""
+O(|state|) (hash-partitioned merge-on-read delta appends); label/verdict
+state applies BEFORE the sink's commit marker so a crash between them
+can never lose a batch's mutations; HasLabel-dependent label rules
+resolve against the evaluated frame."""
 
 import datetime
 import os
@@ -102,32 +102,6 @@ def test_merge_idempotent_per_batch(spark, tmp_path):
     assert store.read(spark, before_batch=1).count() == 5
 
 
-def test_store_compaction_bounds_generations(spark, tmp_path):
-    store = HashPartitionedStateStore(
-        str(tmp_path / "s"),
-        key_cols=["k"],
-        schema="k string, v long",
-        num_partitions=8,
-        max_generations=4,
-    )
-
-    def merge_fn(current, delta):
-        return (
-            current.join(delta.withColumnRenamed("v", "_nv"), on="k", how="full_outer")
-            .select("k", F.coalesce(F.col("_nv"), F.col("v")).alias("v"))
-        )
-
-    for b in range(12):
-        delta = spark.createDataFrame([(f"k{b}", b)], "k string, v long")
-        store.merge(delta, merge_fn, batch_id=b)
-    assert store.read(spark).count() == 12
-    manifest = store._manifest(store.current_version())
-    gens = {
-        rel.split("/", 1)[0] for rels in manifest.values() for rel in rels
-    }
-    assert len(gens) <= 4  # compaction folded old generations
-
-
 RULES_HASLABEL_MUTATION = {
     "main.sml": """
 ConvId: Entity[str] = EntityJson(type='Conversation', path='$.conv_id')
@@ -215,61 +189,42 @@ def test_sample_rate_feature(spark, tmp_path):
     assert res.filter("conv_id = 'b'").count() == 50
 
 
-def test_streaming_escalation_sessions(spark, tmp_path):
+def test_streaming_escalation_sessions():
     """Streaming escalation: the alert fires the moment a session's
     trigger count crosses the threshold (cross-batch state), once per
-    session; a later session in the same conversation can fire again."""
-    from pyspark.sql import functions as F
+    session; a later session in the same conversation can fire again.
+    Each key keeps exactly one eviction timer, at last event + gap."""
+    import pandas as pd
 
-    from osprey_spark.streaming.escalation_state import streaming_escalation_sessions
+    from osprey_spark.streaming.escalation_tws import _EscalationProcessor
+    from tests.helpers import FakeHandle, fold_batch
 
-    input_dir = str(tmp_path / "esc_in")
-    t = T0
-    m = datetime.timedelta(minutes=1)
-    # batch 1: conv a gets one error; conv b stays clean
-    rows1 = [
-        ("a", 0, "user", "x", "", t),
-        ("a", 1, "user", "err", "error", t + m),
-        ("b", 0, "user", "x", "", t),
-    ]
-    # batch 2: conv a's second error (same session) → escalation fires;
-    # plus a NEW session (2h later) that escalates independently
-    rows2 = [
-        ("a", 2, "user", "err", "error", t + 2 * m),
-        ("a", 3, "user", "err", "error", t + datetime.timedelta(hours=2)),
-        ("a", 4, "user", "err", "error", t + datetime.timedelta(hours=2) + m),
-    ]
-    spark.createDataFrame(rows1, TSCHEMA).coalesce(1).write.parquet(input_dir)
-    spark.createDataFrame(rows2, TSCHEMA).coalesce(1).write.mode("append").parquet(input_dir)
+    t = pd.Timestamp(T0)
+    m = pd.Timedelta(minutes=1)
+    h = pd.Timedelta(hours=2)
 
-    stream = (
-        spark.readStream.schema(TSCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(input_dir)
-        .withWatermark("ts", "10 minutes")
+    def batch(rows):
+        return pd.DataFrame({"ts": [r[0] for r in rows], "is_trigger": [r[1] for r in rows]})
+
+    proc = _EscalationProcessor(gap_seconds=1800, min_triggers=2)
+    handle = FakeHandle()
+    proc.init(handle)
+    # batch 1: one error
+    assert fold_batch(proc, ("a",), [batch([(t, False), (t + m, True)])]).empty
+    # batch 2: the second error (same session) fires; then a NEW session
+    # two hours later escalates independently
+    got = fold_batch(
+        proc, ("a",), [batch([(t + 2 * m, True), (t + h, True), (t + h + m, True)])]
     )
-    out = streaming_escalation_sessions(
-        stream, trigger=F.col("tool") == "error", gap_seconds=1800, min_triggers=2
-    )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("esc_out")
-        .option("checkpointLocation", str(tmp_path / "esc_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = sorted(
-        spark.sql("SELECT * FROM esc_out").collect(), key=lambda r: r["escalated_at"]
-    )
-    assert [(r["conv_id"], r["n_triggers"]) for r in got] == [("a", 2), ("a", 2)]
+    assert list(got["n_triggers"]) == [2, 2]
     # first escalation: session started at t, fired at the 2nd error
-    assert got[0]["session_start"] == t
-    assert got[0]["escalated_at"] == t + 2 * m
-    assert got[0]["n_turns"] == 3
+    assert got.iloc[0]["session_start"] == t
+    assert got.iloc[0]["escalated_at"] == t + 2 * m
+    assert got.iloc[0]["n_turns"] == 3
     # second escalation belongs to the NEW session two hours later
-    assert got[1]["session_start"] == t + datetime.timedelta(hours=2)
+    assert got.iloc[1]["session_start"] == t + h
+    last_ms = int((t + h + m).timestamp() * 1000)
+    assert handle.timers == {last_ms + 1800 * 1000}
 
 
 def test_snapshot_expiry(spark, tmp_path):
@@ -290,12 +245,12 @@ def test_snapshot_expiry(spark, tmp_path):
     assert store.read(spark, before_batch=7).count() == 35
 
 
-def test_streaming_escalation_with_candidate_prefilter(spark, tmp_path):
+def test_streaming_escalation_with_candidate_prefilter(spark, rocksdb, tmp_path):
     """The candidates semi-join (group-count bound for dense inputs) must
     leave the output IDENTICAL to the unfiltered operator when the set
     over-approximates convs-with-triggers — a candidate conversation
     keeps all its turns, a non-candidate one can never escalate."""
-    from osprey_spark.streaming.escalation_state import streaming_escalation_sessions
+    from osprey_spark.streaming.escalation_tws import streaming_escalation_sessions_tws
 
     input_dir = str(tmp_path / "esc_in")
     t = T0
@@ -328,7 +283,7 @@ def test_streaming_escalation_with_candidate_prefilter(spark, tmp_path):
         .parquet(input_dir)
         .withWatermark("ts", "10 minutes")
     )
-    out = streaming_escalation_sessions(
+    out = streaming_escalation_sessions_tws(
         stream,
         trigger=F.col("tool") == "error",
         gap_seconds=1800,
@@ -347,7 +302,7 @@ def test_streaming_escalation_with_candidate_prefilter(spark, tmp_path):
     got = sorted(
         spark.sql("SELECT * FROM esc_pref_out").collect(), key=lambda r: r["escalated_at"]
     )
-    # identical to test_streaming_escalation_sessions' expected output
+    # identical to test_tws_escalation_matches_apply_in_pandas' output
     assert [(r["conv_id"], r["n_triggers"]) for r in got] == [("a", 2), ("a", 2)]
     assert got[0]["session_start"] == t
     assert got[0]["escalated_at"] == t + 2 * m
@@ -355,11 +310,10 @@ def test_streaming_escalation_with_candidate_prefilter(spark, tmp_path):
     assert got[1]["session_start"] == t + datetime.timedelta(hours=2)
 
 
-def test_tws_escalation_matches_apply_in_pandas(spark, tmp_path):
-    """The transformWithStateInPandas implementation (Spark 4 arbitrary
-    state API, RocksDB provider) must produce rows identical to the
-    applyInPandasWithState operator on the same input — same sessions,
-    same crossing-turn emission, same new-session split."""
+def test_tws_escalation_matches_apply_in_pandas(spark, rocksdb, tmp_path):
+    """End to end through transformWithStateInPandas on the RocksDB
+    provider: cross-batch sessions, emission at the crossing turn, once
+    per session, and a new session after the gap."""
     from osprey_spark.streaming.escalation_tws import streaming_escalation_sessions_tws
 
     input_dir = str(tmp_path / "esc_in")
@@ -378,39 +332,27 @@ def test_tws_escalation_matches_apply_in_pandas(spark, tmp_path):
     spark.createDataFrame(rows1, TSCHEMA).coalesce(1).write.parquet(input_dir)
     spark.createDataFrame(rows2, TSCHEMA).coalesce(1).write.mode("append").parquet(input_dir)
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    stream = (
+        spark.readStream.schema(TSCHEMA)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(input_dir)
+        .withWatermark("ts", "10 minutes")
     )
-    try:
-        stream = (
-            spark.readStream.schema(TSCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(input_dir)
-            .withWatermark("ts", "10 minutes")
-        )
-        out = streaming_escalation_sessions_tws(
-            stream, trigger=F.col("tool") == "error", gap_seconds=1800, min_triggers=2
-        )
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("esc_tws_out")
-            .option("checkpointLocation", str(tmp_path / "esc_tws_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    out = streaming_escalation_sessions_tws(
+        stream, trigger=F.col("tool") == "error", gap_seconds=1800, min_triggers=2
+    )
+    q = (
+        out.writeStream.outputMode("append")
+        .format("memory")
+        .queryName("esc_tws_out")
+        .option("checkpointLocation", str(tmp_path / "esc_tws_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     got = sorted(
         spark.sql("SELECT * FROM esc_tws_out").collect(), key=lambda r: r["escalated_at"]
     )
-    # identical to the applyInPandasWithState expectations
     assert [(r["conv_id"], r["n_triggers"]) for r in got] == [("a", 2), ("a", 2)]
     assert got[0]["session_start"] == t
     assert got[0]["escalated_at"] == t + 2 * m
@@ -455,7 +397,7 @@ def test_pipeline_periodic_snapshot_expiry(spark, tmp_path):
     assert {r["label_name"] for r in rows} == {"flagged", "escalated"}
 
 
-def test_tws_bootstrap_continues_history_sessions(spark, tmp_path):
+def test_tws_bootstrap_continues_history_sessions(spark, rocksdb, tmp_path):
     """Redeploy-without-replay: seed the TWS escalation operator with
     escalation_bootstrap_state built from history. A conversation with
     one trigger in HISTORY must escalate on its FIRST streamed trigger,
@@ -496,38 +438,27 @@ def test_tws_bootstrap_continues_history_sessions(spark, tmp_path):
         TSCHEMA,
     ).coalesce(1).write.parquet(input_dir)
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    stream = (
+        spark.readStream.schema(TSCHEMA)
+        .parquet(input_dir)
+        .withWatermark("ts", "10 minutes")
     )
-    try:
-        stream = (
-            spark.readStream.schema(TSCHEMA)
-            .parquet(input_dir)
-            .withWatermark("ts", "10 minutes")
-        )
-        out = streaming_escalation_sessions_tws(
-            stream,
-            trigger=F.col("tool") == "error",
-            gap_seconds=1800,
-            min_triggers=2,
-            initial_state=boot,
-        )
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("esc_boot_out")
-            .option("checkpointLocation", str(tmp_path / "boot_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    out = streaming_escalation_sessions_tws(
+        stream,
+        trigger=F.col("tool") == "error",
+        gap_seconds=1800,
+        min_triggers=2,
+        initial_state=boot,
+    )
+    q = (
+        out.writeStream.outputMode("append")
+        .format("memory")
+        .queryName("esc_boot_out")
+        .option("checkpointLocation", str(tmp_path / "boot_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     got = {r["conv_id"]: r for r in spark.sql("SELECT * FROM esc_boot_out").collect()}
     # conv a: the streamed trigger is its session's SECOND → escalates,
     # with history's session_start and all 3 turns counted
@@ -561,11 +492,10 @@ def test_sum_resolver_survives_compaction(spark, tmp_path):
         assert got == {"a": 6, "b": 33}  # 10+1+10+1+10+1
 
 
-def test_tws_cep_matches_apply_in_pandas(spark, tmp_path):
-    """The transformWithStateInPandas CEP (ListState out-of-order buffer)
-    must produce rows identical to the applyInPandasWithState operator:
-    same cross-batch completion, same out-of-order independence, same
-    never-completing conversation staying silent."""
+def test_tws_cep_matches_apply_in_pandas(spark, rocksdb, tmp_path):
+    """End to end through the transformWithStateInPandas CEP (ListState
+    out-of-order buffer): cross-batch completion, out-of-order
+    independence, and a never-completing conversation staying silent."""
     from osprey_spark.streaming.cep_tws import streaming_match_sequence_tws
 
     input_dir = str(tmp_path / "cep_in")
@@ -580,41 +510,30 @@ def test_tws_cep_matches_apply_in_pandas(spark, tmp_path):
     spark.createDataFrame(rows[:2], TSCHEMA).coalesce(1).write.parquet(input_dir)
     spark.createDataFrame(rows[2:], TSCHEMA).coalesce(1).write.mode("append").parquet(input_dir)
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    stream = (
+        spark.readStream.schema(TSCHEMA)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(input_dir)
     )
-    try:
-        stream = (
-            spark.readStream.schema(TSCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(input_dir)
-        )
-        steps = [F.col("tool") == s for s in ("search", "code_exec", "send_email")]
-        matched = streaming_match_sequence_tws(stream, steps)
-        q = (
-            matched.writeStream.outputMode("append")
-            .format("memory")
-            .queryName("cep_tws_out")
-            .option("checkpointLocation", str(tmp_path / "cep_tws_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    steps = [F.col("tool") == s for s in ("search", "code_exec", "send_email")]
+    matched = streaming_match_sequence_tws(stream, steps)
+    q = (
+        matched.writeStream.outputMode("append")
+        .format("memory")
+        .queryName("cep_tws_out")
+        .option("checkpointLocation", str(tmp_path / "cep_tws_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     got = spark.sql("SELECT * FROM cep_tws_out").collect()
     assert len(got) == 1
     assert got[0]["conv_id"] == "a" and got[0]["matched_at_turn"] == 2
     assert got[0]["matched_at_ts"] == datetime.datetime(2024, 1, 1, 0, 0, 20)
 
 
-def test_tws_crash_between_batches_resumes_exactly_once(spark, tmp_path):
-    """Kill/resume proof for the transformWithStateInPandas twin's
+def test_tws_crash_between_batches_resumes_exactly_once(spark, rocksdb, tmp_path):
+    """Kill/resume proof for the transformWithStateInPandas operator's
     RocksDB changelog checkpoint (round-5 item): crash the query between
     micro-batches, restart from the same checkpoint, and the final output
     must equal an uninterrupted run — no re-alert for a session that
@@ -680,11 +599,6 @@ def test_tws_crash_between_batches_resumes_exactly_once(spark, tmp_path):
         start().awaitTermination()  # (re)start from the same checkpoint
         return [r for _, rows in captured for r in rows]
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
     # incremental changelog per commit instead of full RocksDB snapshots —
     # the configuration a long-lived stream runs with; resume must replay it
     spark.conf.set(
@@ -697,10 +611,6 @@ def test_tws_crash_between_batches_resumes_exactly_once(spark, tmp_path):
         spark.conf.unset(
             "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
         )
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
 
     assert sorted(crashed) == sorted(control)
     alerts = {r[0]: r for r in crashed}

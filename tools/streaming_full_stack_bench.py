@@ -1,9 +1,9 @@
 """Sustained streaming throughput with the FULL stateful stack enabled
 in one run: compiled rule plan + HasLabel state reads + label-state
 MERGEs + cross-turn verdict tracking + exactly-once sink, with the
-stateful escalation-sessions operator (applyInPandasWithState) running
-concurrently over the same stream — the complete north-star pipeline,
-not the compute kernel.
+stateful escalation-sessions operator (transformWithStateInPandas on the
+RocksDB state provider) running concurrently over the same stream — the
+complete north-star pipeline, not the compute kernel.
 
 Reports sustained turns/sec (first batch excluded — JVM/codegen warmup
 amortizes to zero on a long-lived stream) and the per-batch label-merge
@@ -61,7 +61,7 @@ sys.path.insert(0, {repo!r})
 from pyspark.sql import functions as F
 from osprey_spark.session import get_spark
 from osprey_spark.streaming.pipeline import RuleStreamPipeline
-from osprey_spark.streaming.escalation_state import streaming_escalation_sessions
+from osprey_spark.streaming.escalation_tws import streaming_escalation_sessions_tws
 
 RULES = {rules!r}
 cores = int(sys.argv[1])
@@ -76,12 +76,7 @@ pipe = RuleStreamPipeline(
     spark, RULES, wd,
     track_verdict_state=_os0.environ.get("FULL_STACK_VERDICT", "1") != "0",
     salt_buckets=0 if _os0.environ.get("FULL_STACK_SALT", "1") == "0" else cores,
-    snapshot_cache=_os0.environ.get("FULL_STACK_SNAPSHOT_CACHE", "0") == "1",
     label_max_delta_files=int(_os0.environ.get("FULL_STACK_LABEL_MAX_DELTA", "8")),
-    # FULL_STACK_MERGES=folded serializes the label+verdict merges so
-    # merge #1's first action materializes the persist (one fewer fixed
-    # job per batch); default is the concurrent overlap
-    concurrent_merges=_os0.environ.get("FULL_STACK_MERGES", "concurrent") != "folded",
 )
 
 def _labels_disk():
@@ -133,7 +128,7 @@ if _os.environ.get("FULL_STACK_ESC", "1") != "0":
     # unfiltered baseline): the cheap JVM-side index of convs with >= 1
     # trigger turn, semi-joined before the stateful operator so Python
     # group dispatch is bounded by trigger density, not conv density.
-    # Exactness contract documented on streaming_escalation_sessions.
+    # Exactness contract documented on streaming_escalation_sessions_tws.
     cand = None
     if _os.environ.get("FULL_STACK_ESC_PREFILTER", "1") != "0":
         cand = (
@@ -141,31 +136,22 @@ if _os.environ.get("FULL_STACK_ESC", "1") != "0":
             .filter(F.col("text").contains("hello"))
             .select("conv_id").distinct()
         )
-    # FULL_STACK_ESC_IMPL=tws runs the transformWithStateInPandas twin
-    # (RocksDB state provider) instead of applyInPandasWithState
-    if _os.environ.get("FULL_STACK_ESC_IMPL", "apply") == "tws":
-        from osprey_spark.streaming.escalation_tws import streaming_escalation_sessions_tws
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        # incremental checkpointing: each batch uploads its CHANGELOG
-        # (the delta) instead of a full snapshot — the configuration a
-        # long-lived 10^12-turn stream runs with; also what makes
-        # per-batch changelog growth measurable below
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            "true",
-        )
-        esc = streaming_escalation_sessions_tws(
-            esc_in, trigger=F.col("text").contains("hello"), gap_seconds=1800.0,
-            min_triggers=2, candidates=cand,
-        )
-    else:
-        esc = streaming_escalation_sessions(
-            esc_in, trigger=F.col("text").contains("hello"), gap_seconds=1800.0,
-            min_triggers=2, candidates=cand,
-        )
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
+    # incremental checkpointing: each batch uploads its CHANGELOG
+    # (the delta) instead of a full snapshot — the configuration a
+    # long-lived 10^12-turn stream runs with; also what makes
+    # per-batch changelog growth measurable below
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+        "true",
+    )
+    esc = streaming_escalation_sessions_tws(
+        esc_in, trigger=F.col("text").contains("hello"), gap_seconds=1800.0,
+        min_triggers=2, candidates=cand,
+    )
     join_on = _os.environ.get("FULL_STACK_JOIN", "0") == "1"
     if join_on:
         # the escalation query's alerts land in parquet so they can feed
@@ -380,21 +366,13 @@ def main() -> None:
         for m in ms
     )
     # stamp the actual configuration into the section header so appended
-    # runs stay self-describing (round-4 nit: a TWS run carried the
-    # applyInPandasWithState boilerplate caption)
-    esc_on = os.environ.get("FULL_STACK_ESC", "1") != "0"
-    esc_impl = (
-        "transformWithStateInPandas twin, RocksDB state provider"
-        if os.environ.get("FULL_STACK_ESC_IMPL", "apply") == "tws"
-        else "applyInPandasWithState"
-    )
+    # runs stay self-describing
     esc_part = (
-        f", with streaming escalation sessions ({esc_impl}) running concurrently "
-        "on the same input"
-        if esc_on
+        ", with streaming escalation sessions (transformWithStateInPandas, "
+        "RocksDB state provider) running concurrently on the same input"
+        if os.environ.get("FULL_STACK_ESC", "1") != "0"
         else " (escalation query OFF for this run)"
     )
-    esc_part += f" [FULL_STACK_MERGES={os.environ.get('FULL_STACK_MERGES', 'concurrent')}]"
     with open(os.path.join(REPO, "BENCH.md"), "a") as f:  # append-only
         f.write(
             "\n## Full-stack streaming run (tools/streaming_full_stack_bench.py)\n\n"
@@ -440,7 +418,7 @@ def main() -> None:
         if es:
             f.write(
                 "\nEscalation state-store metrics (FULL_STACK_ESC_METRICS=1; "
-                "RocksDB custom metrics populated under FULL_STACK_ESC_IMPL=tws):\n\n"
+                "RocksDB custom metrics):\n\n"
                 "| batch | state rows | rows updated | sst MB | state mem MB |\n"
                 "|---|---|---|---|---|\n"
                 + "\n".join(

@@ -20,7 +20,11 @@ NORMALIZATION factor and honesty check, not a discard gate.
 
 Usage: python tools/streaming_scaling_paired.py [n_small] [n_large] [n_convs]
 Env: FULL_STACK_MAX_FILES (default 8 -> 8 batches over the 64-file input),
-     plus every FULL_STACK_* knob of streaming_full_stack_bench.py.
+     plus the other FULL_STACK_* knobs of streaming_full_stack_bench.py:
+     FULL_STACK_INPUT, FULL_STACK_VERDICT, FULL_STACK_SALT,
+     FULL_STACK_LABEL_MAX_DELTA, FULL_STACK_ESC, FULL_STACK_ESC_MAX_FILES,
+     FULL_STACK_ESC_PREFILTER, FULL_STACK_ESC_METRICS, FULL_STACK_JOIN,
+     FULL_STACK_JOIN_MAX_FILES, FULL_STACK_JOIN_RAMP, FULL_STACK_JOIN_DEDUPE.
 Prints a JSON summary; BENCH.md reporting is written by the operator
 with the run context.
 """
