@@ -573,16 +573,21 @@ class CompiledRuleset:
         for ce in self.custom_effects:
             by_name.setdefault(ce.feature_name, []).append(ce)
         for name, entries in by_name.items():
-            # slice(array(v), 1, 0) is an empty array of v's type without
-            # needing the type spelled out; codegen-friendly (see the
-            # concat note above verdicts_col)
+            # slice(array(when(false, v)), 1, 0) is an empty array of v's
+            # type without needing the type spelled out, and it never
+            # evaluates v — under ANSI mode a value that only fails on
+            # rows where the effect did not fire (e.g. a cast) must not
+            # raise; codegen-friendly (see the concat note above
+            # verdicts_col)
             # the isNotNull guard preserves the old filter() semantics: a
             # fired effect whose value expression failed (null) is dropped
             arr = F.concat(
                 *[
                     F.when(
                         e.cond & e.value_col.isNotNull(), F.array(e.value_col)
-                    ).otherwise(F.slice(F.array(e.value_col), 1, 0))
+                    ).otherwise(
+                        F.slice(F.array(F.when(F.lit(False), e.value_col)), 1, 0)
+                    )
                     for e in entries
                 ]
             )

@@ -1,5 +1,5 @@
 """Entity label state — the reference's labels service re-expressed as a
-hash-partitioned incremental MERGE table.
+versioned incremental MERGE table.
 
 Conflict rules (worker/lib/osprey_shared/labels.py:28-95,
 worker/lib/storage/labels.py):
@@ -18,14 +18,16 @@ worker/lib/storage/labels.py):
   LabelOutputSink does.
 
 Storage: ``HashPartitionedStateStore`` in merge-on-read mode — a batch
-APPENDS only its per-key mutation winners as delta files (O(|delta|)
-writes, no read of current state), and readers resolve base+deltas with
-:func:`label_resolver`. The round-2/3 copy-on-write path rewrote every
-dirty bucket's full resident set; with a dense delta (every bucket
-dirty) that is an O(|state|) rewrite per batch — the round-3 full-stack
-run measured the flagged-set rewrite growing 15.5k→47.9k rows/batch.
-MOR keeps the per-batch write at the delta size with lazy per-bucket
-compaction bounding read amplification. Readers see state *as of the
+APPENDS only its per-key mutation winners as one generation directory
+(O(|delta|) writes, no read of current state), and readers resolve
+base+deltas with :func:`label_resolver`. The round-2/3 copy-on-write
+path rewrote every dirty bucket's full resident set; with a dense delta
+(every bucket dirty) that is an O(|state|) rewrite per batch — the
+round-3 full-stack run measured the flagged-set rewrite growing
+15.5k→47.9k rows/batch. MOR keeps the per-batch write at the delta size;
+once the live generations exceed ``max_delta_files`` a merge folds them
+all into one base (per-store compaction), bounding read amplification
+at ``max_delta_files + 1`` directories. Readers see state *as of the
 previous batch* — within one micro-batch, HasLabel joins never observe
 same-batch writes, matching the reference's ordering (effects apply
 after execution, output_sink.py:186-211).
@@ -92,14 +94,12 @@ class LabelStateStore:
     def __init__(
         self,
         path: str,
-        num_partitions: int = 64,
         max_delta_files: int = 8,
     ):
         self.store = HashPartitionedStateStore(
             path,
             key_cols=KEY,
             schema=STATE_SCHEMA,
-            num_partitions=num_partitions,
             max_delta_files=max_delta_files,
             resolve_fn=label_resolver,
         )

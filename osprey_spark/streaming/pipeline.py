@@ -114,10 +114,11 @@ class RuleStreamPipeline:
         self.maintenance_every = maintenance_every
         self.keep_versions = keep_versions
         self.sink = IdempotentParquetSink(os.path.join(workdir, "results"))
-        # label_max_delta_files bounds MOR read amplification per bucket
-        # (lazy compaction past it); together with snapshot expiry it also
-        # bounds DISK: delta generations stay live until compaction folds
-        # them, after which expiry reclaims the superseded files
+        # label_max_delta_files bounds MOR read amplification: each merge
+        # appends one generation directory, and once the live ones exceed
+        # it the store folds them all into one base; together with
+        # snapshot expiry it also bounds DISK: delta generations stay live
+        # until compaction folds them, after which expiry reclaims them
         self.labels = LabelStateStore(
             os.path.join(workdir, "labels"),
             max_delta_files=label_max_delta_files,
@@ -125,8 +126,8 @@ class RuleStreamPipeline:
         self.checkpoint = os.path.join(workdir, "checkpoint")
         # verdict counts are additive, so merge-on-read resolution is a
         # plain SUM over base+delta rows — each batch appends only its
-        # per-conv increments (O(|delta|)); lazy compaction folds a
-        # bucket once its delta-file count passes the threshold
+        # per-conv increments (O(|delta|)); lazy compaction folds the
+        # store once its live generation count passes the threshold
         self.verdict_state = HashPartitionedStateStore(
             os.path.join(workdir, "verdict_state"),
             key_cols=[key_col],

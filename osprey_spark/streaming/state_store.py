@@ -1,4 +1,4 @@
-"""Hash-partitioned, versioned state store with merge-on-read deltas.
+"""Versioned state store with merge-on-read deltas.
 
 The scale problem this solves: a streaming pipeline that full-outer-joins
 each micro-batch's delta against its *entire* accumulated state and
@@ -6,31 +6,41 @@ rewrites the whole snapshot degrades linearly with lifetime state size —
 at 10^12 turns the label/verdict state is billions of entities and a
 per-batch O(|state|) rewrite is a scale-killer.
 
-State is hash-partitioned into ``num_partitions`` buckets by key
-(``pmod(xxhash64(keys), P)`` — the same bucketing a real cluster would
-use for co-located state). One write path, merge-on-read
-(``merge_append``): a batch appends ONLY its delta rows as new
-per-bucket parquet files — O(|delta|) writes, no read of current state
-at all — and ``read()`` resolves base+deltas to one row per key with a
-caller-supplied associative ``resolve_fn`` (default: latest generation
-wins, Iceberg MOR's equality-delete semantics). The round-3 full-stack
-run showed why a copy-on-write rewrite of dirty buckets cannot serve
-here: with dense deltas every bucket is dirty each batch (150k active
-conversations → all 64 buckets touched), so the rewrite grows with the
-whole flagged set (15.5k→47.9k rows/batch). A bucket whose live
-file-list exceeds ``max_delta_files`` is compacted lazily during the
-merge that trips the threshold: its files fold into one resolved base
-file, bounding read amplification at O(max_delta_files) while keeping
-amortized write cost O(|delta|).
+One write path, merge-on-read (``merge_append``): a batch appends ONLY
+its delta rows as one new generation directory ``d{v}`` — O(|delta|)
+writes, no read of current state at all — and ``read()`` resolves
+base+deltas to one row per key with a caller-supplied associative
+``resolve_fn`` (default: latest generation wins, Iceberg MOR's
+equality-delete semantics). The round-3 full-stack run showed why a
+copy-on-write rewrite cannot serve here: with dense deltas every key
+range is dirty each batch, so the rewrite grows with the whole flagged
+set (15.5k→47.9k rows/batch). Once the live generations exceed
+``max_delta_files``, the merge that trips the threshold folds all of
+them into one resolved base ``d{v}x`` (per-store compaction), bounding
+read amplification at ``max_delta_files + 1`` directories while keeping
+amortized write cost O(|delta|). On dense traffic nearly every key range
+is touched by every merge, so folding the whole store writes about what
+a per-range fold would; and every batch already reads the whole state.
 
-Each merge publishes a new manifest (bucket id → ordered file list) plus
-pointer atomically. This is the plain-parquet stand-in for an
-Iceberg/Delta MOR table: the manifest is Iceberg's snapshot manifest,
-the pointer file is the catalog's atomic swap, delta files are
-equality-delete + data files, lazy compaction is ``rewrite_data_files``,
-``before_batch`` reads are time-travel. On a real cluster the same class
-works over an object store path; with Iceberg jars present
-``merge_append`` becomes a fanout append and ``read`` a MOR scan.
+Why one directory per merge (no ``partitionBy`` bucket fan-out): a
+read hands Spark one path per live directory, and past
+``spark.sql.sources.parallelPartitionDiscovery.threshold`` (32) Spark
+lists them with a distributed job, one task per path — a fixed cost on
+every state read of every micro-batch. One directory per generation
+keeps reads at most ``max_delta_files + 1`` paths, listed without a job.
+
+Each merge publishes a new manifest (the ordered live generation list,
+under a single key of ``buckets``) plus pointer atomically. This is the
+plain-parquet stand-in for an Iceberg/Delta MOR table: the manifest is
+Iceberg's snapshot manifest, the pointer file is the catalog's atomic
+swap, delta generations are equality-delete + data files, lazy
+compaction is ``rewrite_data_files``, ``before_batch`` reads are
+time-travel. On a real cluster the same class works over an object
+store path; with Iceberg jars present ``merge_append`` becomes an
+append and ``read`` a MOR scan. Manifests written by the earlier
+per-bucket layout (many keys of ``d{v}/__state_part=b`` dirs) read as
+the union of their lists, so such a state directory resumes and is
+folded by the next compaction.
 
 Exactly-once: the pointer records the last applied ``batch_id``; a
 replayed merge of the same batch is a no-op, and ``read(before_batch=b)``
@@ -48,12 +58,12 @@ import glob
 import json
 import os
 import re
+import shutil
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-_PART = "__state_part"
 # Write-generation column, STAMPED INTO THE DATA at write time (a
 # literal, so it costs nothing at scan). Deriving it from the file path
 # via input_file_name() instead would mark the projection
@@ -63,13 +73,16 @@ _PART = "__state_part"
 # PushedFilters).
 GEN_COL = "__state_gen"
 _GEN_DIR_RE = re.compile(r"^d\d+x?$")
+# the manifest's single ``buckets`` key: every live generation is listed
+# under it, oldest → newest
+_LIVE = "0"
 
 
 def latest_wins(df: DataFrame, key_cols: list[str]) -> DataFrame:
     """Default MOR resolution: the newest generation's row wins per key
     (Iceberg equality-delete semantics). One hash aggregation with
     map-side partial combine; no window sort."""
-    payload_cols = [c for c in df.columns if c not in (*key_cols, GEN_COL, _PART)]
+    payload_cols = [c for c in df.columns if c not in (*key_cols, GEN_COL)]
     payload = F.struct(*[F.col(c) for c in payload_cols])
     return (
         df.groupBy(*key_cols)
@@ -84,7 +97,6 @@ class HashPartitionedStateStore:
         path: str,
         key_cols: list[str],
         schema: str,
-        num_partitions: int = 64,
         max_delta_files: int = 8,
         resolve_fn: Optional[Callable[[DataFrame], DataFrame]] = None,
     ):
@@ -92,12 +104,11 @@ class HashPartitionedStateStore:
         receives the raw base+delta rows with an extra ``__state_gen``
         long column (monotone write order) and must be ASSOCIATIVE and
         insensitive to physical row order — compaction applies it to any
-        prefix of a bucket's files and the result must resolve identically
-        against later deltas. Default: :func:`latest_wins`."""
+        prefix of the live generations and the result must resolve
+        identically against later deltas. Default: :func:`latest_wins`."""
         self.path = path
         self.key_cols = key_cols
         self.schema = schema  # DDL string of the full state row
-        self.num_partitions = num_partitions
         self.max_delta_files = max_delta_files
         self.resolve_fn = resolve_fn
         self.last_merge_stats: dict = {}
@@ -125,41 +136,43 @@ class HashPartitionedStateStore:
         return self.pointer()["batch_id"]
 
     def _load_manifest(self, version: int) -> dict:
-        """Raw manifest document. Current format:
-        ``{"buckets": {bucket → [rel dirs]}, "stats": {rel → [rows, bytes]}}``;
-        pre-round-5 manifests were the bare ``buckets`` mapping (no stats)
-        and are read compatibly."""
+        """Manifest document
+        ``{"buckets": {"0": [live generation dirs]}, "stats": {rel → [rows, bytes]}}``.
+        Older documents are read compatibly: the per-bucket layout's many
+        keys fold into the one list (the union of their dirs), and
+        pre-round-5 manifests were the bare ``buckets`` mapping (no
+        stats)."""
         if version < 0:
             return {"buckets": {}, "stats": {}}
         with open(self._manifest_file(version)) as f:
             raw = json.load(f)
         if "buckets" not in raw:
             raw = {"buckets": raw, "stats": {}}
-        raw["buckets"] = {
-            b: [rels] if isinstance(rels, str) else rels
-            for b, rels in raw["buckets"].items()
-        }
+        live = []
+        for rels in raw["buckets"].values():
+            live.extend([rels] if isinstance(rels, str) else rels)
+        raw["buckets"] = {_LIVE: live} if live else {}
         raw.setdefault("stats", {})
         return raw
 
-    def _manifest(self, version: int) -> dict[str, list[str]]:
-        """bucket id → ordered (oldest→newest) list of live data dirs."""
-        return self._load_manifest(version)["buckets"]
+    def _live(self, version: int) -> list[str]:
+        """Live data dirs of ``version`` (resolution orders rows by their
+        stamped generation, not by list position)."""
+        return self._load_manifest(version)["buckets"].get(_LIVE, [])
 
     def _publish(
         self,
-        manifest: dict[str, list[str]],
+        live: list[str],
         batch_id: Optional[int],
-        stats: Optional[dict[str, list[int]]] = None,
+        stats: dict[str, list[int]],
     ) -> int:
         # keep stats only for rels still referenced (manifest-carried file
         # statistics, the Iceberg manifest-metrics analog: size queries
         # never re-stat the data tree)
-        live = {rel for rels in manifest.values() for rel in rels}
-        stats = {rel: s for rel, s in (stats or {}).items() if rel in live}
+        stats = {rel: s for rel, s in stats.items() if rel in live}
         v = self.current_version() + 1
         with open(self._manifest_file(v), "w") as f:
-            json.dump({"buckets": manifest, "stats": stats}, f)
+            json.dump({"buckets": {_LIVE: live}, "stats": stats}, f)
         tmp = self._pointer_file() + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"version": v, "batch_id": batch_id}, f)
@@ -179,16 +192,14 @@ class HashPartitionedStateStore:
             return self.resolve_fn(df)
         return latest_wins(df, self.key_cols)
 
-    def _scan(self, spark: SparkSession, manifest: dict[str, list[str]], buckets=None) -> DataFrame:
-        entries = manifest if buckets is None else {
-            str(b): manifest[str(b)] for b in buckets if str(b) in manifest
-        }
-        paths = [os.path.join(self.path, rel) for rels in entries.values() for rel in rels]
-        if not paths:
+    def _scan(self, spark: SparkSession, live: list[str]) -> DataFrame:
+        if not live:
             return self._empty(spark)
-        df = spark.read.schema(self._data_schema()).parquet(*paths)
-        if any(len(rels) > 1 for rels in entries.values()):
-            # merge-on-read: some bucket carries un-compacted deltas
+        df = spark.read.schema(self._data_schema()).parquet(
+            *[os.path.join(self.path, rel) for rel in live]
+        )
+        if len(live) > 1:
+            # merge-on-read: un-compacted deltas on top of the base
             return self._resolve(df)
         return df.drop(GEN_COL)
 
@@ -206,122 +217,85 @@ class HashPartitionedStateStore:
             v -= 1  # this batch already applied (crash between state and sink)
         if v < 0:
             return self._empty(spark)
-        return self._scan(spark, self._manifest(v))
+        return self._scan(spark, self._live(v))
 
     def approx_size_bytes(self) -> int:
         """Total bytes of the current snapshot's live data files, from the
         MANIFEST-CARRIED stats recorded at publish time — a dict sum, no
         filesystem walk (this runs in the per-batch path via the broadcast
-        guard; a glob-stat of every live file degrades linearly with
-        bucket × delta count). Rels from pre-stats manifests fall back to
+        guard; a glob-stat of every live file degrades linearly with the
+        live file count). Rels from pre-stats manifests fall back to
         a one-off stat walk. With pending deltas this over-counts the
         resolved size, which is the safe direction for a broadcast
         guard."""
         doc = self._load_manifest(self.current_version())
         total = 0
-        for rels in doc["buckets"].values():
-            for rel in rels:
-                s = doc["stats"].get(rel)
-                if s is not None:
-                    total += int(s[1])
-                else:  # legacy manifest without stats
-                    for fp in glob.glob(os.path.join(self.path, rel, "*.parquet")):
-                        total += os.path.getsize(fp)
+        for rel in doc["buckets"].get(_LIVE, []):
+            s = doc["stats"].get(rel)
+            if s is not None:
+                total += int(s[1])
+            else:  # legacy manifest without stats
+                for fp in glob.glob(os.path.join(self.path, rel, "*.parquet")):
+                    total += os.path.getsize(fp)
         return total
 
     # -- merge-on-read write path ---------------------------------------------
 
     def merge_append(self, delta: DataFrame, batch_id: Optional[int] = None) -> int:
-        """Append ``delta`` as per-bucket MOR delta files — O(|delta|)
+        """Append ``delta`` as one MOR generation directory — O(|delta|)
         write cost, NO read of current state. ``delta`` must hold at most
         one row per key (pre-collapse the batch) and be self-contained
         under ``resolve_fn`` (whole-row resolution, not field patching).
-        Buckets whose live file count exceeds ``max_delta_files`` are
-        compacted in the same publish. Idempotent per ``batch_id``."""
+        When the live generations exceed ``max_delta_files`` they are
+        folded into one resolved base in the same publish. Idempotent per
+        ``batch_id``."""
         if batch_id is not None and self.last_batch_id() == batch_id:
             return self.current_version()  # replay → already applied
-        spark = delta.sparkSession
         v = self.current_version() + 1
         gen_dir = f"d{v}"
-        (
-            delta.withColumn(GEN_COL, F.lit(v))
-            .withColumn(_PART, self._part_of())
-            .repartition(min(self.num_partitions, 32), F.col(_PART))
-            .write.partitionBy(_PART)
-            .mode("overwrite")
-            .parquet(os.path.join(self.path, gen_dir))
-        )
-
-        doc = self._load_manifest(v - 1)
-        manifest = {b: list(rels) for b, rels in doc["buckets"].items()}
-        stats = dict(doc["stats"])
-        rows_appended = 0
-        touched = []
-        for d in glob.glob(os.path.join(self.path, gen_dir, f"{_PART}=*")):
-            b = d.rsplit("=", 1)[1]
-            touched.append(int(b))
-            rel = f"{gen_dir}/{_PART}={b}"
-            manifest.setdefault(b, []).append(rel)
-            stats[rel] = _dir_stats(d)
-            rows_appended += stats[rel][0]
-        if not touched:
+        appended = self._write_generation(delta, gen_dir, v)
+        rows_appended = appended[0]
+        if rows_appended == 0:
             # empty delta: no state change → nothing to version (replaying
             # an empty merge is naturally idempotent)
+            shutil.rmtree(os.path.join(self.path, gen_dir), ignore_errors=True)
             self.last_merge_stats = {
-                "partitions_touched": 0,
                 "rows_appended": 0,
                 "rows_compacted": 0,
-                "buckets_compacted": 0,
                 "rows_rewritten": 0,
             }
             return self.current_version()
 
-        # lazy compaction: fold over-threshold buckets into one base file
-        over = [b for b, rels in manifest.items() if len(rels) > self.max_delta_files]
+        doc = self._load_manifest(v - 1)
+        live = doc["buckets"].get(_LIVE, []) + [gen_dir]
+        stats = {**doc["stats"], gen_dir: appended}
+
+        # lazy compaction: fold every live generation into one base
         rows_compacted = 0
-        if over:
+        if len(live) > self.max_delta_files:
             cdir = f"d{v}x"
-            folded = self._resolve(
-                spark.read.schema(self._data_schema()).parquet(
-                    *[os.path.join(self.path, rel) for b in over for rel in manifest[b]]
-                )
-            )
-            (
-                folded.withColumn(GEN_COL, F.lit(v))
-                .withColumn(_PART, self._part_of())
-                .repartition(min(len(over), 32), F.col(_PART))
-                .write.partitionBy(_PART)
-                .mode("overwrite")
-                .parquet(os.path.join(self.path, cdir))
-            )
-            compacted_buckets = set()
-            for d in glob.glob(os.path.join(self.path, cdir, f"{_PART}=*")):
-                b = d.rsplit("=", 1)[1]
-                compacted_buckets.add(b)
-                rel = f"{cdir}/{_PART}={b}"
-                manifest[b] = [rel]
-                stats[rel] = _dir_stats(d)
-                rows_compacted += stats[rel][0]
-            for b in over:
-                if b not in compacted_buckets:  # bucket resolved to empty
-                    manifest.pop(b, None)
+            folded = self._scan(delta.sparkSession, live)
+            stats[cdir] = self._write_generation(folded, cdir, v)
+            rows_compacted = stats[cdir][0]
+            live = [cdir]
 
         self.last_merge_stats = {
-            "partitions_touched": len(touched),
             "rows_appended": rows_appended,
             "rows_compacted": rows_compacted,
-            "buckets_compacted": len(over),
             # physical write volume this merge: the delta itself plus any
             # amortized compaction — O(|delta|) steady-state, NOT O(|state|)
             "rows_rewritten": rows_appended + rows_compacted,
         }
-        self._publish(manifest, batch_id, stats=stats)
+        self._publish(live, batch_id, stats)
         return v
 
-    def _part_of(self):
-        return F.pmod(
-            F.xxhash64(*[F.col(c) for c in self.key_cols]), F.lit(self.num_partitions)
-        ).cast("int")
+    def _write_generation(self, df: DataFrame, rel: str, v: int) -> list[int]:
+        """Write ``df`` stamped with generation ``v`` as the directory
+        ``rel`` (overwriting what a crashed attempt left there); returns
+        its ``[rows, bytes]``."""
+        full = os.path.join(self.path, rel)
+        df.withColumn(GEN_COL, F.lit(v)).write.mode("overwrite").parquet(full)
+        return _dir_stats(full)
 
     # -- snapshot expiry --------------------------------------------------------
 
@@ -337,8 +311,6 @@ class HashPartitionedStateStore:
         The pipeline retries at most the last un-marked batch, so any
         value ≥ 2 is safe there; callers doing deeper time-travel size it
         themselves."""
-        import shutil
-
         current = self.current_version()
         if current < 0:
             # nothing published yet (e.g. a crash between the first
@@ -349,9 +321,8 @@ class HashPartitionedStateStore:
         live_gens: set[str] = set()
         for v in keep:
             try:
-                for rels in self._manifest(v).values():
-                    for rel in rels:
-                        live_gens.add(rel.split("/", 1)[0])
+                for rel in self._live(v):
+                    live_gens.add(rel.split("/", 1)[0])
             except FileNotFoundError:
                 continue
         removed = 0

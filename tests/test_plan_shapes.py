@@ -178,7 +178,7 @@ def test_mor_read_pushes_key_filters_below_resolution(spark, tmp_path):
 
     from osprey_spark.streaming.label_state import LabelStateStore
 
-    store = LabelStateStore(str(tmp_path / "labels"), num_partitions=4)
+    store = LabelStateStore(str(tmp_path / "labels"))
     T0 = datetime.datetime(2024, 1, 1)
     MS = ("entity_type string, entity_id string, label_name string, "
           "status int, event_ts timestamp, expires_ts timestamp")
@@ -207,14 +207,14 @@ def test_mor_read_pushes_key_filters_below_resolution(spark, tmp_path):
 
 
 def test_fully_compacted_store_read_is_plain_scan(spark, tmp_path):
-    """When every bucket holds a single (compacted or COW) file, read()
+    """When the store holds a single (compacted) generation, read()
     must skip the MOR resolution entirely — a plain pruned scan with no
     aggregation, the steady-state HasLabel read cost after compaction."""
     import datetime
 
     from osprey_spark.streaming.label_state import LabelStateStore
 
-    store = LabelStateStore(str(tmp_path / "labels"), num_partitions=4, max_delta_files=1)
+    store = LabelStateStore(str(tmp_path / "labels"), max_delta_files=1)
     T0 = datetime.datetime(2024, 1, 1)
     MS = ("entity_type string, entity_id string, label_name string, "
           "status int, event_ts timestamp, expires_ts timestamp")
@@ -225,4 +225,4 @@ def test_fully_compacted_store_read_is_plain_scan(spark, tmp_path):
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
     assert "max_by" not in plan
-    assert "Aggregate" not in plan  # no resolution: single file per bucket
+    assert "Aggregate" not in plan  # no resolution: a single generation

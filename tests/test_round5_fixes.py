@@ -34,7 +34,7 @@ def test_manifest_stats_survive_and_size_query_never_walks(spark, tmp_path):
 
     from osprey_spark.streaming import state_store as ss
 
-    store = LabelStateStore(str(tmp_path / "labels"), num_partitions=4, max_delta_files=3)
+    store = LabelStateStore(str(tmp_path / "labels"), max_delta_files=3)
     for b in range(8):  # trips compaction (max_delta_files=3)
         store.apply_mutations(_muts(spark, range(b * 10, b * 10 + 10)), batch_id=b)
     doc = store.store._load_manifest(store.current_version())
@@ -149,7 +149,6 @@ def test_label_store_matches_sequential_reference_fold_property(spark, tmp_path)
         # prefix shapes
         store = LabelStateStore(
             str(tmp_path / f"labels_{case}"),
-            num_partitions=2,
             max_delta_files=max_delta,
         )
         state: dict[tuple, tuple] = {}  # key -> (status, created_at)

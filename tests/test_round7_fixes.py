@@ -113,6 +113,37 @@ def test_custom_effect_null_value_dropped(spark):
     assert vals == [[], ["u2"], [], []]
 
 
+def test_custom_effect_value_not_evaluated_when_not_fired(spark):
+    """The empty branch of a custom-effect array must not evaluate the
+    value expression: under ANSI mode a value that fails only on rows
+    where the effect did not fire (a cast of a non-numeric string) would
+    otherwise raise for the whole batch."""
+    from osprey_spark.sml.compiler import CompiledRuleset, CustomEffectEntry
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    plan = CompiledRuleset(
+        features=[], verdicts=[], labels=[],
+        custom_effects=[
+            CustomEffectEntry(
+                cond=F.col("fired"), feature_name="eff",
+                value_col=F.col("s").cast("int"),
+            )
+        ],
+        error_indicators=[], rules={}, action_id_col=None, timestamp_col="ts",
+        label_lookups=[], feature_entity_types={},
+    )
+    eff_col = next(
+        c for c in plan.internal_columns()
+        if "__eff" in c._jc.toString()
+    )
+    df = spark.createDataFrame(
+        [(1, True, "7"), (2, False, "x"), (3, False, "x")],
+        "event_id long, fired boolean, s string",
+    ).withColumn("ts", F.lit(T0))
+    out = df.select("event_id", eff_col).orderBy("event_id").collect()
+    assert [r["__eff"] for r in out] == [[7], [], []]
+
+
 # -- match_sequence relevant-event prefilter ---------------------------------
 
 

@@ -360,8 +360,7 @@ def main() -> None:
     appended = [m.get("rows_appended", 0) for m in ms if m["batch"] > 0]
     compacted = [m.get("rows_compacted", 0) for m in ms if m["batch"] > 0]
     stats_rows = "\n".join(
-        f"| {m['batch']} | {m.get('partitions_touched', 0)} | {m.get('rows_appended', 0)} "
-        f"| {m.get('buckets_compacted', 0)} | {m.get('rows_compacted', 0)} "
+        f"| {m['batch']} | {m.get('rows_appended', 0)} | {m.get('rows_compacted', 0)} "
         f"| {m.get('live_files', '')} | {m.get('disk_mb', '')} |"
         for m in ms
     )
@@ -384,10 +383,10 @@ def main() -> None:
             f"- wall for BOTH queries: {r['wall_both_queries_sec']:.1f}s\n"
             f"- per-batch label write cost is the DELTA, not the flagged set: appended "
             f"min {min(appended):,} / max {max(appended):,} rows; compaction (amortized, "
-            f"fires when a bucket exceeds max_delta_files) "
+            f"fires when the live generations exceed max_delta_files) "
             f"min {min(compacted):,} / max {max(compacted):,} rows\n\n"
-            "| batch | buckets touched | rows appended | buckets compacted | rows compacted | live files | labels disk MB |\n"
-            "|---|---|---|---|---|---|---|\n"
+            "| batch | rows appended | rows compacted | live files | labels disk MB |\n"
+            "|---|---|---|---|---|\n"
             + stats_rows + "\n"
         )
         j = r.get("join")
