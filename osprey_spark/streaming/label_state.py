@@ -59,12 +59,6 @@ MUTATION_COLS = ["entity_type", "entity_id", "label_name", "status", "event_ts",
 
 KEY = ["entity_type", "entity_id", "label_name"]
 
-# under this snapshot size the HasLabel join side is force-broadcast;
-# above it the hint is omitted and AQE picks broadcast vs shuffle from
-# runtime sizes (a hot label over millions of entities must not be
-# forced through the driver)
-BROADCAST_BYTES = 32 * 1024 * 1024
-
 
 def label_resolver(df: DataFrame) -> DataFrame:
     """Collapse MOR delta rows per (entity_type, entity_id, label_name) to
@@ -116,7 +110,7 @@ class LabelStateStore:
         return self.store.approx_size_bytes()
 
     def broadcastable(self) -> bool:
-        return self.approx_size_bytes() < BROADCAST_BYTES
+        return self.store.broadcastable()
 
     def read(self, spark: SparkSession, before_batch: Optional[int] = None) -> DataFrame:
         return self.store.read(spark, before_batch=before_batch)
@@ -159,31 +153,3 @@ class LabelStateStore:
             F.col("status").isin(1, 3)
             & (F.col("expires_ts").isNull() | (F.col("expires_ts") > as_of_col))
         )
-
-    def has_label_join(
-        self,
-        df: DataFrame,
-        entity_type: str,
-        entity_id_col: str,
-        label: str,
-        out_col: str = "has_label",
-        as_of=None,
-    ) -> DataFrame:
-        """HasLabel (stdlib/udfs/labels.py:159-311) as a join against the
-        (per-label) active-label set. Broadcast is forced only while the
-        snapshot is verifiably small; past that the hint is dropped and
-        AQE decides (a hot label over millions of entities would blow the
-        driver's broadcast limit)."""
-        active = (
-            self.active_labels(df.sparkSession, as_of=as_of)
-            .filter((F.col("entity_type") == entity_type) & (F.col("label_name") == label))
-            .select(F.col("entity_id").alias("_lbl_eid"), F.lit(True).alias(out_col))
-        )
-        if self.broadcastable():
-            active = F.broadcast(active)
-        joined = df.join(
-            active,
-            on=[F.col(entity_id_col).cast("string") == F.col("_lbl_eid")],
-            how="left",
-        )
-        return joined.drop("_lbl_eid").withColumn(out_col, F.coalesce(F.col(out_col), F.lit(False)))

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from osprey_spark.sml.compiler import CompiledRuleset, RulesetCompiler
+from osprey_spark.sml.validators import validate_sources
+from osprey_spark.streaming._timeutil import interval_seconds
 from osprey_spark.streaming.label_state import LabelStateStore
 from osprey_spark.streaming.sink import IdempotentParquetSink
 from osprey_spark.streaming.state_store import HashPartitionedStateStore
@@ -70,16 +72,13 @@ class RuleStreamPipeline:
         timestamp_col: str = "ts",
         input_schema: Optional[str] = None,
         watermark: str = "10 minutes",
-        watermark_seconds: int = 600,
         passthrough: Optional[list[str]] = None,
         post_plan: Optional[Callable[[DataFrame, DataFrame], DataFrame]] = None,
         sample_rates: Optional[dict[str, float]] = None,
         track_verdict_state: bool = False,
         key_col: str = "conv_id",
-        salt_buckets: int = 0,
         extra_sinks: Optional[list[Callable[[DataFrame, int], None]]] = None,
         console: bool = False,
-        validate: bool = True,
         maintenance_every: int = 16,
         keep_versions: int = 8,
         label_max_delta_files: int = 8,
@@ -91,18 +90,19 @@ class RuleStreamPipeline:
         ``keep_versions`` must cover the replay window (the pipeline
         replays at most the last un-marked batch, so any value ≥ 2 is
         safe; the default keeps a deeper time-travel margin). 0 disables
-        maintenance."""
-        if validate:
-            # the rule-authoring surface rejects what the reference's
-            # ast_validator rejects (typed errors with source spans)
-            # before any Spark plan is built
-            from osprey_spark.sml.validators import validate_sources
+        maintenance.
 
-            validate_sources(sources)
+        ``watermark`` is both the input stream's watermark delay and the
+        allowed lateness of the ``late_rows`` metric, so it must be a
+        single ``'<N> seconds|minutes|hours|days'`` pair."""
+        # the rule-authoring surface rejects what the reference's
+        # ast_validator rejects (typed errors with source spans) before
+        # any Spark plan is built
+        validate_sources(sources)
         self.spark = spark
         self.workdir = workdir
         self.watermark = watermark
-        self.watermark_seconds = watermark_seconds
+        self.allowed_lateness_s = interval_seconds(watermark)
         self.passthrough = passthrough or ["conv_id", "turn_idx"]
         self.post_plan = post_plan
         self.sample_rates = sample_rates
@@ -110,7 +110,6 @@ class RuleStreamPipeline:
         self.extra_sinks = extra_sinks or []
         self.console = console
         self.key_col = key_col
-        self.salt_buckets = salt_buckets
         self.maintenance_every = maintenance_every
         self.keep_versions = keep_versions
         self.sink = IdempotentParquetSink(os.path.join(workdir, "results"))
@@ -166,14 +165,6 @@ class RuleStreamPipeline:
             "__sample_rate", rate_expr
         )
 
-    def _salted(self, df: DataFrame) -> DataFrame:
-        """Optional hot-key defusal before evaluation: spread each key over
-        ``salt_buckets`` partitions (velocity.salted_repartition pattern)."""
-        if not self.salt_buckets:
-            return df
-        salt = F.pmod(F.xxhash64(F.col(self.timestamp_col)), F.lit(self.salt_buckets))
-        return df.repartition(F.col(self.key_col), salt)
-
     def prior_verdict_counts(self, before_batch: Optional[int] = None) -> DataFrame:
         """Verdict state as of the previous batch: conv_id → verdicts so
         far. The stream-state side of cross-turn correlation."""
@@ -188,36 +179,38 @@ class RuleStreamPipeline:
         )
         self.verdict_state.merge_append(delta, batch_id=batch_id)
 
-    def _read_high_watermark(self) -> Optional[float]:
-        try:
-            with open(os.path.join(self.workdir, "_HIGH_WATERMARK")) as fh:
-                return float(fh.read().strip())
-        except FileNotFoundError:
+    def _prior_high_watermark(self, batch_id: int) -> Optional[float]:
+        """High watermark (epoch seconds) as of the newest batch committed
+        before ``batch_id``, from that batch's commit marker. The marker
+        is the only durable copy, so a replayed batch reads the same
+        value as its first attempt, whatever that attempt got to write."""
+        prior = [b for b in self.sink.committed_batches() if b < batch_id]
+        if not prior:
             return None
+        return self.sink.marker(prior[-1]).get("high_watermark_epoch")
 
-    def _late_metrics_from(self, obs: Observation, prev_hw: Optional[float]) -> dict:
+    @staticmethod
+    def _late_metrics_from(obs: Observation, prev_hw: Optional[float]) -> dict:
         """Late-data accounting from the write pass's ``observe()``
         metrics (no extra evaluation): rows older than (high-watermark −
         allowed lateness) are counted as late; they are still processed —
         foreachBatch sees every row; the metric mirrors what a stateful
-        operator's watermark would have dropped."""
+        operator's watermark would have dropped. The advanced high
+        watermark rides the commit marker; nothing is written here, as
+        this runs before the marker is published."""
         m = obs.get
-        floor = prev_hw if prev_hw is not None else float("-inf")
-        mx = float(m["mx"]) if m.get("mx") is not None else float("-inf")
-        new_hw = max(floor, mx)
-        if new_hw != float("-inf"):
-            hw_file = os.path.join(self.workdir, "_HIGH_WATERMARK")
-            with open(hw_file + ".tmp", "w") as fh:
-                fh.write(str(new_hw))
-            os.rename(hw_file + ".tmp", hw_file)
-        return {"late_rows": int(m.get("late") or 0), "high_watermark_epoch": new_hw}
+        seen = [hw for hw in (prev_hw, m.get("mx")) if hw is not None]
+        return {
+            "late_rows": int(m.get("late") or 0),
+            "high_watermark_epoch": float(max(seen)) if seen else None,
+        }
 
     # -- batch body ----------------------------------------------------------
 
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.sink.is_committed(batch_id):
             return  # replayed batch → exactly-once skip
-        batch_df = self._salted(self._sample(batch_df))
+        batch_df = self._sample(batch_df)
         pt = list(self.passthrough)
         if self.sample_rates:
             pt.append("__sample_rate")
@@ -246,7 +239,7 @@ class RuleStreamPipeline:
             # broadcast only while verifiably small (same guard as
             # HasLabel): a long-lived stream's verdict state can outgrow
             # the driver's broadcast capacity — then AQE picks the join
-            if self.verdict_state.approx_size_bytes() < 32 * 1024 * 1024:
+            if self.verdict_state.broadcastable():
                 prior = F.broadcast(prior)
             out = out.join(prior, on=self.key_col, how="left").withColumn(
                 "prior_verdict_count",
@@ -270,9 +263,9 @@ class RuleStreamPipeline:
                 self.labels.apply_mutations(mutations, batch_id=batch_id)
             if self.track_verdict_state:
                 self._update_verdict_state(out, batch_id)
-            prev_hw = self._read_high_watermark()
+            prev_hw = self._prior_high_watermark(batch_id)
             obs = Observation()
-            floor = (prev_hw if prev_hw is not None else float("-inf")) - self.watermark_seconds
+            floor = (prev_hw if prev_hw is not None else float("-inf")) - self.allowed_lateness_s
             to_write = out.drop(CompiledRuleset.MUTATION_STRUCTS_COL).observe(
                 obs,
                 F.max(F.unix_timestamp(F.col("__timestamp"))).alias("mx"),

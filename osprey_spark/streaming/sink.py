@@ -94,12 +94,13 @@ class IdempotentParquetSink:
         paths = [os.path.join(self.data_dir, f"batch={b}") for b in batches]
         return spark.read.parquet(*paths)
 
+    def marker(self, batch_id: int) -> dict:
+        """The commit marker of a committed batch."""
+        with open(self._commit_marker(batch_id)) as f:
+            return json.load(f)
+
     def metrics(self) -> list[dict]:
-        out = []
-        for b in self.committed_batches():
-            with open(self._commit_marker(b)) as f:
-                out.append(json.load(f))
-        return out
+        return [self.marker(b) for b in self.committed_batches()]
 
 
 def _footer_rows(path: str) -> int:

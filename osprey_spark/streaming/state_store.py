@@ -73,6 +73,12 @@ from pyspark.sql import functions as F
 # PushedFilters).
 GEN_COL = "__state_gen"
 _GEN_DIR_RE = re.compile(r"^d\d+x?$")
+# under this snapshot size a state read is force-broadcast into its
+# join; above it the hint is omitted and AQE picks broadcast vs shuffle
+# from runtime sizes (a hot label over millions of entities, or a
+# long-lived stream's verdict state, must not be forced through the
+# driver)
+BROADCAST_BYTES = 32 * 1024 * 1024
 # the manifest's single ``buckets`` key: every live generation is listed
 # under it, oldest → newest
 _LIVE = "0"
@@ -238,6 +244,11 @@ class HashPartitionedStateStore:
                 for fp in glob.glob(os.path.join(self.path, rel, "*.parquet")):
                     total += os.path.getsize(fp)
         return total
+
+    def broadcastable(self) -> bool:
+        """Whether a join against this store's snapshot may force a
+        broadcast (see ``BROADCAST_BYTES``)."""
+        return self.approx_size_bytes() < BROADCAST_BYTES
 
     # -- merge-on-read write path ---------------------------------------------
 

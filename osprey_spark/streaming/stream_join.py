@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osprey_spark.streaming._timeutil import interval_seconds
+
 
 def _ensure_watermark(df: DataFrame, ts_col: str, delay: str) -> DataFrame:
     """Apply ``withWatermark(ts_col, delay)`` unless the column already
@@ -152,7 +154,7 @@ def dedupe_alerts(
     argument — the dedupe watermark wins (ADVICE r6), so pick ``watermark``
     here with the join's lateness tolerance in mind.
     """
-    bucket_s = _interval_seconds(bucket)
+    bucket_s = interval_seconds(bucket)
     src = alerts.withWatermark(alert_ts, watermark) if alerts.isStreaming else alerts
     bucketed = src.withColumn(
         "__bucket", F.floor(F.unix_timestamp(F.col(alert_ts)) / F.lit(bucket_s))
@@ -167,21 +169,3 @@ def dedupe_alerts(
         deduped = bucketed.dropDuplicates([key, "__bucket"])
     return deduped.drop("__bucket")
 
-
-_UNITS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400}
-
-
-def _interval_seconds(spec: str) -> int:
-    """'5 minutes' → 300 (the subset of interval syntax dedupe buckets
-    use). Rejects compound or malformed specs with a clear error
-    (ADVICE r6) instead of an unhelpful KeyError/ValueError."""
-    parts = spec.strip().split()
-    if len(parts) == 2:
-        qty, unit = parts
-        u = _UNITS.get(unit.rstrip("s").lower())
-        if u is not None and (qty.isdigit() or (qty[:1] == "-" and qty[1:].isdigit())):
-            return int(qty) * u
-    raise ValueError(
-        f"unsupported bucket spec {spec!r}: expected '<N> "
-        "seconds|minutes|hours|days' (a single quantity-unit pair)"
-    )

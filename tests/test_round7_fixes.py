@@ -206,10 +206,10 @@ def test_spark_stamps_watermark_delay_metadata(spark):
 
 
 def test_interval_seconds_rejects_compound_specs():
-    from osprey_spark.streaming.stream_join import _interval_seconds
+    from osprey_spark.streaming._timeutil import interval_seconds
 
-    assert _interval_seconds("5 minutes") == 300
-    assert _interval_seconds("1 hour") == 3600
+    assert interval_seconds("5 minutes") == 300
+    assert interval_seconds("1 hour") == 3600
     for bad in ("1 hour 30 minutes", "5min", "five minutes", ""):
-        with pytest.raises(ValueError, match="bucket spec"):
-            _interval_seconds(bad)
+        with pytest.raises(ValueError, match="interval spec"):
+            interval_seconds(bad)

@@ -11,7 +11,11 @@ from pyspark.sql import functions as F
 
 from osprey_spark.sources import transcripts_pdf
 from osprey_spark.streaming.label_state import LabelStateStore
-from osprey_spark.streaming.pipeline import RuleStreamPipeline, windowed_velocity_stream
+from osprey_spark.streaming.pipeline import (
+    TRANSCRIPT_SCHEMA,
+    RuleStreamPipeline,
+    windowed_velocity_stream,
+)
 from osprey_spark.streaming.sink import IdempotentParquetSink
 
 RULES = {
@@ -138,14 +142,6 @@ def test_label_state_merge_semantics(spark, workdir):
     }
     assert active1 == {"u2", "u3", "u4"}
 
-    # HasLabel join
-    df = spark.createDataFrame([("u3",), ("u9",)], "uid string")
-    out = {
-        r["uid"]: r["has_label"]
-        for r in store.has_label_join(df, "User", "uid", "bad", as_of=t0).collect()
-    }
-    assert out == {"u3": True, "u9": False}
-
 
 def test_streaming_cep(spark, rocksdb, workdir):
     from osprey_spark.streaming.cep_tws import streaming_match_sequence_tws
@@ -212,7 +208,7 @@ def test_pipeline_sampling_verdict_state_late_metrics(spark, workdir):
 
     pipe = RuleStreamPipeline(
         spark, RULES, os.path.join(workdir, "p2"),
-        track_verdict_state=True, watermark_seconds=600,
+        track_verdict_state=True,
     )
     pipe.run_until_idle(input_dir)
     res1 = pipe.results()
@@ -222,7 +218,7 @@ def test_pipeline_sampling_verdict_state_late_metrics(spark, workdir):
     spark.createDataFrame(rows[3:], schema).write.mode("append").parquet(input_dir)
     pipe2 = RuleStreamPipeline(
         spark, RULES, os.path.join(workdir, "p2"),
-        track_verdict_state=True, watermark_seconds=600,
+        track_verdict_state=True,
     )
     pipe2.run_until_idle(input_dir)
     res = {(r["conv_id"], r["turn_idx"]): r for r in pipe2.results().collect()}
@@ -238,6 +234,35 @@ def test_pipeline_sampling_verdict_state_late_metrics(spark, workdir):
     )
     pipe3.run_until_idle(input_dir)
     assert pipe3.results().count() == 0
+
+
+def test_late_rows_replay_matches_first_attempt(spark, workdir):
+    """``late_rows`` is part of a batch's committed metrics, so a batch
+    replayed after a crash between its data write and its commit marker
+    must count what its first attempt counted. Batch 1 holds turns at
+    +1 h and +3 h: against batch 0's high watermark neither is late, but
+    against a watermark already advanced to +3 h the +1 h turn would be."""
+    t0 = datetime.datetime(2024, 1, 1)
+    hour = datetime.timedelta(hours=1)
+    b0 = spark.createDataFrame([("a", 0, "user", "hello", "", t0)], TRANSCRIPT_SCHEMA)
+    b1 = spark.createDataFrame(
+        [("a", 1, "user", "hi", "", t0 + hour), ("b", 0, "user", "hello", "", t0 + 3 * hour)],
+        TRANSCRIPT_SCHEMA,
+    )
+    pipe = RuleStreamPipeline(spark, RULES, os.path.join(workdir, "p"))
+    pipe.process_batch(b0, 0)
+    pipe.process_batch(b1, 1)
+    clean = pipe.sink.metrics()[-1]
+    assert clean["batch_id"] == 1 and clean["late_rows"] == 0
+
+    # crash after batch 1's state merges and data files, before its marker
+    os.remove(os.path.join(pipe.sink.commit_dir, "1.json"))
+    replay = RuleStreamPipeline(spark, RULES, os.path.join(workdir, "p"))
+    replay.process_batch(b1, 1)
+    again = replay.sink.metrics()[-1]
+    assert again["batch_id"] == 1
+    assert again["late_rows"] == clean["late_rows"]
+    assert again["high_watermark_epoch"] == clean["high_watermark_epoch"]
 
 
 def test_cep_state_fn_out_of_order():
