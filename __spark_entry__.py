@@ -1238,7 +1238,7 @@ def _query_vec(spark, sf_dir):
 
 
 def _cosine_topk(spark, sf_dir):
-    from osprey_spark.operators.similarity import cosine_topk, dot, l2_norm
+    from osprey_spark.operators.similarity import cosine_topk
 
     # no transform() cast (r7): the Arrow cosine kernel promotes float32
     # embeddings to float64 before the norm, bit-identical to a pre-cast

@@ -38,6 +38,11 @@ def _keys(key: KeyArg) -> list[str]:
     return [key] if isinstance(key, str) else list(key)
 
 
+def _micros(ts_col: str) -> Column:
+    """Exact event time in microseconds (``TIMESTAMP_NTZ`` cast first)."""
+    return F.unix_micros(F.col(ts_col).cast("timestamp"))
+
+
 def sessionize(
     df: DataFrame,
     key: KeyArg = "conv_id",
@@ -48,12 +53,13 @@ def sessionize(
     """Assign gap-based session ids within each key.
 
     A new session starts when the gap to the previous event exceeds
-    ``gap_seconds``. ``session_id`` = 0-based index within the key."""
+    ``gap_seconds``, compared in exact microseconds.
+    ``session_id`` = 0-based index within the key."""
     keys = _keys(key)
     w = Window.partitionBy(*keys).orderBy(F.col(ts_col))
-    ts = F.unix_timestamp(F.col(ts_col))
+    ts = _micros(ts_col)
     prev = F.lag(ts).over(w)
-    new_session = (prev.isNull() | ((ts - prev) > gap_seconds)).cast("long")
+    new_session = (prev.isNull() | ((ts - prev) > gap_seconds * 1_000_000)).cast("long")
     return df.withColumn(
         session_col,
         F.sum(new_session).over(
@@ -111,18 +117,22 @@ def match_sequence(
     if within_seconds is not None:
         if ts_col is None:
             raise ValueError("within_seconds requires ts_col")
-        ev_fields.insert(1, F.unix_timestamp(F.col(ts_col)).alias("t"))
+        ev_fields.insert(1, _micros(ts_col).alias("t"))
     ev = F.struct(*ev_fields)
 
     # Collect only PATTERN-RELEVANT events (r7): a row whose step flags
-    # are all false can never change the fold state — without
-    # within_seconds it never advances; with it, expiry is recomputed
-    # from (e.t - t0) at every event, so dropping an intermediate
-    # non-matching event leaves the next relevant event's expiry check
-    # (and therefore the state trajectory) identical. collect_list skips
-    # nulls, so the when() guard shrinks both the shuffled partial
-    # aggregates and the per-key interpreted fold to the matching subset
-    # while every key keeps its output row.
+    # are all false never advances the fold. With within_seconds it could
+    # still expire a running attempt, and that is where dropping it
+    # changes results: when event time is not monotonic in order_col, a
+    # non-matching event with a late timestamp between two steps no
+    # longer resets the attempt. That is the intended semantics — only
+    # the pattern's own events drive the within_seconds clock (pinned by
+    # test_match_sequence_prefilter_ignores_irrelevant_rows, case w1);
+    # with monotonic time the results are the same either way, because
+    # expiry is recomputed from (e.t - t0) at every relevant event.
+    # collect_list skips nulls, so the when() guard shrinks both the
+    # shuffled partial aggregates and the per-key interpreted fold to the
+    # matching subset while every key keeps its output row.
     relevant = F.array_contains(flags, F.lit(True))
     grouped = df.groupBy(*keys).agg(
         F.sort_array(F.collect_list(F.when(relevant, ev))).alias("evs")
@@ -139,7 +149,7 @@ def match_sequence(
         def step_fn(acc, e):
             s, t0 = acc["s"], acc["t0"]
             # expire the running attempt if the span exceeds the bound
-            expired = (s > 0) & ((e["t"] - t0) > within_seconds)
+            expired = (s > 0) & ((e["t"] - t0) > within_seconds * 1_000_000)
             s_eff = F.when(expired, F.lit(0)).otherwise(s)
             t0_eff = F.when(expired, F.lit(0).cast("long")).otherwise(t0)
             advance = (s_eff < n) & e["f"][s_eff]

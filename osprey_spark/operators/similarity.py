@@ -2,7 +2,7 @@
 
 - ``cosine_topk``: brute-force exact top-k for one query vector — a
   single scan + TakeOrderedAndProject (no shuffle of the data, only the
-  k winners); the dot product is a native zip_with/aggregate.
+  k winners); the cosine is an Arrow-batched numpy matmul.
 - ``knn_join``: batch top-k for a whole table of queries via broadcast
   of the (small) query side + per-query window top-k.
 - ``lsh_topk``: the scale path — random-hyperplane bucket pruning with
@@ -19,18 +19,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-
-
-def _lit_vec(q: Sequence[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in q])
 
 
 def _query_cosine_udf(query: Sequence[float]):
@@ -77,21 +65,15 @@ def cosine_topk(
     k: int = 10,
     emb_col: str = "embedding",
     id_col: str = "vec_id",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Exact cosine top-k for one query vector. Columns: id, cosine.
 
-    Default path: Arrow-batched numpy matmul per partition →
-    TakeOrderedAndProject (only k winners shuffle). ``use_arrow=False``
-    keeps the pure-Column reference implementation."""
-    if use_arrow:
-        cos = _query_cosine_udf(query)(F.col(emb_col))
-    else:
-        q = _lit_vec(query)
-        qn = float(np.linalg.norm(np.asarray(query, dtype="float64"))) or 1.0
-        cos = dot(F.col(emb_col), q) / (l2_norm(F.col(emb_col)) * F.lit(qn))
+    Arrow-batched numpy matmul per partition → TakeOrderedAndProject
+    (only k winners shuffle). The cosine is ordered and returned
+    unrounded, so a caller that rounds for display rounds once."""
+    cos = _query_cosine_udf(query)(F.col(emb_col))
     return (
-        df.select(F.col(id_col), F.round(cos, 6).alias("cosine"))
+        df.select(F.col(id_col), cos.alias("cosine"))
         .orderBy(F.desc("cosine"), F.asc(id_col))
         .limit(k)
     )
@@ -109,8 +91,8 @@ def knn_join(
 ) -> DataFrame:
     """Top-k neighbors for every query row: broadcast the query side,
     score all pairs, keep k per query with a window. The operator's
-    contract is a broadcastable query side; ``max_query_rows`` enforces
-    it with one bounded count (``limit(n+1).count()`` — never a full
+    contract is a query side small enough to broadcast; ``max_query_rows``
+    enforces it with one bounded count (``limit(n+1).count()`` — never a full
     count of an unbounded side) and raises past the limit instead of
     letting the driver OOM mid-broadcast.
 

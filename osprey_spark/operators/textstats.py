@@ -34,11 +34,13 @@ def token_count(text: Column) -> Column:
     """Count of whitespace tokens.
 
     ``size(split(btrim(text), '\\s+'))`` with an explicit empty-string
-    case (r7): equivalent to ``size(tokens(text))`` — after btrim, a
-    ``\\s+`` split can only yield an empty token for the empty string —
-    but free of the higher-order ``filter``, which Spark never
+    case (r7), free of the higher-order ``filter``, which Spark never
     whole-stage-codegens (one HOF demotes the whole projection to
-    interpreted mode)."""
+    interpreted mode). ``btrim`` strips only ASCII spaces, as the DuckDB
+    oracle's ``trim`` does, so leading or trailing tabs and newlines split
+    off an empty token that counts: ``'\\thello'`` is 2 here but 1 under
+    ``size(tokens(text))``, which filters empties out. The count equals
+    ``size(tokens(text))`` when the text has no such edge whitespace."""
     trimmed = F.btrim(text)
     return F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
         F.size(F.split(trimmed, WORD_SPLIT))

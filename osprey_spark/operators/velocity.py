@@ -101,6 +101,17 @@ def windowed_distinct(
     )
 
 
+def _trailing_window(key: KeyArg, window_seconds: int, ts_col: str):
+    """Range frame over the ``window_seconds`` before each event, ordered
+    by exact event time in microseconds (``unix_timestamp`` would truncate
+    to whole seconds and admit events up to 1 s outside the window)."""
+    return (
+        Window.partitionBy(*_keys(key))
+        .orderBy(F.unix_micros(F.col(ts_col).cast("timestamp")))
+        .rangeBetween(-window_seconds * 1_000_000, 0)
+    )
+
+
 def attach_trailing_count(
     df: DataFrame,
     key: KeyArg,
@@ -110,12 +121,9 @@ def attach_trailing_count(
 ) -> DataFrame:
     """Per-event trailing-window count — ReadCounter(key, window_seconds,
     'standard') evaluated at each event's own time (counters.py:11-56)."""
-    w = (
-        Window.partitionBy(*_keys(key))
-        .orderBy(F.unix_timestamp(F.col(ts_col)))
-        .rangeBetween(-window_seconds, 0)
+    return df.withColumn(
+        out_col, F.count(F.lit(1)).over(_trailing_window(key, window_seconds, ts_col))
     )
-    return df.withColumn(out_col, F.count(F.lit(1)).over(w))
 
 
 def attach_trailing_distinct(
@@ -131,11 +139,7 @@ def attach_trailing_distinct(
     Window functions can't do count_distinct over a range frame, so this
     collects the trailing set and sizes it — bounded by per-key window
     volume; use the bucketed shape at scale."""
-    w = (
-        Window.partitionBy(*_keys(key))
-        .orderBy(F.unix_timestamp(F.col(ts_col)))
-        .rangeBetween(-window_seconds, 0)
-    )
+    w = _trailing_window(key, window_seconds, ts_col)
     return df.withColumn(
         out_col, F.size(F.array_distinct(F.collect_list(F.col(distinct_col)).over(w)))
     )

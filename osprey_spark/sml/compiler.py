@@ -121,7 +121,7 @@ class CustomEffectEntry:
 class LabelLookup:
     """A HasLabel site: resolved by joining label state onto the input
     before the expression plan runs (stdlib/udfs/labels.py:159-311 reads
-    the labels service; here it is a broadcast left join, state as-of the
+    the labels service; here it is a left join, state as-of the
     previous batch — see streaming/label_state.py)."""
 
     col_name: str
@@ -258,7 +258,6 @@ class CompiledRuleset:
         self,
         df: DataFrame,
         label_state: Optional[DataFrame],
-        force_broadcast: bool = True,
         unique_label_state: bool = False,
     ) -> DataFrame:
         """Attach one boolean column per HasLabel site via left joins
@@ -285,11 +284,11 @@ class CompiledRuleset:
         - ``error_on_empty``: an entity with NO label rows at all fails
           the lookup (null result + __error_count), fail-closed
 
-        ``force_broadcast=False`` drops the broadcast hint and lets AQE
-        pick the join strategy from runtime sizes — required when the
-        state snapshot may exceed the driver's broadcast capacity.
-        Already-resolved columns are left untouched, so composing
-        ``resolve_label_lookups`` + ``apply`` never double-joins.
+        The joins carry no hint: Spark's planner broadcasts the state side
+        while its estimated size is under ``autoBroadcastJoinThreshold``
+        and shuffles it past that. Already-resolved columns are left
+        untouched, so composing ``resolve_label_lookups`` + ``apply``
+        never double-joins.
 
         ``label_state`` is left-joined on (entity_type, entity_id,
         label_name): a table with MULTIPLE rows per key would fan out
@@ -307,7 +306,6 @@ class CompiledRuleset:
         ruleset with K HasLabel sites on the same entity costs one
         probe-side join, not K (each join re-shuffles or re-broadcasts
         the event stream — at 10^12 turns the probe side dominates)."""
-        maybe_bcast = F.broadcast if force_broadcast else (lambda x: x)
         pending = [
             lk for lk in self.label_lookups or [] if lk.col_name not in df.columns
         ]  # already-resolved columns pass through untouched
@@ -337,7 +335,7 @@ class CompiledRuleset:
                 rows = self._grouped_site_rows(label_state, sites, multi_reason)
             eid = f"{sites[0].col_name}_eid"
             cond = sites[0].entity_id_col.cast("string") == F.col(eid)
-            df = df.join(maybe_bcast(rows), on=cond, how="left").drop(eid)
+            df = df.join(rows, on=cond, how="left").drop(eid)
             for lk in sites:
                 df = self._finish_site(df, lk, multi_reason)
         return df
@@ -544,14 +542,9 @@ class CompiledRuleset:
             f"{sfx}_st", f"{sfx}_cr", f"{sfx}_exp", f"{sfx}_rsn", f"{sfx}_any"
         )
 
-    def output_columns(self, include_internal: bool = True) -> list[Column]:
-        cols: list[Column] = []
-        for f in self.features:
-            if f.extracted:
-                cols.append(f.col.alias(f.name))
-        if include_internal:
-            cols.extend(self.internal_columns())
-        return cols
+    def output_columns(self) -> list[Column]:
+        cols = [f.col.alias(f.name) for f in self.features if f.extracted]
+        return cols + self.internal_columns()
 
     def internal_columns(self) -> list[Column]:
         cols = []
@@ -635,10 +628,8 @@ class CompiledRuleset:
         self,
         df: DataFrame,
         passthrough: Optional[list[str]] = None,
-        include_internal: bool = True,
         label_state: Optional[DataFrame] = None,
         include_mutation_structs: bool = False,
-        force_broadcast: bool = True,
         unique_label_state: bool = False,
     ) -> DataFrame:
         """Evaluate the whole ruleset for every row of ``df`` in one
@@ -653,13 +644,10 @@ class CompiledRuleset:
         the plan."""
         pt = passthrough if passthrough is not None else df.columns
         df = self.resolve_label_lookups(
-            df,
-            label_state,
-            force_broadcast=force_broadcast,
-            unique_label_state=unique_label_state,
+            df, label_state, unique_label_state=unique_label_state
         )
         cols = [F.col(c) for c in pt]
-        cols.extend(self.output_columns(include_internal=include_internal))
+        cols.extend(self.output_columns())
         if include_mutation_structs:
             cols.append(self.label_mutation_structs_col().alias(self.MUTATION_STRUCTS_COL))
         return df.select(*cols)

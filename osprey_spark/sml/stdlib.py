@@ -250,7 +250,7 @@ def _ban_user(comp, call, args):
 
 def _has_label(comp, call, args):
     """HasLabel (stdlib/udfs/labels.py:159-311): reads per-entity label
-    state. Compiles to a hidden boolean column resolved by a broadcast
+    state. Compiles to a hidden boolean column resolved by a left
     join against the label-state table in ``CompiledRuleset.apply``
     (state as-of the previous batch — reads never see same-batch writes,
     matching output_sink.py:186-211 ordering). Expired labels are absent."""

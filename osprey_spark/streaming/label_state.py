@@ -17,7 +17,7 @@ worker/lib/storage/labels.py):
   itself applies the state change immediately, as the reference's
   LabelOutputSink does.
 
-Storage: ``HashPartitionedStateStore`` in merge-on-read mode — a batch
+Storage: ``MorStateStore`` in merge-on-read mode — a batch
 APPENDS only its per-key mutation winners as one generation directory
 (O(|delta|) writes, no read of current state), and readers resolve
 base+deltas with :func:`label_resolver`. The round-2/3 copy-on-write
@@ -48,7 +48,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from osprey_spark.streaming.state_store import GEN_COL, HashPartitionedStateStore
+from osprey_spark.streaming.state_store import GEN_COL, MorStateStore
 
 STATE_SCHEMA = (
     "entity_type string, entity_id string, label_name string, "
@@ -90,12 +90,11 @@ class LabelStateStore:
         path: str,
         max_delta_files: int = 8,
     ):
-        self.store = HashPartitionedStateStore(
+        self.store = MorStateStore(
             path,
-            key_cols=KEY,
             schema=STATE_SCHEMA,
-            max_delta_files=max_delta_files,
             resolve_fn=label_resolver,
+            max_delta_files=max_delta_files,
         )
         self.path = path
 
@@ -105,12 +104,6 @@ class LabelStateStore:
     @property
     def last_merge_stats(self) -> dict:
         return self.store.last_merge_stats
-
-    def approx_size_bytes(self) -> int:
-        return self.store.approx_size_bytes()
-
-    def broadcastable(self) -> bool:
-        return self.store.broadcastable()
 
     def read(self, spark: SparkSession, before_batch: Optional[int] = None) -> DataFrame:
         return self.store.read(spark, before_batch=before_batch)

@@ -42,7 +42,7 @@ from osprey_spark.sml.validators import validate_sources
 from osprey_spark.streaming._timeutil import interval_seconds
 from osprey_spark.streaming.label_state import LabelStateStore
 from osprey_spark.streaming.sink import IdempotentParquetSink
-from osprey_spark.streaming.state_store import HashPartitionedStateStore
+from osprey_spark.streaming.state_store import MorStateStore
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -127,9 +127,8 @@ class RuleStreamPipeline:
         # plain SUM over base+delta rows — each batch appends only its
         # per-conv increments (O(|delta|)); lazy compaction folds the
         # store once its live generation count passes the threshold
-        self.verdict_state = HashPartitionedStateStore(
+        self.verdict_state = MorStateStore(
             os.path.join(workdir, "verdict_state"),
-            key_cols=[key_col],
             schema=f"{key_col} string, prior_verdict_count long",
             resolve_fn=lambda df: df.groupBy(key_col).agg(
                 F.sum("prior_verdict_count").alias("prior_verdict_count")
@@ -226,7 +225,6 @@ class RuleStreamPipeline:
             passthrough=pt,
             label_state=label_state,
             include_mutation_structs=True,
-            force_broadcast=self.labels.broadcastable(),
             # the store MERGEs on (entity_type, entity_id, label_name) —
             # one row per key by construction, skip the defensive collapse
             unique_label_state=True,
@@ -234,13 +232,10 @@ class RuleStreamPipeline:
         if self.track_verdict_state:
             # stream-state join: each turn sees verdicts accumulated in
             # PRIOR batches only (reads-before-writes ordering, matching
-            # the reference's labels: output_sink.py:186-211)
+            # the reference's labels: output_sink.py:186-211). No join
+            # hint: the planner broadcasts the state while its scan is
+            # under autoBroadcastJoinThreshold and shuffles it past that
             prior = self.prior_verdict_counts(before_batch=batch_id)
-            # broadcast only while verifiably small (same guard as
-            # HasLabel): a long-lived stream's verdict state can outgrow
-            # the driver's broadcast capacity — then AQE picks the join
-            if self.verdict_state.broadcastable():
-                prior = F.broadcast(prior)
             out = out.join(prior, on=self.key_col, how="left").withColumn(
                 "prior_verdict_count",
                 F.coalesce(F.col("prior_verdict_count"), F.lit(0)),

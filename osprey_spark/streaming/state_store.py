@@ -9,16 +9,16 @@ per-batch O(|state|) rewrite is a scale-killer.
 One write path, merge-on-read (``merge_append``): a batch appends ONLY
 its delta rows as one new generation directory ``d{v}`` — O(|delta|)
 writes, no read of current state at all — and ``read()`` resolves
-base+deltas to one row per key with a caller-supplied associative
-``resolve_fn`` (default: latest generation wins, Iceberg MOR's
-equality-delete semantics). The round-3 full-stack run showed why a
-copy-on-write rewrite cannot serve here: with dense deltas every key
-range is dirty each batch, so the rewrite grows with the whole flagged
-set (15.5k→47.9k rows/batch). Once the live generations exceed
-``max_delta_files``, the merge that trips the threshold folds all of
-them into one resolved base ``d{v}x`` (per-store compaction), bounding
-read amplification at ``max_delta_files + 1`` directories while keeping
-amortized write cost O(|delta|). On dense traffic nearly every key range
+base+deltas to one row per key with the store's associative
+``resolve_fn`` (the label store keeps the latest manual-else-latest
+mutation, the verdict store sums counts). The round-3 full-stack run
+showed why a copy-on-write rewrite cannot serve here: with dense deltas
+every key range is dirty each batch, so the rewrite grows with the
+whole flagged set (15.5k→47.9k rows/batch). Once the live generations
+exceed ``max_delta_files``, the merge that trips the threshold folds all
+of them into one resolved base ``d{v}x`` (per-store compaction),
+bounding read amplification at ``max_delta_files + 1`` directories
+while keeping amortized write cost O(|delta|). On dense traffic nearly every key range
 is touched by every merge, so folding the whole store writes about what
 a per-range fold would; and every batch already reads the whole state.
 
@@ -37,10 +37,7 @@ swap, delta generations are equality-delete + data files, lazy
 compaction is ``rewrite_data_files``, ``before_batch`` reads are
 time-travel. On a real cluster the same class works over an object
 store path; with Iceberg jars present ``merge_append`` becomes an
-append and ``read`` a MOR scan. Manifests written by the earlier
-per-bucket layout (many keys of ``d{v}/__state_part=b`` dirs) read as
-the union of their lists, so such a state directory resumes and is
-folded by the next compaction.
+append and ``read`` a MOR scan.
 
 Exactly-once: the pointer records the last applied ``batch_id``; a
 replayed merge of the same batch is a no-op, and ``read(before_batch=b)``
@@ -73,47 +70,26 @@ from pyspark.sql import functions as F
 # PushedFilters).
 GEN_COL = "__state_gen"
 _GEN_DIR_RE = re.compile(r"^d\d+x?$")
-# under this snapshot size a state read is force-broadcast into its
-# join; above it the hint is omitted and AQE picks broadcast vs shuffle
-# from runtime sizes (a hot label over millions of entities, or a
-# long-lived stream's verdict state, must not be forced through the
-# driver)
-BROADCAST_BYTES = 32 * 1024 * 1024
 # the manifest's single ``buckets`` key: every live generation is listed
 # under it, oldest → newest
 _LIVE = "0"
 
 
-def latest_wins(df: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Default MOR resolution: the newest generation's row wins per key
-    (Iceberg equality-delete semantics). One hash aggregation with
-    map-side partial combine; no window sort."""
-    payload_cols = [c for c in df.columns if c not in (*key_cols, GEN_COL)]
-    payload = F.struct(*[F.col(c) for c in payload_cols])
-    return (
-        df.groupBy(*key_cols)
-        .agg(F.max_by(payload, F.col(GEN_COL)).alias("_r"))
-        .select(*key_cols, "_r.*")
-    )
-
-
-class HashPartitionedStateStore:
+class MorStateStore:
     def __init__(
         self,
         path: str,
-        key_cols: list[str],
         schema: str,
+        resolve_fn: Callable[[DataFrame], DataFrame],
         max_delta_files: int = 8,
-        resolve_fn: Optional[Callable[[DataFrame], DataFrame]] = None,
     ):
         """``resolve_fn(df) -> df`` collapses rows to one per key. It
         receives the raw base+delta rows with an extra ``__state_gen``
         long column (monotone write order) and must be ASSOCIATIVE and
         insensitive to physical row order — compaction applies it to any
         prefix of the live generations and the result must resolve
-        identically against later deltas. Default: :func:`latest_wins`."""
+        identically against later deltas."""
         self.path = path
-        self.key_cols = key_cols
         self.schema = schema  # DDL string of the full state row
         self.max_delta_files = max_delta_files
         self.resolve_fn = resolve_fn
@@ -142,43 +118,21 @@ class HashPartitionedStateStore:
         return self.pointer()["batch_id"]
 
     def _load_manifest(self, version: int) -> dict:
-        """Manifest document
-        ``{"buckets": {"0": [live generation dirs]}, "stats": {rel → [rows, bytes]}}``.
-        Older documents are read compatibly: the per-bucket layout's many
-        keys fold into the one list (the union of their dirs), and
-        pre-round-5 manifests were the bare ``buckets`` mapping (no
-        stats)."""
+        """Manifest document ``{"buckets": {"0": [live generation dirs]}}``."""
         if version < 0:
-            return {"buckets": {}, "stats": {}}
+            return {"buckets": {}}
         with open(self._manifest_file(version)) as f:
-            raw = json.load(f)
-        if "buckets" not in raw:
-            raw = {"buckets": raw, "stats": {}}
-        live = []
-        for rels in raw["buckets"].values():
-            live.extend([rels] if isinstance(rels, str) else rels)
-        raw["buckets"] = {_LIVE: live} if live else {}
-        raw.setdefault("stats", {})
-        return raw
+            return json.load(f)
 
     def _live(self, version: int) -> list[str]:
         """Live data dirs of ``version`` (resolution orders rows by their
         stamped generation, not by list position)."""
         return self._load_manifest(version)["buckets"].get(_LIVE, [])
 
-    def _publish(
-        self,
-        live: list[str],
-        batch_id: Optional[int],
-        stats: dict[str, list[int]],
-    ) -> int:
-        # keep stats only for rels still referenced (manifest-carried file
-        # statistics, the Iceberg manifest-metrics analog: size queries
-        # never re-stat the data tree)
-        stats = {rel: s for rel, s in stats.items() if rel in live}
+    def _publish(self, live: list[str], batch_id: Optional[int]) -> int:
         v = self.current_version() + 1
         with open(self._manifest_file(v), "w") as f:
-            json.dump({"buckets": {_LIVE: live}, "stats": stats}, f)
+            json.dump({"buckets": {_LIVE: live}}, f)
         tmp = self._pointer_file() + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"version": v, "batch_id": batch_id}, f)
@@ -188,15 +142,13 @@ class HashPartitionedStateStore:
     # -- reads ----------------------------------------------------------------
 
     def _empty(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame([], self.schema)
+        # limit(0) optimizes to an empty local relation, which the
+        # optimizer folds out of a join; a bare empty RDD has no size
+        # estimate, so a join against it would shuffle the whole batch
+        return spark.createDataFrame([], self.schema).limit(0)
 
     def _data_schema(self) -> str:
         return f"{self.schema}, {GEN_COL} long"
-
-    def _resolve(self, df: DataFrame) -> DataFrame:
-        if self.resolve_fn is not None:
-            return self.resolve_fn(df)
-        return latest_wins(df, self.key_cols)
 
     def _scan(self, spark: SparkSession, live: list[str]) -> DataFrame:
         if not live:
@@ -206,7 +158,7 @@ class HashPartitionedStateStore:
         )
         if len(live) > 1:
             # merge-on-read: un-compacted deltas on top of the base
-            return self._resolve(df)
+            return self.resolve_fn(df)
         return df.drop(GEN_COL)
 
     def read(
@@ -225,31 +177,6 @@ class HashPartitionedStateStore:
             return self._empty(spark)
         return self._scan(spark, self._live(v))
 
-    def approx_size_bytes(self) -> int:
-        """Total bytes of the current snapshot's live data files, from the
-        MANIFEST-CARRIED stats recorded at publish time — a dict sum, no
-        filesystem walk (this runs in the per-batch path via the broadcast
-        guard; a glob-stat of every live file degrades linearly with the
-        live file count). Rels from pre-stats manifests fall back to
-        a one-off stat walk. With pending deltas this over-counts the
-        resolved size, which is the safe direction for a broadcast
-        guard."""
-        doc = self._load_manifest(self.current_version())
-        total = 0
-        for rel in doc["buckets"].get(_LIVE, []):
-            s = doc["stats"].get(rel)
-            if s is not None:
-                total += int(s[1])
-            else:  # legacy manifest without stats
-                for fp in glob.glob(os.path.join(self.path, rel, "*.parquet")):
-                    total += os.path.getsize(fp)
-        return total
-
-    def broadcastable(self) -> bool:
-        """Whether a join against this store's snapshot may force a
-        broadcast (see ``BROADCAST_BYTES``)."""
-        return self.approx_size_bytes() < BROADCAST_BYTES
-
     # -- merge-on-read write path ---------------------------------------------
 
     def merge_append(self, delta: DataFrame, batch_id: Optional[int] = None) -> int:
@@ -264,8 +191,7 @@ class HashPartitionedStateStore:
             return self.current_version()  # replay → already applied
         v = self.current_version() + 1
         gen_dir = f"d{v}"
-        appended = self._write_generation(delta, gen_dir, v)
-        rows_appended = appended[0]
+        rows_appended = self._write_generation(delta, gen_dir, v)
         if rows_appended == 0:
             # empty delta: no state change → nothing to version (replaying
             # an empty merge is naturally idempotent)
@@ -277,17 +203,14 @@ class HashPartitionedStateStore:
             }
             return self.current_version()
 
-        doc = self._load_manifest(v - 1)
-        live = doc["buckets"].get(_LIVE, []) + [gen_dir]
-        stats = {**doc["stats"], gen_dir: appended}
+        live = self._live(v - 1) + [gen_dir]
 
         # lazy compaction: fold every live generation into one base
         rows_compacted = 0
         if len(live) > self.max_delta_files:
             cdir = f"d{v}x"
             folded = self._scan(delta.sparkSession, live)
-            stats[cdir] = self._write_generation(folded, cdir, v)
-            rows_compacted = stats[cdir][0]
+            rows_compacted = self._write_generation(folded, cdir, v)
             live = [cdir]
 
         self.last_merge_stats = {
@@ -297,16 +220,16 @@ class HashPartitionedStateStore:
             # amortized compaction — O(|delta|) steady-state, NOT O(|state|)
             "rows_rewritten": rows_appended + rows_compacted,
         }
-        self._publish(live, batch_id, stats)
+        self._publish(live, batch_id)
         return v
 
-    def _write_generation(self, df: DataFrame, rel: str, v: int) -> list[int]:
+    def _write_generation(self, df: DataFrame, rel: str, v: int) -> int:
         """Write ``df`` stamped with generation ``v`` as the directory
         ``rel`` (overwriting what a crashed attempt left there); returns
-        its ``[rows, bytes]``."""
+        its row count."""
         full = os.path.join(self.path, rel)
         df.withColumn(GEN_COL, F.lit(v)).write.mode("overwrite").parquet(full)
-        return _dir_stats(full)
+        return _dir_rows(full)
 
     # -- snapshot expiry --------------------------------------------------------
 
@@ -332,8 +255,7 @@ class HashPartitionedStateStore:
         live_gens: set[str] = set()
         for v in keep:
             try:
-                for rel in self._live(v):
-                    live_gens.add(rel.split("/", 1)[0])
+                live_gens.update(self._live(v))
             except FileNotFoundError:
                 continue
         removed = 0
@@ -350,16 +272,12 @@ class HashPartitionedStateStore:
         return removed
 
 
-def _dir_stats(directory: str) -> list[int]:
-    """``[rows, bytes]`` from parquet footers + file sizes — a one-time
-    driver-side metadata read at PUBLISH, recorded into the manifest so
-    later size queries (``approx_size_bytes``, the broadcast guard) are
-    dict lookups, never filesystem walks (the Iceberg manifest-statistics
-    analog)."""
+def _dir_rows(directory: str) -> int:
+    """Rows in ``directory``'s parquet files, from their footers (a
+    metadata read in this process, no Spark job)."""
     import pyarrow.parquet as pq
 
-    rows = size = 0
-    for fp in glob.glob(os.path.join(directory, "*.parquet")):
-        rows += pq.ParquetFile(fp).metadata.num_rows
-        size += os.path.getsize(fp)
-    return [rows, size]
+    return sum(
+        pq.ParquetFile(fp).metadata.num_rows
+        for fp in glob.glob(os.path.join(directory, "*.parquet"))
+    )

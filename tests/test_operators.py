@@ -21,7 +21,8 @@ def transcripts(spark):
 
 
 def test_trailing_count(spark):
-    rows = [("k1", ts(0)), ("k1", ts(10)), ("k1", ts(100)), ("k2", ts(5))]
+    rows = [("k1", ts(0)), ("k1", ts(10)), ("k1", ts(100)), ("k2", ts(5)),
+            ("k3", ts(0.2)), ("k3", ts(30.7))]
     df = spark.createDataFrame(rows, "key string, ts timestamp")
     out = velocity.attach_trailing_count(df, "key", window_seconds=30)
     got = {(r["key"], r["ts"]): r["trailing_count"] for r in out.collect()}
@@ -29,6 +30,8 @@ def test_trailing_count(spark):
     assert got[("k1", ts(10))] == 2
     assert got[("k1", ts(100))] == 1  # outside the 30s trailing window
     assert got[("k2", ts(5))] == 1
+    # 30.5 s apart in exact time, though the whole seconds differ by 30
+    assert got[("k3", ts(30.7))] == 1
 
 
 def test_tumbling_and_two_stage_agree(spark, transcripts):
@@ -46,10 +49,12 @@ def test_windowed_distinct_exact(spark):
 
 
 def test_sessionize_gap(spark):
-    rows = [("c", 0, ts(0)), ("c", 1, ts(30)), ("c", 2, ts(50) + datetime.timedelta(hours=1))]
+    rows = [("c", 0, ts(0)), ("c", 1, ts(30)), ("c", 2, ts(50) + datetime.timedelta(hours=1)),
+            # 00:00:00.2 -> 00:30:00.9 is an 1800.7 s gap in exact time
+            ("d", 0, ts(0.2)), ("d", 1, ts(1800.9))]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, ts timestamp")
-    out = sessions.sessionize(df, gap_seconds=1800).orderBy("turn_idx").collect()
-    assert [r["session_id"] for r in out] == [0, 0, 1]
+    out = sessions.sessionize(df, gap_seconds=1800).orderBy("conv_id", "turn_idx").collect()
+    assert [r["session_id"] for r in out] == [0, 0, 1, 0, 1]
 
 
 def test_session_agg(spark):
@@ -85,6 +90,7 @@ def test_match_sequence_within(spark):
     rows = [
         ("c1", 0, ts(0), "search"), ("c1", 1, ts(5), "code_exec"), ("c1", 2, ts(10), "send_email"),
         ("c2", 0, ts(0), "search"), ("c2", 1, ts(5), "code_exec"), ("c2", 2, ts(50), "send_email"),
+        ("c3", 0, ts(0.2), "search"), ("c3", 1, ts(5), "code_exec"), ("c3", 2, ts(20.7), "send_email"),
     ]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, ts timestamp, tool string")
     steps = [F.col("tool") == "search", F.col("tool") == "code_exec", F.col("tool") == "send_email"]
@@ -92,6 +98,7 @@ def test_match_sequence_within(spark):
     got = {r["conv_id"]: r["matched"] for r in out.collect()}
     assert got["c1"] is True
     assert got["c2"] is False  # span 50s exceeds 20s bound
+    assert got["c3"] is False  # span 20.5s exceeds 20s bound in exact time
 
 
 def test_exact_dedup(spark):
@@ -143,6 +150,17 @@ def test_cosine_topk_and_lsh(spark):
     assert approx and approx[0]["vec_id"] == 0
 
 
+def test_cosine_topk_orders_by_exact_cosine(spark):
+    """Cosines 0.9000001 and 0.9000003 agree to 6 dp; the higher one still
+    ranks first, and both come back unrounded."""
+    rows = [(i, [c, (1 - c * c) ** 0.5]) for i, c in enumerate((0.9000001, 0.9000003))]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    top = similarity.cosine_topk(df, [1.0, 0.0], k=2).collect()
+    assert [r["vec_id"] for r in top] == [1, 0]
+    assert top[0]["cosine"] == pytest.approx(0.9000003, abs=1e-12)
+    assert top[1]["cosine"] == pytest.approx(0.9000001, abs=1e-12)
+
+
 def test_knn_join(spark):
     rows = [(i, [float(i == j) for j in range(4)]) for i in range(4)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
@@ -166,6 +184,18 @@ def test_textstats(spark):
                                 "doc_id long, text string")
     fp2 = textstats.attach_text_stats(df2).collect()[0]["fingerprint"]
     assert fp2 == out[0]["fingerprint"]
+
+
+def test_token_count_counts_edge_whitespace_token(spark):
+    """README "Semantics divergences": token_count trims spaces only (as
+    the DuckDB oracle does), so a leading tab splits off an empty token
+    that counts; size(tokens()) drops it."""
+    df = spark.createDataFrame([("\thello",), (" hello world ",)], "text string")
+    out = df.select(
+        textstats.token_count(F.col("text")).alias("n"),
+        F.size(textstats.tokens(F.col("text"))).alias("t"),
+    ).collect()
+    assert [(r["n"], r["t"]) for r in out] == [(2, 1), (2, 2)]
 
 
 def test_multimodal_plumbing(spark):

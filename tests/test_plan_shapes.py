@@ -226,3 +226,69 @@ def test_fully_compacted_store_read_is_plain_scan(spark, tmp_path):
     )
     assert "max_by" not in plan
     assert "Aggregate" not in plan  # no resolution: a single generation
+
+
+def test_state_joins_leave_strategy_to_the_planner(spark, tmp_path):
+    """A streaming batch joins label state (HasLabel) and verdict state
+    without a hint. Against empty stores the optimizer drops both joins
+    (no shuffle of the batch). Over small state the planner broadcasts
+    both; with both broadcast thresholds at -1 the same batch plans no
+    broadcast and returns the same rows."""
+    import datetime
+
+    from osprey_spark.streaming.pipeline import RuleStreamPipeline
+
+    rules = {
+        "main.sml": """
+ConvId: Entity[str] = EntityJson(type='Conversation', path='$.conv_id')
+Text: str = JsonData(path='$.text')
+Flagged = HasLabel(entity=ConvId, label='flagged')
+Hello = Rule(when_all=[TextContains(text=Text, phrase='hello')], description='d')
+Repeat = Rule(when_all=[Hello, Flagged], description='r')
+WhenRules(rules_any=[Hello], then=[DeclareVerdict(verdict='flag'), LabelAdd(entity=ConvId, label='flagged')])
+WhenRules(rules_any=[Repeat], then=[DeclareVerdict(verdict='repeat')])
+"""
+    }
+    frames = []
+
+    def capture(batch_df, out):
+        frames.append(out)
+        return out
+
+    pipe = RuleStreamPipeline(
+        spark, rules, str(tmp_path / "p"), track_verdict_state=True, post_plan=capture
+    )
+    t0 = datetime.datetime(2024, 1, 1)
+    for b in range(3):  # batch 2 reads two live generations of each store
+        rows = [(f"c{i}", b, "user", "hello" if i % 2 == 0 else "ok", "",
+                 t0 + datetime.timedelta(minutes=b)) for i in range(6)]
+        pipe.process_batch(spark.createDataFrame(rows, pipe.schema), b)
+
+    def run(batch):
+        df = batch.drop(pipe.plan.MUTATION_STRUCTS_COL)  # a fresh plan
+        rows = sorted(map(tuple, df.collect()))
+        qe = df._jdf.queryExecution()
+        final = qe.executedPlan().toString().split("== Initial Plan ==")[0]
+        return rows, qe.optimizedPlan().toString(), final
+
+    _, _, first = run(frames[0])
+    assert "Join" not in first and "Exchange" not in first, first
+
+    rows, logical, physical = run(frames[-1])
+    assert "strategy=broadcast" not in logical
+    assert physical.count("BroadcastHashJoin") == 2, physical
+    assert "SortMergeJoin" not in physical
+    assert any(r[-1] > 0 for r in rows)  # prior verdicts reached the batch
+
+    keys = ("spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    prev = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        rows_off, _, physical_off = run(frames[-1])
+    finally:
+        for k, v in prev.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+    assert "Broadcast" not in physical_off, physical_off
+    assert rows_off == rows

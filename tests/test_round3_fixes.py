@@ -178,10 +178,10 @@ def test_ngram_df_cap_is_opt_in_and_observable(spark):
 
 
 def test_expire_snapshots_with_stale_manifest_no_pointer(tmp_path):
-    from osprey_spark.streaming.state_store import HashPartitionedStateStore
+    from osprey_spark.streaming.state_store import MorStateStore
 
-    store = HashPartitionedStateStore(
-        str(tmp_path / "st"), key_cols=["k"], schema="k string, v long"
+    store = MorStateStore(
+        str(tmp_path / "st"), schema="k string, v long", resolve_fn=lambda df: df
     )
     # crash between manifest write and pointer publish on the first merge
     with open(store._manifest_file(0), "w") as f:

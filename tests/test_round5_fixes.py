@@ -1,5 +1,4 @@
-"""Round-5 hardening: manifest-carried size statistics (no per-batch
-filesystem walk), exactly-once replay after a crash between the two
+"""Round-5 hardening: exactly-once replay after a crash between the two
 state merges, and the label store against a sequential reference fold."""
 
 import datetime
@@ -13,42 +12,6 @@ MSCHEMA = (
     "entity_type string, entity_id string, label_name string, "
     "status int, event_ts timestamp, expires_ts timestamp"
 )
-
-
-def _muts(spark, ids, status=1, label="bad"):
-    return spark.createDataFrame(
-        [("User", f"u{i}", label, status, T0, None) for i in ids], MSCHEMA
-    )
-
-
-def _rows(df):
-    return sorted(map(tuple, df.collect()))
-
-
-def test_manifest_stats_survive_and_size_query_never_walks(spark, tmp_path):
-    """approx_size_bytes (the per-batch broadcast guard) must be a
-    manifest lookup: stats recorded at publish, carried through
-    compaction, and the query itself touches no filesystem glob."""
-    import os
-    from unittest import mock
-
-    from osprey_spark.streaming import state_store as ss
-
-    store = LabelStateStore(str(tmp_path / "labels"), max_delta_files=3)
-    for b in range(8):  # trips compaction (max_delta_files=3)
-        store.apply_mutations(_muts(spark, range(b * 10, b * 10 + 10)), batch_id=b)
-    doc = store.store._load_manifest(store.current_version())
-    live = {rel for rels in doc["buckets"].values() for rel in rels}
-    assert set(doc["stats"]) == live  # every live rel has stats, no dead ones
-    # stats match the actual files on disk
-    for rel, (rows, size) in doc["stats"].items():
-        d = os.path.join(store.path, rel)
-        files = [os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")]
-        assert size == sum(os.path.getsize(f) for f in files)
-    expect = sum(s[1] for s in doc["stats"].values())
-    with mock.patch.object(ss.glob, "glob", side_effect=AssertionError("fs walk!")):
-        assert store.approx_size_bytes() == expect
-        assert isinstance(store.broadcastable(), bool)
 
 
 def test_crash_between_concurrent_state_merges_replays_exactly_once(spark, tmp_path):

@@ -177,12 +177,15 @@ def test_match_sequence_prefilter_ignores_irrelevant_rows(spark):
     ]
     df2 = spark.createDataFrame(rows2, "u string, i int, e string, ts timestamp")
     out2 = {
-        r["u"]: r["matched"]
+        r["u"]: (r["matched"], r["match_step"])
         for r in match_sequence(
             df2, steps, key="u", order_col="i", ts_col="ts", within_seconds=50
         ).collect()
     }
-    assert out2 == {"w1": True, "w2": False}
+    # w1: the late junk row does not expire the attempt (only pattern
+    # events drive the clock); w2: b at 100 s expires a's attempt, and b
+    # cannot start a new one
+    assert out2 == {"w1": (True, 2), "w2": (False, 0)}
 
 
 # -- watermark metadata probe (VERDICT r6 item 6) ----------------------------

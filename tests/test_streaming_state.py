@@ -7,7 +7,6 @@ can never lose a batch's mutations; HasLabel-dependent label rules
 resolve against the evaluated frame."""
 
 import datetime
-import json
 import os
 
 import pytest
@@ -15,7 +14,7 @@ from pyspark.sql import functions as F
 
 from osprey_spark.streaming.label_state import LabelStateStore
 from osprey_spark.streaming.pipeline import RuleStreamPipeline
-from osprey_spark.streaming.state_store import HashPartitionedStateStore
+from osprey_spark.streaming.state_store import MorStateStore
 
 T0 = datetime.datetime(2024, 1, 1)
 MSCHEMA = (
@@ -144,9 +143,8 @@ def test_state_read_launches_no_spark_job(spark, tmp_path):
 
 
 def _sum_store(path, max_delta_files):
-    return HashPartitionedStateStore(
+    return MorStateStore(
         path,
-        key_cols=["k"],
         schema="k string, n long",
         max_delta_files=max_delta_files,
         resolve_fn=lambda df: df.groupBy("k").agg(F.sum("n").alias("n")),
@@ -209,51 +207,6 @@ def test_empty_delta_publishes_no_version(spark, tmp_path):
     assert store.last_merge_stats["rows_appended"] == 0
     assert not os.path.exists(os.path.join(store.path, f"d{v + 1}"))
     assert sorted(map(tuple, store.read(spark).collect())) == before
-
-
-def test_per_bucket_layout_resumes_and_compacts(spark, tmp_path):
-    """A state directory written by the earlier per-bucket layout (each
-    generation partitionBy("__state_part"), a manifest keyed by bucket)
-    reads as the union of its bucket lists, and the next merge past
-    max_delta_files folds it into one generation."""
-    import glob as _glob
-
-    from osprey_spark.streaming.state_store import GEN_COL, _dir_stats
-
-    path = str(tmp_path / "legacy")
-    buckets: dict[str, list[str]] = {}
-    stats = {}
-    for v in range(2):
-        gen = f"d{v}"
-        (
-            _sum_delta(spark, v + 1)
-            .withColumn(GEN_COL, F.lit(v))
-            .withColumn("__state_part", F.pmod(F.xxhash64("k"), F.lit(4)).cast("int"))
-            .write.partitionBy("__state_part")
-            .parquet(os.path.join(path, gen))
-        )
-        for d in sorted(_glob.glob(os.path.join(path, gen, "__state_part=*"))):
-            b = d.rsplit("=", 1)[1]
-            rel = f"{gen}/__state_part={b}"
-            buckets.setdefault(b, []).append(rel)
-            stats[rel] = _dir_stats(d)
-    assert len(buckets) > 1 and any(len(rels) > 1 for rels in buckets.values())
-    with open(os.path.join(path, "manifest_v1.json"), "w") as f:
-        json.dump({"buckets": buckets, "stats": stats}, f)
-    with open(os.path.join(path, "_POINTER.json"), "w") as f:
-        json.dump({"version": 1, "batch_id": 1}, f)
-
-    store = _sum_store(path, max_delta_files=2)
-    got = {r["k"]: r["n"] for r in store.read(spark).collect()}
-    assert got == {"a": 2, "b": 3, "k1": 100, "k2": 100}
-    assert store.approx_size_bytes() == sum(s[1] for s in stats.values())
-    # the union already exceeds max_delta_files → this merge compacts
-    store.merge_append(_sum_delta(spark, 3), batch_id=2)
-    assert store.last_merge_stats["rows_compacted"] == 5
-    assert _live_rels(store) == ["d2x"]
-    assert store.expire_snapshots(keep_versions=1) == 3  # d0, d1, d2
-    got = {r["k"]: r["n"] for r in store.read(spark).collect()}
-    assert got == {"a": 3, "b": 6, "k1": 100, "k2": 100, "k3": 100}
 
 
 RULES_HASLABEL_MUTATION = {
@@ -629,9 +582,8 @@ def test_sum_resolver_survives_compaction(spark, tmp_path):
     identically against later deltas (associativity contract of
     resolve_fn). Forced per-batch compaction vs none → same totals."""
     for max_delta in (99, 1):
-        store = HashPartitionedStateStore(
+        store = MorStateStore(
             str(tmp_path / f"s_{max_delta}"),
-            key_cols=["k"],
             schema="k string, n long",
             max_delta_files=max_delta,
             resolve_fn=lambda df: df.groupBy("k").agg(F.sum("n").alias("n")),

@@ -1,14 +1,18 @@
-"""Local replica of the driver's correctness gate: run each
-``__spark_entry__.queries()`` entry on Spark and its ``oracle_sql()``
-in DuckDB at the same scale factor, compare row count + column names +
-order-insensitive values."""
+"""Correctness gate: run each ``__spark_entry__.queries()`` entry on
+Spark and its ``oracle_sql()`` in DuckDB at the same scale factor,
+compare row count + column names + order-insensitive values.
+
+Usage: ``python tools/check_oracle.py [QUERIES [SF_DIR]]`` — QUERIES is
+a comma-separated subset, or ``all`` (the default); SF_DIR is the
+scale-factor directory of parquet tables (default sf0.01)."""
 
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
@@ -107,5 +111,6 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None):
 
 
 if __name__ == "__main__":
-    only = sys.argv[1].split(",") if len(sys.argv) > 1 else None
-    main(only=only)
+    args = sys.argv[1:]
+    only = args[0].split(",") if args and args[0] != "all" else None
+    main(*args[1:2], only=only)
