@@ -171,12 +171,6 @@ def shingles(text: Column, k: int = 3) -> Column:
     return _shingle_udf(k)(normalize_for_fingerprint(text))
 
 
-def rolling_fingerprint(text: Column, k: int = 3) -> Column:
-    """Rolling-hash style fingerprint: min xxhash64 over word k-shingles
-    (a 1-permutation MinHash — stable under small edits)."""
-    return F.array_min(F.transform(shingles(text, k), lambda s: F.xxhash64(s)))
-
-
 def attach_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     t = F.col(text_col)
     return (

@@ -22,7 +22,7 @@ bucketed shape is the default; trailing is for rule parity.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence, Union
+from typing import Sequence, Union
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -143,22 +143,6 @@ def attach_trailing_distinct(
     return df.withColumn(
         out_col, F.size(F.array_distinct(F.collect_list(F.col(distinct_col)).over(w)))
     )
-
-
-def salted_repartition(
-    df: DataFrame,
-    key: KeyArg,
-    salt_buckets: int = 8,
-    num_partitions: Optional[int] = None,
-) -> DataFrame:
-    """Defuse hot-key skew before a stateful op: repartition on
-    (key, hash(row) % salt_buckets). Aggregations over the salted key
-    must be two-stage (partial per salt → merge per key)."""
-    salt = F.pmod(F.hash(*[F.col(c) for c in df.columns]), F.lit(salt_buckets))
-    cols = [F.col(c) for c in _keys(key)] + [salt]
-    if num_partitions:
-        return df.repartition(num_partitions, *cols)
-    return df.repartition(*cols)
 
 
 def two_stage_count(

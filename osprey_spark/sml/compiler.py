@@ -38,6 +38,12 @@ from osprey_spark.sml.parser import SmlError, parse_source
 
 _NOT_CONST = object()
 
+# the label-state columns a HasLabel lookup reads
+_LOOKUP_SCHEMA = (
+    "entity_type string, entity_id string, label_name string, "
+    "status int, created_at timestamp, expires_ts timestamp"
+)
+
 
 @dataclass
 class RuleInfo:
@@ -305,193 +311,113 @@ class CompiledRuleset:
         aggregation (pivot) produces every site's columns at once. A
         ruleset with K HasLabel sites on the same entity costs one
         probe-side join, not K (each join re-shuffles or re-broadcasts
-        the event stream — at 10^12 turns the probe side dominates)."""
+        the event stream — at 10^12 turns the probe side dominates).
+
+        ``label_state=None`` reads as an empty table: every site takes its
+        absent value (null + __error_count under ``error_on_empty``) and
+        the optimizer plans no join."""
         pending = [
             lk for lk in self.label_lookups or [] if lk.col_name not in df.columns
         ]  # already-resolved columns pass through untouched
         if not pending:
             return df
-        multi_reason = not unique_label_state
-
         if label_state is None:
-            for lk in pending:
-                absent = lk.status == "removed" and lk.manual is not True
-                df = df.withColumn(lk.col_name, F.lit(absent))
-                if lk.error_on_empty:
-                    # fail-closed: no labels service data at all
-                    df = df.withColumn(f"{lk.col_name}__err", F.lit(True)).withColumn(
-                        lk.col_name, F.lit(None).cast("boolean")
-                    )
-            return df
+            # no state table: an empty relation, which the optimizer folds
+            # out of the join; _finish_site then gives every site its
+            # absent (or fail-closed) value
+            label_state = df.sparkSession.createDataFrame([], _LOOKUP_SCHEMA).limit(0)
 
         groups: dict[str, list[LabelLookup]] = {}
         for lk in pending:
             groups.setdefault(_column_key(lk.entity_id_col), []).append(lk)
 
         for sites in groups.values():
-            if len(sites) == 1 and not sites[0].error_on_empty:
-                rows = self._single_site_rows(label_state, sites[0], multi_reason)
-            else:
-                rows = self._grouped_site_rows(label_state, sites, multi_reason)
+            rows = self._site_rows(label_state, sites, unique_label_state)
             eid = f"{sites[0].col_name}_eid"
             cond = sites[0].entity_id_col.cast("string") == F.col(eid)
             df = df.join(rows, on=cond, how="left").drop(eid)
             for lk in sites:
-                df = self._finish_site(df, lk, multi_reason)
+                df = self._finish_site(df, lk, unique_label_state)
         return df
 
-    def _single_site_rows(
-        self, label_state: DataFrame, lk: "LabelLookup", multi_reason: bool
+    def _site_rows(
+        self, label_state: DataFrame, sites: list["LabelLookup"], unique: bool
     ) -> DataFrame:
-        """Join side for a lone HasLabel site: the (entity_type, label)
-        slice of state; with ``unique_label_state`` no aggregation at all
-        (the store guarantees one row per key)."""
-        sfx = lk.col_name
-        rows = label_state.filter(
-            (F.col("entity_type") == lk.entity_type)
-            & (F.col("label_name") == lk.label)
-        ).select(
-            F.col("entity_id").alias(f"{sfx}_eid"),
-            F.col("status").alias(f"{sfx}_st"),
-            F.col("created_at").alias(f"{sfx}_cr"),
-            F.col("expires_ts").alias(f"{sfx}_exp"),
-        )
-        if not multi_reason:
-            return rows
-        # multi-reason collapse with reference semantics
-        # (stdlib/udfs/labels.py:215-252): status from the latest
-        # created_at row (lexicographic struct max → deterministic
-        # on ties); expiry NULL if ANY reason never expires, else
-        # max(expires_ts) — "expired" then means ALL reasons
-        # expired; the (cr, exp) reasons array is kept only when a
-        # site needs min_label_age's oldest-live-reason rule
-        aggs = [
-            F.max(
-                F.struct(
-                    F.col(f"{sfx}_cr").alias("cr"),
-                    F.col(f"{sfx}_st").alias("st"),
-                )
-            ).alias("_w"),
-            F.max(F.col(f"{sfx}_exp").isNull().cast("int")).alias("_never"),
-            F.max(F.col(f"{sfx}_exp")).alias("_expmax"),
-        ]
-        if lk.min_label_age is not None:
-            aggs.append(
-                F.collect_list(
-                    F.struct(
-                        F.col(f"{sfx}_cr").alias("cr"),
-                        F.col(f"{sfx}_exp").alias("exp"),
-                    )
-                ).alias("_rsn")
-            )
-        rows = rows.groupBy(f"{sfx}_eid").agg(*aggs)
-        sel = [
-            F.col(f"{sfx}_eid"),
-            F.col("_w.st").alias(f"{sfx}_st"),
-            F.col("_w.cr").alias(f"{sfx}_cr"),
-            F.when(F.col("_never") == 1, F.lit(None).cast("timestamp"))
-            .otherwise(F.col("_expmax"))
-            .alias(f"{sfx}_exp"),
-        ]
-        if lk.min_label_age is not None:
-            sel.append(F.col("_rsn").alias(f"{sfx}_rsn"))
-        return rows.select(*sel)
-
-    def _grouped_site_rows(
-        self, label_state: DataFrame, sites: list["LabelLookup"], multi_reason: bool
-    ) -> DataFrame:
-        """Join side for ≥1 HasLabel sites sharing one entity-id
+        """Join side for the HasLabel sites sharing one entity-id
         expression: ONE scan filtered to the union of the sites'
         (entity_type, label_name) pairs, ONE per-entity aggregation with
         conditional (when-gated) aggregates producing every site's
-        columns — the pivot that turns K probe-side joins into one. Sites
-        with ``error_on_empty`` widen the filter to their whole
-        entity_type and get an ``{sfx}_any`` flag from the same pass (the
-        former separate distinct+join)."""
-        pred = None
-        for lk in sites:
-            p = (F.col("entity_type") == lk.entity_type) & (
+        ``{sfx}_st/_cr/_exp(/_rsn/_any)`` columns — the pivot that turns K
+        probe-side joins into one. Sites with ``error_on_empty`` widen the
+        filter to their whole entity_type and get an ``{sfx}_any`` flag
+        from the same pass.
+
+        A lone site without ``error_on_empty`` over unique state (the
+        streaming pipeline's shape) is the slice itself: the store holds
+        one row per key, so it needs no aggregate."""
+        eid = f"{sites[0].col_name}_eid"
+
+        def pair(lk: "LabelLookup") -> Column:
+            return (F.col("entity_type") == lk.entity_type) & (
                 F.col("label_name") == lk.label
             )
-            pred = p if pred is None else (pred | p)
-        for et in {lk.entity_type for lk in sites if lk.error_on_empty}:
-            pred = pred | (F.col("entity_type") == et)
 
+        if unique and len(sites) == 1 and not sites[0].error_on_empty:
+            sfx = sites[0].col_name
+            return label_state.filter(pair(sites[0])).select(
+                F.col("entity_id").alias(eid),
+                F.col("status").alias(f"{sfx}_st"),
+                F.col("created_at").alias(f"{sfx}_cr"),
+                F.col("expires_ts").alias(f"{sfx}_exp"),
+            )
+
+        pred = None
         aggs: list[Column] = []
-        finals: list[Column] = []
-        eid = f"{sites[0].col_name}_eid"
         for lk in sites:
             sfx = lk.col_name
-            m = (F.col("entity_type") == lk.entity_type) & (
-                F.col("label_name") == lk.label
-            )
-            if multi_reason:
-                aggs += [
-                    F.max(
-                        F.when(
-                            m,
-                            F.struct(
-                                F.col("created_at").alias("cr"),
-                                F.col("status").alias("st"),
-                            ),
-                        )
-                    ).alias(f"{sfx}__w"),
-                    F.max(
-                        F.when(m, F.col("expires_ts").isNull().cast("int"))
-                    ).alias(f"{sfx}__never"),
-                    F.max(F.when(m, F.col("expires_ts"))).alias(f"{sfx}__expmax"),
-                ]
-                finals += [
-                    F.col(f"{sfx}__w.st").alias(f"{sfx}_st"),
-                    F.col(f"{sfx}__w.cr").alias(f"{sfx}_cr"),
-                    F.when(F.col(f"{sfx}__never") == 1, F.lit(None).cast("timestamp"))
-                    .otherwise(F.col(f"{sfx}__expmax"))
-                    .alias(f"{sfx}_exp"),
-                ]
-                if lk.min_label_age is not None:
-                    # collect_list skips the NULLs the when() leaves on
-                    # other sites' rows → exactly this site's reasons
-                    aggs.append(
-                        F.collect_list(
-                            F.when(
-                                m,
-                                F.struct(
-                                    F.col("created_at").alias("cr"),
-                                    F.col("expires_ts").alias("exp"),
-                                ),
-                            )
-                        ).alias(f"{sfx}_rsn")
-                    )
-                    finals.append(F.col(f"{sfx}_rsn"))
-            else:
-                # unique state: ≤1 row per (entity_type, entity_id, label)
-                # → the conditional max IS that row's value
+            m = pair(lk)
+            pred = m if pred is None else (pred | m)
+            exp = F.when(m, F.col("expires_ts"))
+            if unique:
+                # ≤1 row per (entity_type, entity_id, label) → the
+                # conditional max IS that row's value
                 aggs += [
                     F.max(F.when(m, F.col("status"))).alias(f"{sfx}_st"),
                     F.max(F.when(m, F.col("created_at"))).alias(f"{sfx}_cr"),
-                    F.max(F.when(m, F.col("expires_ts"))).alias(f"{sfx}_exp"),
+                    F.max(exp).alias(f"{sfx}_exp"),
                 ]
-                finals += [F.col(f"{sfx}_st"), F.col(f"{sfx}_cr"), F.col(f"{sfx}_exp")]
+            else:
+                # multi-reason collapse with reference semantics
+                # (stdlib/udfs/labels.py:215-252): status from the latest
+                # created_at row (lexicographic struct max → deterministic
+                # on ties); expiry NULL if ANY reason never expires, else
+                # max(expires_ts) — "expired" then means ALL reasons expired
+                w = F.max(F.when(m, F.struct(F.col("created_at"), F.col("status"))))
+                never = F.max(F.when(m, F.col("expires_ts").isNull().cast("int"))) == 1
+                aggs += [
+                    w["status"].alias(f"{sfx}_st"),
+                    w["created_at"].alias(f"{sfx}_cr"),
+                    F.when(never, F.lit(None).cast("timestamp"))
+                    .otherwise(F.max(exp))
+                    .alias(f"{sfx}_exp"),
+                ]
+                if lk.min_label_age is not None:
+                    # the (cr, exp) reasons array for min_label_age's
+                    # oldest-live-reason rule; collect_list skips the
+                    # NULLs the when() leaves on other sites' rows
+                    reason = F.struct(
+                        F.col("created_at").alias("cr"), F.col("expires_ts").alias("exp")
+                    )
+                    aggs.append(F.collect_list(F.when(m, reason)).alias(f"{sfx}_rsn"))
             if lk.error_on_empty:
-                aggs.append(
-                    F.max(
-                        F.when(F.col("entity_type") == lk.entity_type, F.lit(True))
-                    ).alias(f"{sfx}_any")
-                )
-                finals.append(F.col(f"{sfx}_any"))
-        return (
-            label_state.filter(pred)
-            .groupBy(F.col("entity_id").alias(eid))
-            .agg(*aggs)
-            .select(F.col(eid), *finals)
-        )
+                any_label = F.col("entity_type") == lk.entity_type
+                pred = pred | any_label
+                aggs.append(F.max(F.when(any_label, F.lit(True))).alias(f"{sfx}_any"))
+        return label_state.filter(pred).groupBy(F.col("entity_id").alias(eid)).agg(*aggs)
 
-    def _finish_site(
-        self, df: DataFrame, lk: "LabelLookup", multi_reason: bool
-    ) -> DataFrame:
+    def _finish_site(self, df: DataFrame, lk: "LabelLookup", unique: bool) -> DataFrame:
         """Post-join evaluation of one HasLabel site from its joined
-        ``{sfx}_st/_cr/_exp(/_rsn/_any)`` columns (shared by the single-
-        site and consolidated join paths)."""
+        ``{sfx}_st/_cr/_exp(/_rsn/_any)`` columns."""
         sfx = lk.col_name
         ts = F.col(self.timestamp_col)
         expired = F.col(f"{sfx}_exp").isNotNull() & (F.col(f"{sfx}_exp") <= ts)
@@ -505,7 +431,9 @@ class CompiledRuleset:
         elif lk.manual is False:
             match = match & ~actual_manual
         if lk.min_label_age is not None:
-            if multi_reason:
+            if unique:
+                cr_basis = F.col(f"{sfx}_cr")
+            else:
                 # oldest NON-EXPIRED reason's created_at, judged
                 # against this event's timestamp (labels.py:246-252).
                 # Reasons arrays are tiny (per-label mutation count),
@@ -517,8 +445,6 @@ class CompiledRuleset:
                     lambda r: r["exp"].isNull() | (r["exp"] > ts),
                 )
                 cr_basis = F.array_min(F.transform(live, lambda r: r["cr"]))
-            else:
-                cr_basis = F.col(f"{sfx}_cr")
             # cast to timestamp first: TIMESTAMP_NTZ → double directly
             # is rejected by Spark 4's type checker
             age = ts.cast("timestamp").cast("double") - cr_basis.cast(
@@ -702,26 +628,13 @@ class CompiledRuleset:
         label-state sink: entity_type, entity_id, label_name, status,
         event_ts, expires_ts, apply_at.
 
-        When ``df`` already carries ``__label_mutation_structs`` (a frame
-        produced by ``apply(include_mutation_structs=True)``, typically
-        persisted by the streaming pipeline), the rows are a cheap explode
-        of that column — no re-evaluation and no re-resolution of HasLabel
-        joins. Otherwise the frame must be the raw input; lookups are
-        resolved here first (an applied condition may depend on HasLabel)."""
+        ``df`` is a frame produced by ``apply(include_mutation_structs=True)``
+        (typically persisted by the streaming pipeline): the rows are an
+        explode of its ``__label_mutation_structs`` column, so HasLabel-
+        dependent apply conditions see the lookups that frame resolved and
+        nothing is evaluated twice."""
         extra = extra_cols or []
-        if not self.labels:
-            schema = ", ".join(
-                [*(f"{c} string" for c in extra),
-                 "entity_type string, entity_id string, label_name string",
-                 "status int, event_ts timestamp, expires_ts timestamp, apply_at timestamp"]
-            )
-            return df.sparkSession.createDataFrame([], schema)
-        if self.MUTATION_STRUCTS_COL in df.columns:
-            arr = F.col(self.MUTATION_STRUCTS_COL)
-        else:
-            df = self.resolve_label_lookups(df, None)
-            arr = self.label_mutation_structs_col()
-        out = df.select(*extra, F.explode(arr).alias("m"))
+        out = df.select(*extra, F.explode(self.MUTATION_STRUCTS_COL).alias("m"))
         return out.select(*extra, "m.*")
 
 

@@ -77,8 +77,11 @@ class _CepProcessor(StatefulProcessor):
         # consume strictly contiguous turns
         while not done and next_turn in pending:
             ts, mask = pending.pop(next_turn)
+            # only turns that match some step drive the within_seconds
+            # clock, as in match_sequence (which drops the others first)
             if (
-                self.within_seconds is not None
+                mask
+                and self.within_seconds is not None
                 and step > 0
                 and ts - first_ts > self.within_seconds
             ):

@@ -69,7 +69,10 @@ def label_resolver(df: DataFrame) -> DataFrame:
     stays manual — so the fold result is exactly
     ``max_by(row, (is_manual, write_generation))``. Associative, so lazy
     compaction of any file prefix resolves identically against later
-    deltas. One hash aggregation with map-side partial combine."""
+    deltas. One aggregation with a map-side partial combine; its buffer
+    is a struct, which a hash aggregation cannot hold, so Spark plans it
+    as a SortAggregate (a sort before the partial and another before the
+    final aggregate)."""
     payload = F.struct(
         F.col("status"), F.col("created_at"), F.col("expires_ts"), F.col("apply_at")
     )
@@ -120,9 +123,9 @@ class LabelStateStore:
         valid = mutations.filter((F.col("entity_id") != "") & (F.col("label_name") != ""))
         # in-batch conflict resolution: higher status wins, then later
         # event (reference MutationDropReason.CONFLICTING_MUTATION) —
-        # max_by over a lexicographic struct key: a hash aggregation with
-        # map-side partial combine, where a row_number window would sort
-        # every mutation inside each shuffle partition
+        # max_by over a lexicographic struct key, with a map-side partial
+        # combine. Its struct buffer makes Spark plan a SortAggregate: one
+        # sort before the partial aggregate and one before the final
         win = F.max_by(
             F.struct(
                 F.col("status").cast("int").alias("status"),

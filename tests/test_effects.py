@@ -88,7 +88,8 @@ def test_applied_label_rows(spark):
         [tuple(r.get(f.name) for f in SCHEMA.fields) for r in rows], SCHEMA
     )
     plan = RulesetCompiler(SOURCES, input_schema=df.schema, action_name_col="action_name").compile()
-    applied = plan.label_mutation_rows(df, extra_cols=["__row_id"]).collect()
+    out = plan.apply(df, include_mutation_structs=True)
+    applied = plan.label_mutation_rows(out, extra_cols=["__row_id"]).collect()
     got = {(r["__row_id"], r["label_name"]): r for r in applied}
     # u1: plain + gated + fragile? Broken fired (x=1) → fragile applied; old removed
     assert (0, "plain") in got and (0, "gated") in got and (0, "fragile") in got and (0, "old") in got

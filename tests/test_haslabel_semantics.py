@@ -114,10 +114,14 @@ def test_haslabel_no_state_defaults(spark):
 U: Entity[str] = EntityJson(type='User', path='$.uid')
 Added = HasLabel(entity=U, label='bad')
 Removed = HasLabel(entity=U, label='bad', status='removed')
+Checked = HasLabel(entity=U, label='bad', error_on_empty=True)
 """
     got = _run(spark, sml, ["u1"], None)
     assert got["u1"]["Added"] is False
     assert got["u1"]["Removed"] is True  # unlabeled IS removed
+    # no state table at all → fail closed: null + one counted error
+    assert got["u1"]["Checked"] is None
+    assert got["u1"]["__error_count"] == 1
 
 
 def test_haslabel_bad_status_rejected(spark):
@@ -150,7 +154,8 @@ WhenRules(rules_any=[Always], then=[
     plan = RulesetCompiler(
         {"main.sml": sml}, input_schema=df.schema, action_name_col="action_name"
     ).compile()
-    rows = {r["label_name"]: r for r in plan.label_mutation_rows(df).collect()}
+    out = plan.apply(df, include_mutation_structs=True)
+    rows = {r["label_name"]: r for r in plan.label_mutation_rows(out).collect()}
     assert rows["slow"]["apply_at"] == T0 + datetime.timedelta(minutes=10)
     assert rows["fast"]["apply_at"] == T0
 

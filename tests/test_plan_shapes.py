@@ -8,6 +8,8 @@ wall-clock tests on a noisy host cannot check:
 - aggregations keep map-side partial aggregation.
 """
 
+import re
+
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -278,6 +280,12 @@ WhenRules(rules_any=[Repeat], then=[DeclareVerdict(verdict='repeat')])
     assert "strategy=broadcast" not in logical
     assert physical.count("BroadcastHashJoin") == 2, physical
     assert "SortMergeJoin" not in physical
+    # the lone HasLabel site over the (unique) label store joins the
+    # filtered slice as is: the only aggregates are the two stores'
+    # merge-on-read resolutions (partial + final each), and the only
+    # shuffles feed those
+    assert len(re.findall(r"\b\w*Aggregate\(", physical)) == 4, physical
+    assert len(re.findall(r"\bExchange ", physical)) == 2, physical
     assert any(r[-1] > 0 for r in rows)  # prior verdicts reached the batch
 
     keys = ("spark.sql.autoBroadcastJoinThreshold",

@@ -295,6 +295,40 @@ def test_cep_state_fn_out_of_order():
     assert out3.empty
 
 
+def test_cep_fold_agrees_with_match_sequence_under_within(spark):
+    """A turn that matches no step must not drive the within_seconds
+    clock in the streaming fold, as in the batch operator: search@0 s,
+    other@500 s, code_exec@30 s with a 50 s bound is a match for both."""
+    import pandas as pd
+
+    from osprey_spark.operators.sessions import match_sequence
+    from osprey_spark.streaming.cep_tws import _CepProcessor
+    from tests.helpers import FakeHandle, fold_batch
+
+    t0 = datetime.datetime(2024, 1, 1)
+    turns = [(0, "search", 0), (1, "other", 500), (2, "code_exec", 30)]
+    steps = [F.col("tool") == "search", F.col("tool") == "code_exec"]
+
+    df = spark.createDataFrame(
+        [("a", i, tool, t0 + datetime.timedelta(seconds=s)) for i, tool, s in turns],
+        "conv_id string, turn_idx int, tool string, ts timestamp",
+    )
+    batch = match_sequence(
+        df, steps, order_col="turn_idx", ts_col="ts", within_seconds=50
+    ).collect()[0]["matched"]
+
+    masks = {"search": 0b01, "code_exec": 0b10}
+    proc = _CepProcessor(2, 50)
+    proc.init(FakeHandle())
+    out = fold_batch(proc, ("a",), [pd.DataFrame({
+        "turn_idx": [i for i, _, _ in turns],
+        "ts": [pd.Timestamp(t0 + datetime.timedelta(seconds=s)) for _, _, s in turns],
+        "mask": [masks.get(tool, 0) for _, tool, _ in turns],
+    })])
+    assert batch is True
+    assert len(out) == 1 and out.iloc[0]["matched_at_turn"] == 2
+
+
 def test_has_label_cross_batch(spark, workdir):
     """HasLabel reads state from PRIOR batches: a conversation flagged in
     batch 1 makes RepeatOffender fire for its batch-2 turns."""
