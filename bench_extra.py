@@ -18,26 +18,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
+from bench import HEADLINE  # noqa: E402
+
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPEATS = int(os.environ.get("BENCH_EXTRA_REPEATS", "4"))
-
-HEADLINE = [
-    "rule_eval",
-    "timeseries_hourly",
-    "topn_event_types",
-    "distinct_users_by_type",
-    "velocity_tumbling",
-    "velocity_trailing",
-    "sessionization",
-    "cep_ordered_pattern",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "text_token_counts",
-    "text_lang_id",
-    "sim_cosine_topk",
-    "sim_knn_join",
-]
 
 
 def main() -> None:

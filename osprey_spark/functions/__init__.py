@@ -2,24 +2,5 @@
 semantics aren't expressible with native Spark expressions
 (unicode normalization, public-suffix domain parsing, murmur hashing,
 IPv6 formatting). Always ``pandas_udf`` — never row-at-a-time Python.
+Their builders are declared in ``osprey_spark.sml.stdlib.FUNCTIONS``.
 """
-
-from __future__ import annotations
-
-
-def register_pandas_udfs(reg: dict) -> None:
-    from osprey_spark.functions import textnorm, network, experiments
-
-    reg.update(
-        {
-            "StringClean": textnorm.string_clean_impl,
-            "StringExtractDomains": textnorm.string_extract_domains_impl,
-            "StringExtractURLs": textnorm.string_extract_urls_impl,
-            "EmailDomain": network.email_domain_impl,
-            "DomainTld": network.domain_tld_impl,
-            "DomainChopper": network.domain_chopper_impl,
-            "PhoneCountry": network.phone_country_impl,
-            "Experiment": experiments.experiment_impl,
-            "ExperimentWhen": experiments.experiment_when_impl,
-        }
-    )

@@ -87,7 +87,7 @@ def _make_bucket_udf(name: str, buckets: list[str], bucket_sizes: list[float]):
     return bucket_udf
 
 
-def experiment_impl(comp, call, args):
+def experiment_impl(comp, call):
     from osprey_spark.sml.stdlib import _arg, _const
 
     entity = _arg(comp, call, "entity")
@@ -112,7 +112,7 @@ def experiment_impl(comp, call, args):
     return cv
 
 
-def experiment_when_impl(comp, call, args):
+def experiment_when_impl(comp, call):
     """ExperimentWhen(experiment=E, <bucket>=[conds...], ...) → list[bool]
     for the resolved bucket (experiments.py:215+)."""
     from osprey_spark.sml import nodes as g

@@ -150,28 +150,28 @@ def ip_network_v6_udf(s: pd.Series) -> pd.Series:
     return s.map(lambda v: None if v is None else one(v))
 
 
-def email_domain_impl(comp, call, args):
+def email_domain_impl(comp, call):
     from osprey_spark.sml.stdlib import _arg
 
     email = _arg(comp, call, "email")
     return CV(email_domain_udf(email.col), st.STR)
 
 
-def domain_tld_impl(comp, call, args):
+def domain_tld_impl(comp, call):
     from osprey_spark.sml.stdlib import _arg
 
     domain = _arg(comp, call, "domain")
     return CV(domain_tld_udf(domain.col), st.STR)
 
 
-def domain_chopper_impl(comp, call, args):
+def domain_chopper_impl(comp, call):
     from osprey_spark.sml.stdlib import _arg
 
     urls = _arg(comp, call, "urls")
     return CV(domain_chopper_udf(urls.col), st.list_of(st.STR))
 
 
-def phone_country_impl(comp, call, args):
+def phone_country_impl(comp, call):
     from osprey_spark.sml.stdlib import _arg
 
     number = _arg(comp, call, "number")

@@ -172,7 +172,7 @@ def _make_clean_udf(flags: dict):
     return clean
 
 
-def string_clean_impl(comp, call, args):
+def string_clean_impl(comp, call):
     from osprey_spark.sml.stdlib import _arg, _const
 
     s = _arg(comp, call, "s")
@@ -236,14 +236,14 @@ def extract_urls_udf(s: pd.Series) -> pd.Series:
     return s.map(lambda v: None if v is None else _extract_urls(v))
 
 
-def string_extract_domains_impl(comp, call, args):
+def string_extract_domains_impl(comp, call):
     from osprey_spark.sml.stdlib import _arg
 
     s = _arg(comp, call, "s")
     return CV(extract_domains_udf(s.col), st.list_of(st.STR))
 
 
-def string_extract_urls_impl(comp, call, args):
+def string_extract_urls_impl(comp, call):
     from osprey_spark.sml.stdlib import _arg
 
     s = _arg(comp, call, "s")

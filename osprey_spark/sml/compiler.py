@@ -25,7 +25,7 @@ Key semantic mappings (SURVEY.md §2.B):
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any, Callable, Optional
+from typing import Any, Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -168,7 +168,6 @@ class CompileContext:
         self,
         sources: dict[str, str],
         input_schema: T.StructType,
-        udf_registry: dict[str, "UdfImpl"],
         action_name_col: Optional[str] = None,
         action_id_col: Optional[str] = None,
         timestamp_col: str = "ts",
@@ -176,7 +175,6 @@ class CompileContext:
     ):
         self.sources = sources
         self.input_schema = input_schema
-        self.registry = udf_registry
         self.action_name_col = action_name_col
         self.action_id_col = action_id_col
         self.timestamp_col = timestamp_col
@@ -224,18 +222,6 @@ class CompileContext:
         if not cv.is_const:
             raise SmlError(f"argument `{arg}` of `{call.func}` must be a literal", call.span)
         return cv.const
-
-
-UdfImpl = Callable[[CompileContext, g.Call, dict[str, "ArgValue"]], CV]
-
-
-@dataclass
-class ArgValue:
-    """A compiled argument: the value plus its raw AST node (some UDFs need
-    the AST — e.g. Rule descriptions, Require f-string globs)."""
-
-    cv: Optional[CV]
-    node: g.Node
 
 
 @dataclass
@@ -643,20 +629,14 @@ class RulesetCompiler:
         self,
         sources: dict[str, str],
         input_schema: T.StructType,
-        udf_registry: Optional[dict[str, UdfImpl]] = None,
         action_name_col: Optional[str] = None,
         action_id_col: Optional[str] = None,
         timestamp_col: str = "ts",
         data_json_col: Optional[str] = None,
     ):
-        if udf_registry is None:
-            from osprey_spark.sml.stdlib import default_registry
-
-            udf_registry = default_registry()
         self.ctx = CompileContext(
             sources=sources,
             input_schema=input_schema,
-            udf_registry=udf_registry,
             action_name_col=action_name_col,
             action_id_col=action_id_col,
             timestamp_col=timestamp_col,
@@ -776,16 +756,9 @@ class RulesetCompiler:
         )
         extracted = not (stmt.target.is_local or secret or is_const_literal)
         if cv.col is not None and cv.typ.base not in ("effect",):
-            out_col = self._unwrap(cv)
             ctx.features.append(
-                Feature(name=name, col=out_col, typ=cv.typ, extracted=extracted)
+                Feature(name=name, col=cv.col, typ=cv.typ, extracted=extracted)
             )
-
-    def _unwrap(self, cv: CV) -> Column:
-        """Post-execution-convertible unwrap (language_types/
-        post_execution_convertible.py): EntityT→id, RuleT→bool,
-        TimeDeltaT→seconds."""
-        return cv.col
 
     def _process_call_statement(self, call: g.Call) -> None:
         ctx = self.ctx
@@ -1006,12 +979,10 @@ class RulesetCompiler:
         raise SmlError(f"unsupported comparison {op}", node.span)
 
     def compile_call(self, call: g.Call) -> CV:
-        ctx = self.ctx
-        impl = ctx.registry.get(call.func)
-        if impl is None:
+        # imported here: the stdlib builders import this module
+        from osprey_spark.sml.stdlib import FUNCTIONS
+
+        fn = FUNCTIONS.get(call.func)
+        if fn is None or fn.build is None:
             raise SmlError(f"unknown UDF `{call.func}`", call.span)
-        args: dict[str, ArgValue] = {}
-        for k, vnode in call.kwargs.items():
-            # lists of rules/effects need per-item failure tolerance → pass AST
-            args[k] = ArgValue(cv=None, node=vnode)
-        return impl(self, call, args)
+        return fn.build(self, call)

@@ -1,12 +1,16 @@
 """The SML stdlib, compiled to native Spark expressions.
 
-Each entry maps an SML UDF name to a compile-time builder that emits a
-``pyspark.sql.Column`` tree (JVM-side, whole-stage-codegen) — the
-vectorized re-expression of the reference's per-event Python UDFs
-(osprey_worker/src/osprey/engine/stdlib/udfs/*). Functions whose Python
-semantics cannot be expressed natively (unicode normalization, public-
-suffix parsing, murmur bucketing) live in ``osprey_spark.functions`` as
-Arrow-batched pandas UDFs and are registered here too.
+``FUNCTIONS`` is the one declaration of every SML function: its
+compile-time builder, its kwarg signature and its return type. The
+compiler calls the builder, which emits a ``pyspark.sql.Column`` tree
+(JVM-side, whole-stage-codegen) — the vectorized re-expression of the
+reference's per-event Python UDFs
+(osprey_worker/src/osprey/engine/stdlib/udfs/*); the validator checks
+kwargs and types against the same row. Functions whose Python semantics
+cannot be expressed natively (unicode normalization, public-suffix
+parsing, murmur bucketing) live in ``osprey_spark.functions`` as
+Arrow-batched pandas UDFs and have rows here too. A plugin function is
+one more row.
 
 Failure semantics: a UDF that would raise in the reference produces a
 null column value here; "expected" failures (ExpectedUdfException) are
@@ -17,12 +21,14 @@ an error-indicator column.
 from __future__ import annotations
 
 import re as _re
-from typing import Any, Optional
+from dataclasses import dataclass
+from typing import Any, Callable, Optional, Union
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from osprey_spark import exprs
+from osprey_spark.functions import experiments, network, textnorm
 from osprey_spark.sml import nodes as g
 from osprey_spark.sml import types as st
 from osprey_spark.sml.compiler import CV, EffectSpec, LabelEntry, RuleInfo, VerdictEntry, CustomEffectEntry
@@ -61,7 +67,7 @@ def _list_items(comp, call: g.Call, name: str) -> list[g.Node]:
 
 # --- engine / extraction ----------------------------------------------------
 
-def _json_data(comp, call, args):
+def _json_data(comp, call):
     """JsonData (stdlib/udfs/json_data.py:31-58): columnar projection.
 
     The dotted JSONPath resolves directly to an input column/nested field
@@ -98,33 +104,33 @@ def _json_data(comp, call, args):
     return CV(ctx.gated(col), typ)
 
 
-def _entity(comp, call, args):
+def _entity(comp, call):
     etype = _const(comp, call, "type")
     id_cv = _arg(comp, call, "id")
     return CV(comp.ctx.gated(id_cv.col), st.entity_of(id_cv.typ), entity_type=etype)
 
 
-def _entity_json(comp, call, args):
+def _entity_json(comp, call):
     etype = _const(comp, call, "type")
-    inner = _json_data(comp, call, args)
+    inner = _json_data(comp, call)
     return CV(inner.col, st.entity_of(inner.typ), entity_type=etype)
 
 
-def _get_action_name(comp, call, args):
+def _get_action_name(comp, call):
     ctx = comp.ctx
     if not ctx.action_name_col:
         raise SmlError("no action_name column configured", call.span)
     return CV(F.col(ctx.action_name_col), st.STR)
 
 
-def _get_action_id(comp, call, args):
+def _get_action_id(comp, call):
     ctx = comp.ctx
     if not ctx.action_id_col:
         raise SmlError("no action_id column configured", call.span)
     return CV(F.col(ctx.action_id_col), st.INT)
 
 
-def _rule(comp, call, args):
+def _rule(comp, call):
     """Rule (stdlib/udfs/rules.py:25-113): value = all(when_all); a
     None/failed condition is falsey → the rule is False (collapsed-failure
     contract, same as ``and``)."""
@@ -149,7 +155,7 @@ def _rule(comp, call, args):
     return CV(info.col, st.RULE, rule=info)
 
 
-def _when_rules(comp, call, args):
+def _when_rules(comp, call):
     """WhenRules (stdlib/udfs/rules.py:123-223): fires `then` effects when
     ANY rule is true; failed rules/effects are tolerated individually."""
     ctx = comp.ctx
@@ -197,13 +203,13 @@ def _when_rules(comp, call, args):
     return CV(None, st.NONE)
 
 
-def _declare_verdict(comp, call, args):
+def _declare_verdict(comp, call):
     verdict = _const(comp, call, "verdict")
     return CV(None, st.EFFECT, effect=EffectSpec(kind="verdict", verdict=verdict))
 
 
 def _label_mutation(kind: str):
-    def impl(comp, call, args):
+    def impl(comp, call):
         entity = _arg(comp, call, "entity")
         if entity.typ.base != "entity" or entity.entity_type is None:
             raise SmlError(f"`entity` of `{call.func}` must be an Entity", call.span)
@@ -239,7 +245,7 @@ def _label_mutation(kind: str):
     return impl
 
 
-def _ban_user(comp, call, args):
+def _ban_user(comp, call):
     """Plugin-surface example effect (example_plugins/src/udfs/ban_user.py:13-39):
     feature `__ban_user` gets `entity|comment` strings."""
     entity = _arg(comp, call, "entity")
@@ -248,7 +254,7 @@ def _ban_user(comp, call, args):
     return CV(None, st.EFFECT, effect=EffectSpec(kind="custom", feature_name="ban_user", value_col=value))
 
 
-def _has_label(comp, call, args):
+def _has_label(comp, call):
     """HasLabel (stdlib/udfs/labels.py:159-311): reads per-entity label
     state. Compiles to a hidden boolean column resolved by a left
     join against the label-state table in ``CompiledRuleset.apply``
@@ -296,7 +302,7 @@ def _has_label(comp, call, args):
     return CV(ctx.gated(F.col(col_name)), st.BOOL)
 
 
-def _mx_lookup(comp, call, args):
+def _mx_lookup(comp, call):
     """MXLookup (stdlib/udfs/mx_lookup.py:15-31) does live DNS — external
     IO is out of scope for a batch/stream engine (SURVEY §2.C). Stubbed:
     null column (expected failure), clearly marked."""
@@ -304,18 +310,18 @@ def _mx_lookup(comp, call, args):
     return CV(F.lit(None).cast("string"), st.STR)
 
 
-def _resolve_optional(comp, call, args):
+def _resolve_optional(comp, call):
     value = _arg(comp, call, "value")
     default = _arg(comp, call, "default")
     return CV(F.coalesce(value.col, default.col), default.typ if value.typ is st.ANY else value.typ)
 
 
-def _list_length(comp, call, args):
+def _list_length(comp, call):
     lst = _arg(comp, call, "list")
     return CV(F.size(lst.col), st.INT)
 
 
-def _list_read(comp, call, args):
+def _list_read(comp, call):
     lst = _arg(comp, call, "list")
     index = _const(comp, call, "index", 0)
     # out-of-range is an *expected* failure → null, no error count
@@ -323,7 +329,7 @@ def _list_read(comp, call, args):
     return CV(F.element_at(lst.col, int(index) + 1).cast("string"), st.STR)
 
 
-def _list_sort(comp, call, args):
+def _list_sort(comp, call):
     lst = _arg(comp, call, "list")
     reverse = _const(comp, call, "reverse", False)
     return CV(F.sort_array(lst.col, asc=not reverse), lst.typ)
@@ -331,7 +337,7 @@ def _list_sort(comp, call, args):
 
 # --- date / time ------------------------------------------------------------
 
-def _time_delta(comp, call, args):
+def _time_delta(comp, call):
     secs = 0.0
     for unit, mult in (("weeks", 604800), ("days", 86400), ("hours", 3600), ("minutes", 60), ("seconds", 1)):
         v = _const(comp, call, unit, 0)
@@ -339,7 +345,7 @@ def _time_delta(comp, call, args):
     return CV(F.lit(secs), st.TIMEDELTA, const=secs)
 
 
-def _time_since(comp, call, args):
+def _time_since(comp, call):
     """TimeSince (stdlib/udfs/time_since.py:22-32): max(action_ts - t, 0) secs."""
     ctx = comp.ctx
     t = _arg(comp, call, "timestamp")
@@ -355,7 +361,7 @@ def _bucket(value: Column, granularity: int) -> Column:
     return (value - (value % F.lit(granularity))).cast("long")
 
 
-def _get_timedelta_bucket(comp, call, args):
+def _get_timedelta_bucket(comp, call):
     td = _arg(comp, call, "timedelta")
     gran = int(_const(comp, call, "granularity_seconds"))
     if gran < 3600:
@@ -363,7 +369,7 @@ def _get_timedelta_bucket(comp, call, args):
     return CV(_bucket(td.col.cast("long"), gran), st.INT)
 
 
-def _get_timestamp_bucket(comp, call, args):
+def _get_timestamp_bucket(comp, call):
     ts = _arg(comp, call, "timestamp")
     gran = int(_const(comp, call, "granularity_seconds"))
     if gran < 3600:
@@ -371,7 +377,7 @@ def _get_timestamp_bucket(comp, call, args):
     return CV(_bucket(ts.col.cast("long"), gran), st.INT)
 
 
-def _get_snowflake_bucket(comp, call, args):
+def _get_snowflake_bucket(comp, call):
     """Snowflake → unix seconds (worker/lib/snowflake.py:26-36: (id>>22)/1000),
     floored to granularity."""
     sf = _arg(comp, call, "snowflake")
@@ -385,25 +391,25 @@ def _get_snowflake_bucket(comp, call, args):
 # --- strings ----------------------------------------------------------------
 
 def _str1(fn, rtype=st.STR, argname="s"):
-    def impl(comp, call, args):
+    def impl(comp, call):
         s = _arg(comp, call, argname)
         return CV(fn(s.col), rtype)
 
     return impl
 
 
-def _string_starts_with(comp, call, args):
+def _string_starts_with(comp, call):
     s, start = _arg(comp, call, "s"), _arg(comp, call, "start")
     return CV(s.col.startswith(start.col), st.BOOL)
 
 
-def _string_ends_with(comp, call, args):
+def _string_ends_with(comp, call):
     s, end = _arg(comp, call, "s"), _arg(comp, call, "end")
     return CV(s.col.endswith(end.col), st.BOOL)
 
 
 def _string_strip(mode: str):
-    def impl(comp, call, args):
+    def impl(comp, call):
         s = _arg(comp, call, "s")
         chars = _const(comp, call, "chars", None)
         trim = F.lit(chars if chars is not None else _WS)
@@ -418,14 +424,14 @@ def _string_strip(mode: str):
     return impl
 
 
-def _string_replace(comp, call, args):
+def _string_replace(comp, call):
     s = _arg(comp, call, "s")
     old = _arg(comp, call, "old")
     new = _arg(comp, call, "new")
     return CV(F.replace(s.col, old.col, new.col), st.STR)
 
 
-def _string_join(comp, call, args):
+def _string_join(comp, call):
     sep = _arg(comp, call, "s")
     iterable = _arg(comp, call, "iterable")
     if not sep.is_const:
@@ -437,7 +443,7 @@ def _string_join(comp, call, args):
     return CV(F.array_join(iterable.col, sep.const), st.STR)
 
 
-def _string_split(comp, call, args):
+def _string_split(comp, call):
     s = _arg(comp, call, "s")
     sep = _const(comp, call, "sep", None)
     maxsplit = int(_const(comp, call, "maxsplit", -1))
@@ -451,7 +457,7 @@ def _string_split(comp, call, args):
     return CV(out, st.list_of(st.STR))
 
 
-def _string_slice(comp, call, args):
+def _string_slice(comp, call):
     s = _arg(comp, call, "s")
     start = int(_const(comp, call, "start"))
     end = int(_const(comp, call, "end"))
@@ -464,14 +470,14 @@ def _regex_pattern(pattern: str, case_insensitive: bool) -> str:
     return f"(?i){pattern}" if case_insensitive else pattern
 
 
-def _regex_match(comp, call, args):
+def _regex_match(comp, call):
     target = _arg(comp, call, "target")
     pattern = _const(comp, call, "pattern")
     ci = bool(_const(comp, call, "case_insensitive", False))
     return CV(target.col.rlike(_regex_pattern(pattern, ci)), st.BOOL)
 
 
-def _regex_match_map(comp, call, args):
+def _regex_match_map(comp, call):
     target = _arg(comp, call, "target")
     pattern = _const(comp, call, "pattern")
     ci = bool(_const(comp, call, "case_insensitive", False))
@@ -481,7 +487,7 @@ def _regex_match_map(comp, call, args):
     return CV(fn(target.col, lambda x: x.rlike(pat)), st.BOOL)
 
 
-def _count_regex_matches(comp, call, args):
+def _count_regex_matches(comp, call):
     target = _arg(comp, call, "target")
     patterns = _const(comp, call, "patterns")
     total = None
@@ -491,7 +497,7 @@ def _count_regex_matches(comp, call, args):
     return CV(total if total is not None else F.lit(0), st.INT)
 
 
-def _text_contains(comp, call, args):
+def _text_contains(comp, call):
     """Word-boundary phrase search (example_plugins/src/udfs/text_contains.py:14)."""
     text = _arg(comp, call, "text")
     phrase = _const(comp, call, "phrase")
@@ -500,18 +506,18 @@ def _text_contains(comp, call, args):
     return CV(text.col.rlike(_regex_pattern(pat, not cs)), st.BOOL)
 
 
-def _base64_encode(comp, call, args):
+def _base64_encode(comp, call):
     s = _arg(comp, call, "s")
     return CV(F.base64(F.encode(s.col, "utf-8")), st.STR)
 
 
-def _base64_decode(comp, call, args):
+def _base64_decode(comp, call):
     s = _arg(comp, call, "s")
     return CV(F.decode(F.unbase64(s.col), "utf-8"), st.STR)
 
 
 def _hash_fn(which: str):
-    def impl(comp, call, args):
+    def impl(comp, call):
         s = _arg(comp, call, "s")
         b = F.encode(s.col, "utf-8")
         if which == "md5":
@@ -527,7 +533,7 @@ def _hash_fn(which: str):
     return impl
 
 
-def _parse_int(comp, call, args):
+def _parse_int(comp, call):
     """int(str) — ValueError is an *expected* failure → null
     (stdlib/udfs/parse_int.py:11-20). Python accepts surrounding whitespace."""
     v = _arg(comp, call, "value")
@@ -540,7 +546,7 @@ def _parse_int(comp, call, args):
 
 # --- network / identity -----------------------------------------------------
 
-def _email_local_part(comp, call, args):
+def _email_local_part(comp, call):
     email = _arg(comp, call, "email")
     # rsplit('@', 1)[0]; no '@' → expected failure → null
     return CV(
@@ -549,7 +555,7 @@ def _email_local_part(comp, call, args):
     )
 
 
-def _email_subdomain(comp, call, args):
+def _email_subdomain(comp, call):
     email = _arg(comp, call, "email")
     return CV(
         F.when(email.col.contains("@"), F.lower(F.substring_index(email.col, "@", -1))),
@@ -557,27 +563,22 @@ def _email_subdomain(comp, call, args):
     )
 
 
-def _phone_prefix(comp, call, args):
+def _phone_prefix(comp, call):
     phone = _arg(comp, call, "number")
     return CV(F.substring(phone.col, F.lit(1), F.greatest(F.length(phone.col) - 4, F.lit(0))), st.STR)
 
 
-def _ip_network(comp, call, args):
+def _ip_network(comp, call):
     """v4: zero the last octet (stdlib/udfs/ip_network.py:13-28). v6 handled
     by the pandas fallback in osprey_spark.functions.network."""
     ip = _arg(comp, call, "ip")
     v4 = r"^\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}$"
     native = F.regexp_replace(ip.col, r"\.\d{1,3}$", ".0")
-    try:
-        from osprey_spark.functions.network import ip_network_v6_udf
-
-        fallback = ip_network_v6_udf(ip.col)
-    except Exception:
-        fallback = F.lit(None).cast("string")
+    fallback = network.ip_network_v6_udf(ip.col)
     return CV(F.when(ip.col.rlike(v4), native).otherwise(fallback), st.STR)
 
 
-def _extract_cookie(comp, call, args):
+def _extract_cookie(comp, call):
     header = _arg(comp, call, "cookies")
     key = _const(comp, call, "key")
     pat = r"(?:^|;\s*)" + _re.escape(key) + r"=([^;]*)"
@@ -587,83 +588,173 @@ def _extract_cookie(comp, call, args):
 
 # --- random (nondeterministic — excluded from parity tests) -----------------
 
-def _random_bool(comp, call, args):
+def _random_bool(comp, call):
     p = float(_const(comp, call, "percentage_chance"))
     if not (0.0 < p < 1.0):
         raise SmlError("percentage_chance must be between 0 and 1 exclusive", call.span)
     return CV(F.rand() < p, st.BOOL)
 
 
-def _random_int(comp, call, args):
+def _random_int(comp, call):
     start = int(_const(comp, call, "start"))
     end = int(_const(comp, call, "end"))
     return CV((F.rand() * (end - start + 1)).cast("long") + start, st.INT)
 
 
-def default_registry():
-    reg = {
-        # engine / extraction
-        "JsonData": _json_data,
-        "Entity": _entity,
-        "EntityJson": _entity_json,
-        "GetActionName": _get_action_name,
-        "GetActionId": _get_action_id,
-        "Rule": _rule,
-        "WhenRules": _when_rules,
-        "DeclareVerdict": _declare_verdict,
-        "LabelAdd": _label_mutation("label_add"),
-        "LabelRemove": _label_mutation("label_remove"),
-        "BanUser": _ban_user,
-        "HasLabel": _has_label,
-        "MXLookup": _mx_lookup,
-        "ResolveOptional": _resolve_optional,
-        "ListLength": _list_length,
-        "ListRead": _list_read,
-        "ListSort": _list_sort,
-        # date/time
-        "TimeDelta": _time_delta,
-        "TimeSince": _time_since,
-        "GetTimedeltaBucket": _get_timedelta_bucket,
-        "GetTimestampBucket": _get_timestamp_bucket,
-        "GetSnowflakeBucket": _get_snowflake_bucket,
-        # strings
-        "StringLength": _str1(F.length, st.INT),
-        "StringToLower": _str1(F.lower),
-        "StringToUpper": _str1(F.upper),
-        "StringStartsWith": _string_starts_with,
-        "StringEndsWith": _string_ends_with,
-        "StringStrip": _string_strip("both"),
-        "StringLStrip": _string_strip("left"),
-        "StringRStrip": _string_strip("right"),
-        "StringReplace": _string_replace,
-        "StringJoin": _string_join,
-        "StringSplit": _string_split,
-        "StringSlice": _string_slice,
-        "RegexMatch": _regex_match,
-        "RegexMatchMap": _regex_match_map,
-        "CountRegexMatches": _count_regex_matches,
-        "TextContains": _text_contains,
-        "Base64Encode": _base64_encode,
-        "Base64Decode": _base64_decode,
-        "HashMd5": _hash_fn("md5"),
-        "HashSha1": _hash_fn("sha1"),
-        "HashSha256": _hash_fn("sha256"),
-        "HashSha512": _hash_fn("sha512"),
-        "ParseInt": _parse_int,
-        # network / identity
-        "EmailLocalPart": _email_local_part,
-        "EmailSubdomain": _email_subdomain,
-        "PhonePrefix": _phone_prefix,
-        "IpNetwork": _ip_network,
-        "ExtractCookie": _extract_cookie,
-        # random
-        "RandomBool": _random_bool,
-        "RandomInt": _random_int,
-    }
-    try:
-        from osprey_spark.functions import register_pandas_udfs
+@dataclass(frozen=True)
+class Fn:
+    """One SML function, declared once: the compiler calls ``build`` and
+    the validator reads the rest (reference ``UDFBase[Arguments, RValue]``
+    plus ``register_udfs``).
 
-        register_pandas_udfs(reg)
-    except ImportError:
-        pass
-    return reg
+    ``build(comp, call)`` emits the call's ``CV``; ``None`` for
+    ``Import``/``Require``, which the compiler walks as statements.
+    Kwargs (reference engine/udf/arguments.py:25-128): ``required`` /
+    ``optional`` mirror the builder's ``_arg``/``_const`` defaults;
+    ``const`` kwargs must be a literal, or a Name that resolves one layer
+    deep to a literal assignment (the reference's ConstExpr); ``lists``
+    must be list literals; ``fstring_ok`` admits f-strings; ``extra_ok``
+    allows arbitrary additional kwargs (ExperimentWhen's bucket names).
+    ``ret`` is the validator's return type: an ``st`` type (``Optional``
+    when ``ret_optional``), ``"ann"`` for the assignment's annotation,
+    or ``None`` when undeclared (typed ``any``)."""
+
+    build: Optional[Callable[..., CV]]
+    required: frozenset = frozenset()
+    optional: frozenset = frozenset()
+    const: frozenset = frozenset()
+    lists: frozenset = frozenset()
+    fstring_ok: frozenset = frozenset()
+    extra_ok: bool = False
+    ret: Union[st.SmlType, str, None] = None
+    ret_optional: bool = False
+
+    @property
+    def all_kwargs(self) -> frozenset:
+        return self.required | self.optional
+
+
+def _fn(
+    build, req="", opt="", const="", lists="", fstr="", extra=False, ret=None, ret_optional=False
+) -> Fn:
+    s = lambda x: frozenset(x.split())  # noqa: E731
+    return Fn(build, s(req), s(opt), s(const), s(lists), s(fstr), extra, ret, ret_optional)
+
+
+_CLEAN_FLAGS = (
+    "form remove_emoji space l33t homoglyph unicode_normalize unidecode "
+    "upper lower remove_space remove_punctuation"
+)
+
+FUNCTIONS: dict[str, Fn] = {
+    # engine / extraction
+    "JsonData": _fn(_json_data, req="path", opt="required", const="path required", ret="ann"),
+    "Entity": _fn(_entity, req="type id", const="type", ret=st.entity_of(st.STR)),
+    "EntityJson": _fn(
+        _entity_json, req="type path", opt="required", const="type path required", ret=st.entity_of(st.STR)
+    ),
+    "GetActionName": _fn(_get_action_name, ret=st.STR),
+    "GetActionId": _fn(_get_action_id, ret=st.INT),
+    "Rule": _fn(_rule, req="when_all description", lists="when_all", fstr="description", ret=st.RULE),
+    "WhenRules": _fn(_when_rules, req="rules_any then", lists="rules_any then", ret=st.EFFECT),
+    "DeclareVerdict": _fn(_declare_verdict, req="verdict", const="verdict", ret=st.EFFECT),
+    "LabelAdd": _fn(
+        _label_mutation("label_add"),
+        req="entity label", opt="apply_if expires_after delay_action_by", const="label", ret=st.EFFECT,
+    ),
+    "LabelRemove": _fn(
+        _label_mutation("label_remove"),
+        req="entity label", opt="apply_if expires_after delay_action_by", const="label", ret=st.EFFECT,
+    ),
+    "BanUser": _fn(_ban_user, req="entity comment", ret=st.EFFECT),
+    "HasLabel": _fn(
+        _has_label,
+        req="entity label",
+        opt="status manual min_label_age error_on_empty",
+        const="label status manual error_on_empty",
+        ret=st.BOOL,
+    ),
+    "MXLookup": _fn(_mx_lookup, opt="domain"),
+    "ResolveOptional": _fn(_resolve_optional, req="value default", ret="ann"),
+    "ListLength": _fn(_list_length, req="list", ret=st.INT),
+    "ListRead": _fn(_list_read, req="list", opt="index", const="index"),
+    "ListSort": _fn(_list_sort, req="list", opt="reverse", const="reverse"),
+    "Import": _fn(None, req="rules", lists="rules"),
+    "Require": _fn(None, req="rule", opt="require_if", fstr="rule"),
+    # date / time
+    "TimeDelta": _fn(
+        _time_delta,
+        opt="weeks days hours minutes seconds",
+        const="weeks days hours minutes seconds",
+        ret=st.TIMEDELTA,
+    ),
+    "TimeSince": _fn(_time_since, req="timestamp", ret=st.TIMEDELTA),
+    "GetTimedeltaBucket": _fn(
+        _get_timedelta_bucket, req="timedelta granularity_seconds", const="granularity_seconds"
+    ),
+    "GetTimestampBucket": _fn(
+        _get_timestamp_bucket, req="timestamp granularity_seconds", const="granularity_seconds"
+    ),
+    "GetSnowflakeBucket": _fn(
+        _get_snowflake_bucket, req="snowflake granularity_seconds", const="granularity_seconds"
+    ),
+    # strings
+    "StringLength": _fn(_str1(F.length, st.INT), req="s", ret=st.INT),
+    "StringToLower": _fn(_str1(F.lower), req="s", ret=st.STR),
+    "StringToUpper": _fn(_str1(F.upper), req="s", ret=st.STR),
+    "StringStartsWith": _fn(_string_starts_with, req="s start"),
+    "StringEndsWith": _fn(_string_ends_with, req="s end"),
+    "StringStrip": _fn(_string_strip("both"), req="s", opt="chars", const="chars", ret=st.STR),
+    "StringLStrip": _fn(_string_strip("left"), req="s", opt="chars", const="chars"),
+    "StringRStrip": _fn(_string_strip("right"), req="s", opt="chars", const="chars"),
+    "StringReplace": _fn(_string_replace, req="s old new", ret=st.STR),
+    "StringJoin": _fn(_string_join, req="s iterable", const="s", ret=st.STR),
+    "StringSplit": _fn(
+        _string_split, req="s", opt="sep maxsplit", const="sep maxsplit", ret=st.list_of(st.STR)
+    ),
+    "StringSlice": _fn(_string_slice, req="s start end", const="start end"),
+    "RegexMatch": _fn(
+        _regex_match,
+        req="target pattern", opt="case_insensitive", const="pattern case_insensitive", ret=st.BOOL,
+    ),
+    "RegexMatchMap": _fn(
+        _regex_match_map,
+        req="target pattern", opt="case_insensitive mode", const="pattern case_insensitive mode",
+    ),
+    "CountRegexMatches": _fn(_count_regex_matches, req="target patterns", const="patterns", ret=st.INT),
+    "TextContains": _fn(
+        _text_contains, req="text phrase", opt="case_sensitive", const="phrase case_sensitive", ret=st.BOOL
+    ),
+    "Base64Encode": _fn(_base64_encode, req="s"),
+    "Base64Decode": _fn(_base64_decode, req="s"),
+    "HashMd5": _fn(_hash_fn("md5"), req="s"),
+    "HashSha1": _fn(_hash_fn("sha1"), req="s"),
+    "HashSha256": _fn(_hash_fn("sha256"), req="s"),
+    "HashSha512": _fn(_hash_fn("sha512"), req="s"),
+    "ParseInt": _fn(_parse_int, req="value", ret=st.INT, ret_optional=True),
+    "StringClean": _fn(textnorm.string_clean_impl, req="s", opt=_CLEAN_FLAGS, const=_CLEAN_FLAGS),
+    "StringExtractDomains": _fn(textnorm.string_extract_domains_impl, req="s"),
+    "StringExtractURLs": _fn(textnorm.string_extract_urls_impl, req="s"),
+    # network / identity
+    "EmailDomain": _fn(network.email_domain_impl, req="email"),
+    "EmailLocalPart": _fn(_email_local_part, req="email"),
+    "EmailSubdomain": _fn(_email_subdomain, req="email"),
+    "DomainTld": _fn(network.domain_tld_impl, req="domain"),
+    "DomainChopper": _fn(network.domain_chopper_impl, req="urls"),
+    "PhoneCountry": _fn(network.phone_country_impl, req="number"),
+    "PhonePrefix": _fn(_phone_prefix, req="number"),
+    "IpNetwork": _fn(_ip_network, req="ip"),
+    "ExtractCookie": _fn(_extract_cookie, req="cookies key", const="key"),
+    # random / experiments
+    "RandomBool": _fn(_random_bool, req="percentage_chance", const="percentage_chance", ret=st.BOOL),
+    "RandomInt": _fn(_random_int, req="start end", const="start end", ret=st.INT),
+    "Experiment": _fn(
+        experiments.experiment_impl,
+        req="entity buckets bucket_sizes",
+        opt="version revision",
+        const="buckets bucket_sizes version revision",
+    ),
+    "ExperimentWhen": _fn(
+        experiments.experiment_when_impl, req="experiment", extra=True, ret=st.list_of(st.BOOL)
+    ),
+}

@@ -21,8 +21,10 @@ This is a SEPARATE layer from compilation, exactly as in the reference:
 execution tests there pick validators per test (engine/conftest.py
 run_validation markers), and the executor's None-calculus handles null
 operands the validator would ask an author to narrow. The streaming
-pipeline (the rule-authoring surface) validates by default; the raw
-``RulesetCompiler`` does not.
+pipeline (the rule-authoring surface) always validates; the raw
+``RulesetCompiler`` does not. Function names, kwarg signatures and
+return types come from ``stdlib.FUNCTIONS``, the table the compiler
+builds from.
 """
 
 from __future__ import annotations
@@ -34,6 +36,7 @@ from typing import Callable, Optional
 from osprey_spark.sml import nodes as g
 from osprey_spark.sml import parser
 from osprey_spark.sml import types as st
+from osprey_spark.sml.stdlib import FUNCTIONS
 
 # --- error model ------------------------------------------------------------
 
@@ -177,42 +180,6 @@ _BINOP_TRANSITIONS: dict[str, list[tuple[tuple, tuple, str]]] = {
 
 _RESULT_T = {"str": V_STR, "int": V_INT, "float": V_FLOAT, "bool": V_BOOL}
 
-# stdlib UDF return types for validation ('ann' = use the assignment's
-# annotation, the reference's dynamic-call rvalue checker)
-_UDF_RETURNS: dict[str, object] = {
-    "JsonData": "ann",
-    "EntityJson": VType(st.entity_of(st.STR)),
-    "Entity": VType(st.entity_of(st.STR)),
-    "Rule": VType(st.RULE),
-    "WhenRules": VType(st.EFFECT),
-    "DeclareVerdict": VType(st.EFFECT),
-    "LabelAdd": VType(st.EFFECT),
-    "LabelRemove": VType(st.EFFECT),
-    "BanUser": VType(st.EFFECT),
-    "HasLabel": V_BOOL,
-    "TextContains": V_BOOL,
-    "RegexMatch": V_BOOL,
-    "GetActionName": V_STR,
-    "GetActionId": V_INT,
-    "TimeDelta": VType(st.TIMEDELTA),
-    "TimeSince": VType(st.TIMEDELTA),
-    "StringLength": V_INT,
-    "ParseInt": VType(st.INT, optional=True),
-    "StringToLower": V_STR,
-    "StringToUpper": V_STR,
-    "StringStrip": V_STR,
-    "StringReplace": V_STR,
-    "StringJoin": V_STR,
-    "StringSplit": VType(st.list_of(st.STR)),
-    "ListLength": V_INT,
-    "CountRegexMatches": V_INT,
-    "RandomBool": V_BOOL,
-    "RandomInt": V_INT,
-    "ExperimentWhen": V_BOOL,
-    "ResolveOptional": "ann",
-}
-
-
 def _closest(name: str, candidates) -> Optional[str]:
     """reference utils/get_closest_string_within_threshold — a simple
     edit-distance pick under a 1/3-length threshold."""
@@ -246,16 +213,11 @@ class Validator:
         self,
         sources: dict[str, str],
         entry: str = "main.sml",
-        input_schema=None,
-        extra_udf_returns: Optional[dict[str, VType]] = None,
     ):
         self.sources = sources
         self.entry = entry
         self.entries: list[ValidationEntry] = []
         self.roots: dict[str, g.Root] = {}
-        self.udf_returns = dict(_UDF_RETURNS)
-        if extra_udf_returns:
-            self.udf_returns.update(extra_udf_returns)
         # name -> (span, VType, file)
         self.decls: dict[str, tuple[g.Span, VType, str]] = {}
         self.local_decls: dict[str, dict[str, tuple[g.Span, VType]]] = {}
@@ -479,12 +441,10 @@ class Validator:
         return False
 
     def _check_call_kwargs(self) -> None:
-        from osprey_spark.sml.signatures import SIGNATURES
-
         for path, root in self.roots.items():
             for stmt in root.statements:
                 for call in self._calls_of(stmt):
-                    sig = SIGNATURES.get(call.func)
+                    sig = FUNCTIONS.get(call.func)
                     if sig is None:
                         continue  # unknown names are reported by _type_call
                     valid = ", ".join(f"`{k}`" for k in sorted(sig.all_kwargs))
@@ -695,7 +655,8 @@ class Validator:
             for stmt in root.statements:
                 if isinstance(stmt, g.ExprStatement):
                     call = stmt.call
-                    if call.func in self._NO_RESULT or call.func not in self.udf_returns:
+                    fn = FUNCTIONS.get(call.func)
+                    if call.func in self._NO_RESULT or fn is None or fn.ret is None:
                         # unknown funcs are reported by the type pass
                         pass
                     else:
@@ -990,34 +951,12 @@ class Validator:
             return self._type_call(node, ann)
         return V_ANY
 
-    # stdlib names the validator accepts without a return-type entry
-    _KNOWN_UDFS = frozenset(
-        {
-            "Import", "Require", "JsonData", "EntityJson", "Entity", "Rule",
-            "WhenRules", "DeclareVerdict", "LabelAdd", "LabelRemove", "HasLabel",
-            "BanUser", "TextContains", "RegexMatch", "RegexMatchMap",
-            "CountRegexMatches", "GetActionName", "GetActionId", "TimeDelta",
-            "TimeSince", "GetTimedeltaBucket", "GetTimestampBucket",
-            "GetSnowflakeBucket", "StringLength", "StringToLower", "StringToUpper",
-            "StringStartsWith", "StringEndsWith", "StringStrip", "StringLStrip",
-            "StringRStrip", "StringReplace", "StringJoin", "StringSplit",
-            "StringSlice", "StringClean", "StringExtractDomains",
-            "StringExtractURLs", "Base64Encode", "Base64Decode", "HashMd5",
-            "HashSha1", "HashSha256", "HashSha512", "ParseInt", "IpNetwork",
-            "EmailDomain", "EmailSubdomain", "EmailLocalPart", "DomainTld",
-            "DomainChopper", "PhoneCountry", "PhonePrefix", "ExtractCookie",
-            "MXLookup", "RandomBool", "RandomInt", "Experiment", "ExperimentWhen",
-            "ResolveOptional", "ListLength", "ListRead", "ListSort",
-        }
-    )
-
     def _type_call(self, call: g.Call, ann: Optional[g.TypeAnn]) -> VType:
-        if call.func not in self._KNOWN_UDFS and call.func not in self.udf_returns:
+        fn = FUNCTIONS.get(call.func)
+        if fn is None:
             # unknown UDF name with a did-you-mean hint (the reference's
             # ValidateCallKwargs rejects unregistered rvalues)
-            closest = _closest(
-                call.func, self._KNOWN_UDFS | set(self.udf_returns)
-            )
+            closest = _closest(call.func, FUNCTIONS)
             self._error(
                 f"unknown function `{call.func}`",
                 call.span,
@@ -1029,11 +968,11 @@ class Validator:
                     self._type_of(i)
             else:
                 self._type_of(v)
-        ret = self.udf_returns.get(call.func)
+        ret = fn.ret if fn is not None else None
         if ret == "ann":
             return self._ann_vtype(ann) if ann is not None else V_ANY
-        if isinstance(ret, VType):
-            return ret
+        if ret is not None:
+            return VType(ret, fn.ret_optional)
         return V_ANY
 
     def _type_fstring(self, node: g.FormatString) -> VType:
@@ -1264,12 +1203,11 @@ def validate_sources(
     sources: dict[str, str],
     entry: str = "main.sml",
     warning_as_error: bool = False,
-    extra_udf_returns: Optional[dict[str, VType]] = None,
 ) -> list[ValidationEntry]:
     """Run all validators; raise ValidationFailed on errors (and on
     warnings when ``warning_as_error``). Returns the entries (warnings)
     otherwise — the reference's validate_sources contract."""
-    entries = Validator(sources, entry, extra_udf_returns=extra_udf_returns).run()
+    entries = Validator(sources, entry).run()
     bad = [e for e in entries if e.kind == "error" or warning_as_error]
     if bad:
         raise ValidationFailed(entries, sources)

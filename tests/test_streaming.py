@@ -265,6 +265,32 @@ def test_late_rows_replay_matches_first_attempt(spark, workdir):
     assert again["high_watermark_epoch"] == clean["high_watermark_epoch"]
 
 
+def test_extra_sinks_isolated(spark, workdir):
+    """The MultiOutputSink analog: an extra sink that raises neither
+    blocks the batch's commit nor the extra sinks after it."""
+    t0 = datetime.datetime(2024, 1, 1)
+    batch = spark.createDataFrame(
+        [("a", 0, "user", "hello", "", t0), ("a", 1, "user", "bye", "", t0)],
+        TRANSCRIPT_SCHEMA,
+    )
+    seen = []
+
+    def failing(df, batch_id):
+        raise RuntimeError("sink down")
+
+    def recording(df, batch_id):
+        seen.append((batch_id, sorted(r.turn_idx for r in df.select("turn_idx").collect())))
+
+    pipe = RuleStreamPipeline(
+        spark, RULES, os.path.join(workdir, "p"), extra_sinks=[failing, recording]
+    )
+    pipe.process_batch(batch, 0)
+    assert pipe.sink.is_committed(0)
+    rows = sorted((r.turn_idx, list(r["__verdicts"])) for r in pipe.results().collect())
+    assert rows == [(0, ["flag_turn"]), (1, [])]
+    assert seen == [(0, [0, 1])]
+
+
 def test_cep_state_fn_out_of_order():
     """The state machine must be arrival-order independent: feed turn 2
     before turns 0/1 (across separate micro-batches) and still match."""

@@ -162,6 +162,18 @@ def test_non_bool_boolop_operand_rejected():
     assert "has type `int`, expected `bool`" in out
 
 
+def test_experiment_when_is_not_a_bool_operand():
+    # ExperimentWhen compiles to the resolved bucket's list[bool]
+    out = _errors("""
+    U: Entity[str] = EntityJson(type='User', path='$.uid')
+    Exp = Experiment(entity=U, buckets=['control', 'treat'], bucket_sizes=[50, 50])
+    W = ExperimentWhen(experiment=Exp, control=[True], treat=[False])
+    Z = W and True
+    """)
+    assert "unsupported operand type for `and`" in out
+    assert "has type `list[bool]`, expected `bool`" in out
+
+
 def test_not_on_non_bool_rejected():
     out = _errors("""
     S: str = JsonData(path='$.s')
@@ -275,14 +287,34 @@ def test_unknown_udf_did_you_mean():
     assert "perhaps you meant `JsonData`?" in out
 
 
-def test_custom_udf_returns_accepted():
-    # extra_udf_returns registers plugin UDFs for validation
-    from osprey_spark.sml.validators import V_BOOL
+def test_plugin_function_row_validates_and_compiles(spark, monkeypatch):
+    # a plugin function is one more stdlib.FUNCTIONS row: the same
+    # declaration makes it valid (kwargs, bool return) and executable
+    from pyspark.sql import functions as F
 
-    validate_sources(
-        {"main.sml": "X = MyPluginCheck(a='1')\n"},
-        extra_udf_returns={"MyPluginCheck": V_BOOL},
+    from osprey_spark.sml import stdlib
+    from osprey_spark.sml import types as st
+    from osprey_spark.sml.compiler import CV, RulesetCompiler
+
+    def build(comp, call):
+        a = stdlib._arg(comp, call, "a")
+        return CV(a.col == F.lit("1"), st.BOOL)
+
+    monkeypatch.setitem(
+        stdlib.FUNCTIONS,
+        "MyPluginCheck",
+        stdlib.Fn(build, required=frozenset({"a"}), ret=st.BOOL),
     )
+    sources = {"main.sml": (
+        "U: str = JsonData(path='$.user')\n"
+        "X = MyPluginCheck(a=U)\n"
+        "Y = X and True\n"
+    )}
+    validate_sources(sources)
+    df = spark.createDataFrame([("1", None), ("2", None)], "user string, ts timestamp")
+    plan = RulesetCompiler(sources, input_schema=df.schema).compile()
+    rows = plan.apply(df).select("user", "X", "Y").orderBy("user").collect()
+    assert [tuple(r) for r in rows] == [("1", True, True), ("2", False, False)]
 
 
 # --- round 3: kwargs / unused locals / import cycles + golden snapshots -------
