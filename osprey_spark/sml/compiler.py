@@ -239,6 +239,10 @@ class CompiledRuleset:
     # feature_name_to_entity_type_mapping.py:9): which entity type each
     # stored entity feature resolves to — the UI-API surface reads this
     feature_entity_types: dict[str, str] = None  # type: ignore[assignment]
+    # apply()'s output projections, keyed by include_mutation_structs
+    _projections: dict[bool, list[Column]] = field(
+        default_factory=dict, repr=False, compare=False
+    )
 
     @property
     def rule_descriptions(self) -> dict[str, str]:
@@ -535,6 +539,10 @@ class CompiledRuleset:
         )
 
     MUTATION_STRUCTS_COL = "__label_mutation_structs"
+    MUTATION_STRUCTS_TYPE = (
+        "array<struct<entity_type:string,entity_id:string,label_name:string,"
+        "status:int,event_ts:timestamp,expires_ts:timestamp,apply_at:timestamp>>"
+    )
 
     def apply(
         self,
@@ -551,28 +559,35 @@ class CompiledRuleset:
         frames pass through untouched).
 
         ``include_mutation_structs=True`` adds the applied-label-mutation
-        struct array so the streaming pipeline can derive mutation rows
-        from the SAME evaluated (persisted) frame instead of re-running
-        the plan."""
+        struct array, which the streaming pipeline writes with the sink
+        batch so the label store reads the batch's mutations from it.
+
+        The output projection is built once per ruleset and reused: its
+        Column tree is the same for every batch, and building it costs a
+        py4j call per node."""
         pt = passthrough if passthrough is not None else df.columns
         df = self.resolve_label_lookups(
             df, label_state, unique_label_state=unique_label_state
         )
-        cols = [F.col(c) for c in pt]
-        cols.extend(self.output_columns())
-        if include_mutation_structs:
-            cols.append(self.label_mutation_structs_col().alias(self.MUTATION_STRUCTS_COL))
-        return df.select(*cols)
+        return df.select(*[F.col(c) for c in pt], *self._projection(include_mutation_structs))
+
+    def _projection(self, include_mutation_structs: bool) -> list[Column]:
+        cols = self._projections.get(include_mutation_structs)
+        if cols is None:
+            cols = self.output_columns()
+            if include_mutation_structs:
+                cols.append(
+                    self.label_mutation_structs_col().alias(self.MUTATION_STRUCTS_COL)
+                )
+            self._projections[include_mutation_structs] = cols
+        return cols
 
     def label_mutation_structs_col(self) -> Column:
         """Array of applied-mutation structs for this row (empty when no
         mutation applies). Status encoding follows
         worker/lib/osprey_shared/labels.py:41-57 (REMOVED=0, ADDED=1);
         ``apply_at`` carries delay_action_by (labels.py:46-47)."""
-        empty = F.array().cast(
-            "array<struct<entity_type:string,entity_id:string,label_name:string,"
-            "status:int,event_ts:timestamp,expires_ts:timestamp,apply_at:timestamp>>"
-        )
+        empty = F.array().cast(self.MUTATION_STRUCTS_TYPE)
         # concat of conditional singleton arrays, not filter(array(...)):
         # keeps the mutation-struct projection whole-stage-codegen'd (see
         # the note above verdicts_col)
@@ -615,7 +630,7 @@ class CompiledRuleset:
         event_ts, expires_ts, apply_at.
 
         ``df`` is a frame produced by ``apply(include_mutation_structs=True)``
-        (typically persisted by the streaming pipeline): the rows are an
+        (or a sink batch written from one): the rows are an
         explode of its ``__label_mutation_structs`` column, so HasLabel-
         dependent apply conditions see the lookups that frame resolved and
         nothing is evaluated twice."""

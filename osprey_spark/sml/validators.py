@@ -656,8 +656,10 @@ class Validator:
                 if isinstance(stmt, g.ExprStatement):
                     call = stmt.call
                     fn = FUNCTIONS.get(call.func)
-                    if call.func in self._NO_RESULT or fn is None or fn.ret is None:
-                        # unknown funcs are reported by the type pass
+                    if call.func in self._NO_RESULT or fn is None:
+                        # unknown funcs are reported by the type pass; a
+                        # call whose row declares no return type still
+                        # has a result (typed ``any``)
                         pass
                     else:
                         self._error(
@@ -962,10 +964,19 @@ class Validator:
                 call.span,
                 hint=f"perhaps you meant `{closest}`?" if closest else "not a registered UDF",
             )
-        for v in call.kwargs.values():
+        for k, v in call.kwargs.items():
             if isinstance(v, g.ListLiteral):
                 for i in v.items:
-                    self._type_of(i)
+                    it = self._type_of(i)
+                    if (call.func, k) == ("Rule", "when_all") and not _is_compat(
+                        it, ("bool",), accept_optional=True
+                    ):
+                        self._error(
+                            "unsupported type for a `when_all` condition",
+                            i.span,
+                            hint=f"has type {it.display()}, expected `bool`",
+                            extra=self._name_def_span(i),
+                        )
             else:
                 self._type_of(v)
         ret = fn.ret if fn is not None else None

@@ -17,37 +17,49 @@ worker/lib/storage/labels.py):
   itself applies the state change immediately, as the reference's
   LabelOutputSink does.
 
-Storage: ``MorStateStore`` in merge-on-read mode — a batch
-APPENDS only its per-key mutation winners as one generation directory
-(O(|delta|) writes, no read of current state), and readers resolve
-base+deltas with :func:`label_resolver`. The round-2/3 copy-on-write
-path rewrote every dirty bucket's full resident set; with a dense delta
-(every bucket dirty) that is an O(|state|) rewrite per batch — the
-round-3 full-stack run measured the flagged-set rewrite growing
-15.5k→47.9k rows/batch. MOR keeps the per-batch write at the delta size;
-once the live generations exceed ``max_delta_files`` a merge folds them
-all into one base (per-store compaction), bounding read amplification
-at ``max_delta_files + 1`` directories. Readers see state *as of the
-previous batch* — within one micro-batch, HasLabel joins never observe
-same-batch writes, matching the reference's ordering (effects apply
-after execution, output_sink.py:186-211).
+Storage: ``MorStateStore`` in merge-on-read mode, with no write of its
+own on the streaming path. The pipeline registers each committed sink
+batch directory ``results/data/batch=<b>`` as a log generation: its rows
+carry ``__label_mutation_structs``, so the store reads the batch's
+mutations as an explode of that column (empty entity ids and label names
+dropped) and the batch's one data write is also its label delta.
+External callers of ``apply_mutations`` append their valid raw rows as a
+written generation. Readers resolve all generations with
+:func:`label_resolver`; once the live generations exceed
+``max_delta_files`` the call that adds one folds them all into one base
+(per-store compaction), bounding read amplification at
+``max_delta_files + 1`` directories. The round-2/3 copy-on-write path
+rewrote every dirty bucket's full resident set — the round-3 full-stack
+run measured the flagged-set rewrite growing 15.5k→47.9k rows/batch.
+Readers see state *as of the previous batch* — within one micro-batch,
+HasLabel joins never observe same-batch writes, matching the reference's
+ordering (effects apply after execution, output_sink.py:186-211).
 
-Cross-batch resolution (:func:`label_resolver`) reproduces the
-sequential fold of the reference's conflict rules exactly: an automatic
-mutation cannot override a standing manual status, so after the LAST
-manual mutation every later automatic mutation is dropped and state
-stays manual. Hence the fold's fixpoint is *the latest manual mutation
-if any exists, else the latest mutation* — an associative ``max_by``
-over (is_manual, write-generation), safe for any compaction prefix.
+Resolution (:func:`label_resolver`) holds both conflict rules in one
+ordering, ``max_by`` over (is_manual, generation, status, created_at):
+
+- across generations it reproduces the reference's sequential fold: an
+  automatic mutation cannot override a standing manual status, so after
+  the LAST manual mutation every later automatic mutation is dropped
+  and state stays manual — the fold's fixpoint is *the latest manual
+  mutation if any exists, else the latest mutation*;
+- within one generation it is the in-batch rule (higher status, then
+  later event), because ``is_manual`` is monotone in ``status``
+  (0, 1 automatic; 2, 3 manual).
+
+It is associative, so compaction of any generation prefix resolves
+identically against later generations.
 """
 
 from __future__ import annotations
 
+import functools
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from osprey_spark.sml.compiler import CompiledRuleset
 from osprey_spark.streaming.state_store import GEN_COL, MorStateStore
 
 STATE_SCHEMA = (
@@ -59,32 +71,69 @@ MUTATION_COLS = ["entity_type", "entity_id", "label_name", "status", "event_ts",
 
 KEY = ["entity_type", "entity_id", "label_name"]
 
+# the columns of a sink batch the store reads: the applied mutations
+_LOG_SCHEMA = (
+    f"{CompiledRuleset.MUTATION_STRUCTS_COL} {CompiledRuleset.MUTATION_STRUCTS_TYPE}"
+)
 
-def label_resolver(df: DataFrame) -> DataFrame:
-    """Collapse MOR delta rows per (entity_type, entity_id, label_name) to
-    the sequential-merge fixpoint: latest MANUAL mutation if one exists,
-    else latest mutation. Proof sketch (worker/lib/osprey_shared/labels.py
-    conflict rules): manual mutations always apply; once state is manual,
-    automatic mutations are dropped (CANNOT_OVERRIDE_MANUAL) and state
-    stays manual — so the fold result is exactly
-    ``max_by(row, (is_manual, write_generation))``. Associative, so lazy
-    compaction of any file prefix resolves identically against later
-    deltas. One aggregation with a map-side partial combine; its buffer
-    is a struct, which a hash aggregation cannot hold, so Spark plans it
-    as a SortAggregate (a sort before the partial and another before the
-    final aggregate)."""
+
+@functools.cache
+def _state_projection(extra: tuple[str, ...]) -> tuple[Column, list[Column]]:
+    """The filter and projection of :func:`_state_rows`. Built once per
+    process: every batch's state read plans them, and a Column tree costs
+    a py4j call per node."""
+    valid = (F.col("entity_id") != "") & (F.col("label_name") != "")
+    cols = [F.col(c) for c in KEY] + [
+        F.col("status").cast("int").alias("status"),
+        F.col("event_ts").alias("created_at"),
+        F.col("expires_ts"),
+        F.col("apply_at"),
+    ]
+    return valid, cols + [F.col(c) for c in extra]
+
+
+def _state_rows(mutations: DataFrame, *extra: str) -> DataFrame:
+    """Valid mutation rows (non-empty entity id and label name) as state
+    rows, plus the ``extra`` columns."""
+    valid, cols = _state_projection(extra)
+    return mutations.filter(valid).select(*cols)
+
+
+def _sink_mutations(batch: DataFrame) -> DataFrame:
+    """A registered sink batch's label delta: its mutation structs."""
+    rows = batch.select(F.inline(CompiledRuleset.MUTATION_STRUCTS_COL), GEN_COL)
+    return _state_rows(rows, GEN_COL)
+
+
+@functools.cache
+def _resolution() -> tuple[Column, list[Column]]:
+    """:func:`label_resolver`'s aggregate and projection, built once (see
+    :func:`_state_projection`)."""
     payload = F.struct(
         F.col("status"), F.col("created_at"), F.col("expires_ts"), F.col("apply_at")
     )
     order = F.struct(
         F.col("status").isin(2, 3).cast("int").alias("is_manual"),
         F.col(GEN_COL).alias("gen"),
+        F.col("status"),
+        F.col("created_at"),
     )
-    return (
-        df.groupBy(*KEY)
-        .agg(F.max_by(payload, order).alias("_r"))
-        .select(*KEY, "_r.*")
-    )
+    cols = [F.col(c) for c in KEY] + [F.col("_r.*")]
+    return F.max_by(payload, order).alias("_r"), cols
+
+
+def label_resolver(df: DataFrame) -> DataFrame:
+    """Collapse rows per (entity_type, entity_id, label_name) to the
+    reference's conflict-rule fixpoint: ``max_by`` over (is_manual,
+    generation, status, created_at) — the latest generation's winner
+    among manual mutations if one exists, else among all; within a
+    generation, the higher status, then the later event (see the module
+    docstring). One aggregation with a map-side partial combine; its
+    buffer is a struct, which a hash aggregation cannot hold, so Spark
+    plans it as a SortAggregate (a sort before the partial and another
+    before the final aggregate)."""
+    agg, cols = _resolution()
+    return df.groupBy(*KEY).agg(agg).select(*cols)
 
 
 class LabelStateStore:
@@ -98,6 +147,8 @@ class LabelStateStore:
             schema=STATE_SCHEMA,
             resolve_fn=label_resolver,
             max_delta_files=max_delta_files,
+            log_schema=_LOG_SCHEMA,
+            log_view=_sink_mutations,
         )
         self.path = path
 
@@ -111,8 +162,16 @@ class LabelStateStore:
     def read(self, spark: SparkSession, before_batch: Optional[int] = None) -> DataFrame:
         return self.store.read(spark, before_batch=before_batch)
 
+    def register(self, spark: SparkSession, directory: str, batch_id: int) -> int:
+        """Take a committed sink batch directory (whose rows carry
+        ``__label_mutation_structs``) as batch ``batch_id``'s label delta;
+        exactly-once per ``batch_id``."""
+        return self.store.register(spark, directory, batch_id)
+
     def apply_mutations(self, mutations: DataFrame, batch_id: Optional[int] = None) -> int:
-        """MERGE a batch of mutation rows into the state table.
+        """MERGE a batch of mutation rows into the state table: the valid
+        rows are appended as they are, and reads resolve conflicts — the
+        in-batch rule included — with :func:`label_resolver`.
 
         Exactly-once per ``batch_id``: a replayed batch whose state delta
         already landed (crash between state apply and sink commit) is a
@@ -120,25 +179,7 @@ class LabelStateStore:
         state on replay."""
         if "apply_at" not in mutations.columns:
             mutations = mutations.withColumn("apply_at", F.col("event_ts"))
-        valid = mutations.filter((F.col("entity_id") != "") & (F.col("label_name") != ""))
-        # in-batch conflict resolution: higher status wins, then later
-        # event (reference MutationDropReason.CONFLICTING_MUTATION) —
-        # max_by over a lexicographic struct key, with a map-side partial
-        # combine. Its struct buffer makes Spark plan a SortAggregate: one
-        # sort before the partial aggregate and one before the final
-        win = F.max_by(
-            F.struct(
-                F.col("status").cast("int").alias("status"),
-                F.col("event_ts").alias("created_at"),
-                F.col("expires_ts").alias("expires_ts"),
-                F.col("apply_at").alias("apply_at"),
-            ),
-            F.struct(F.col("status"), F.col("event_ts")),
-        ).alias("_w")
-        winners = valid.groupBy(*KEY).agg(win).select(*KEY, "_w.*")
-        # merge-on-read append: O(|delta|) writes; cross-batch conflict
-        # resolution (manual-cannot-be-overridden) lives in label_resolver
-        return self.store.merge_append(winners, batch_id=batch_id)
+        return self.store.merge_append(_state_rows(mutations), batch_id=batch_id)
 
     def active_labels(self, spark: SparkSession, as_of=None) -> DataFrame:
         """Labels currently in effect: effective status is ADDED-ish and

@@ -6,23 +6,33 @@ micro-batch stream of transcript turns is evaluated against the compiled
 rule plan; results land in the exactly-once sink; label mutations MERGE
 into the label state store; per-batch metrics are recorded.
 
-One evaluation per micro-batch: the compiled plan (with the applied-
-mutation structs column) is persisted once; mutation rows are an explode
-over the cache, late-data metrics ride the write pass via
-``df.observe()``, and sink lineage comes from parquet footers — the
-round-1 pipeline evaluated the plan 2-3× per batch.
+One write per micro-batch, and no cache: the evaluated frame, with its
+``__label_mutation_structs`` column, is written once as the sink batch
+``results/data/batch=<b>``, and that directory is also the batch's delta
+of both merge-on-read state stores — the label store reads the batch's
+mutations as an explode of the structs, the verdict store reads
+``(key, size(__verdicts))``. Late-data metrics ride the write pass via
+``df.observe()``, sink lineage comes from parquet footers, and extra
+sinks get the committed files read back, so the plan is evaluated once
+and nothing needs a cache.
 
 Within a batch, HasLabel-style joins read label state **as of the
 previous batch** — the reference applies label effects after execution
 (output_sink.py:186-211), so reads never see same-event writes. On
 replay the state stores' ``before_batch`` reads pin that same snapshot
-even if the crash landed after the state delta was applied.
+even if the crash landed after a state registration.
 
 Commit protocol (exactly-once, crash anywhere): one fixed order per
-batch — label merge, then verdict merge (each idempotent per batch id),
-then the sink's commit marker LAST. A replayed batch re-applies nothing
-that already landed and re-writes the (invisible, uncommitted) data
-files.
+batch — the sink's data files, then the label store's registration, then
+the verdict store's (each idempotent per batch id, and each a manifest
+publish with no Spark job unless it compacts), then the sink's commit
+marker LAST. A replayed batch rewrites the (invisible, uncommitted) data
+files with the same rows — it reads the same pre-batch state — and
+re-registers nothing that already landed.
+
+The marker carries the batch's phase walls (``phases``: state reads,
+plan build, data write, registrations — together the batch's wall up to
+the marker) and ``spark_jobs``, the jobs the batch ran.
 
 Resume: Spark's ``checkpointLocation`` tracks the source offsets; batch
 replay after a crash hits the sink's committed-batch guard → no
@@ -32,6 +42,7 @@ duplicates (exactly-once end to end).
 from __future__ import annotations
 
 import os
+import time
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -42,7 +53,7 @@ from osprey_spark.sml.validators import validate_sources
 from osprey_spark.streaming._timeutil import interval_seconds
 from osprey_spark.streaming.label_state import LabelStateStore
 from osprey_spark.streaming.sink import IdempotentParquetSink
-from osprey_spark.streaming.state_store import MorStateStore
+from osprey_spark.streaming.state_store import GEN_COL, MorStateStore
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -124,15 +135,21 @@ class RuleStreamPipeline:
         )
         self.checkpoint = os.path.join(workdir, "checkpoint")
         # verdict counts are additive, so merge-on-read resolution is a
-        # plain SUM over base+delta rows — each batch appends only its
-        # per-conv increments (O(|delta|)); lazy compaction folds the
-        # store once its live generation count passes the threshold
+        # plain SUM; each batch's delta is its sink directory read as
+        # (key, verdicts per turn), and lazy compaction folds the store
+        # once its live generation count passes the threshold
         self.verdict_state = MorStateStore(
             os.path.join(workdir, "verdict_state"),
             schema=f"{key_col} string, prior_verdict_count long",
             resolve_fn=lambda df: df.groupBy(key_col).agg(
                 F.sum("prior_verdict_count").alias("prior_verdict_count")
             ),
+            log_schema=f"{key_col} string, __verdicts array<string>",
+            log_view=lambda df: df.select(
+                key_col,
+                F.size("__verdicts").cast("long").alias("prior_verdict_count"),
+                GEN_COL,
+            ).filter(F.col("prior_verdict_count") > 0),
         )
         schema_str = input_schema or TRANSCRIPT_SCHEMA
         from pyspark.sql.types import _parse_datatype_string
@@ -169,15 +186,6 @@ class RuleStreamPipeline:
         far. The stream-state side of cross-turn correlation."""
         return self.verdict_state.read(self.spark, before_batch=before_batch)
 
-    def _update_verdict_state(self, out: DataFrame, batch_id: int) -> None:
-        delta = (
-            out.select(self.key_col, F.size("__verdicts").alias("_n"))
-            .groupBy(self.key_col)
-            .agg(F.sum("_n").alias("prior_verdict_count"))
-            .filter(F.col("prior_verdict_count") > 0)
-        )
-        self.verdict_state.merge_append(delta, batch_id=batch_id)
-
     def _prior_high_watermark(self, batch_id: int) -> Optional[float]:
         """High watermark (epoch seconds) as of the newest batch committed
         before ``batch_id``, from that batch's commit marker. The marker
@@ -206,87 +214,111 @@ class RuleStreamPipeline:
 
     # -- batch body ----------------------------------------------------------
 
+    def _job_ids(self) -> set[int]:
+        """Ids of the Spark jobs of this thread's job group (a streaming
+        query's, inside ``foreachBatch``) that the status store holds."""
+        sc = self.spark.sparkContext
+        group = sc.getLocalProperty("spark.jobGroup.id")
+        return set(sc.statusTracker().getJobIdsForGroup(group))
+
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        t0 = time.perf_counter()
         if self.sink.is_committed(batch_id):
             return  # replayed batch → exactly-once skip
-        batch_df = self._sample(batch_df)
-        pt = list(self.passthrough)
-        if self.sample_rates:
-            pt.append("__sample_rate")
-        # label state as-of the PREVIOUS batch (reads-before-writes; on
-        # replay, before_batch pins the snapshot the batch originally saw)
+        jobs_before = self._job_ids()
+        # state as-of the PREVIOUS batch (reads-before-writes; on replay,
+        # before_batch pins the snapshot the batch originally saw)
         label_state = (
             self.labels.read(self.spark, before_batch=batch_id)
             if self.plan.label_lookups
             else None
         )
+        prior = (
+            self.prior_verdict_counts(before_batch=batch_id)
+            if self.track_verdict_state
+            else None
+        )
+        prev_hw = self._prior_high_watermark(batch_id)
+        t_read = time.perf_counter()
+
+        batch_df = self._sample(batch_df)
+        pt = list(self.passthrough)
+        if self.sample_rates:
+            pt.append("__sample_rate")
         out = self.plan.apply(
             batch_df,
             passthrough=pt,
             label_state=label_state,
             include_mutation_structs=True,
-            # the store MERGEs on (entity_type, entity_id, label_name) —
-            # one row per key by construction, skip the defensive collapse
+            # the store resolves to one row per (entity_type, entity_id,
+            # label_name) — skip the defensive collapse
             unique_label_state=True,
         )
-        if self.track_verdict_state:
+        if prior is not None:
             # stream-state join: each turn sees verdicts accumulated in
             # PRIOR batches only (reads-before-writes ordering, matching
             # the reference's labels: output_sink.py:186-211). No join
             # hint: the planner broadcasts the state while its scan is
             # under autoBroadcastJoinThreshold and shuffles it past that
-            prior = self.prior_verdict_counts(before_batch=batch_id)
             out = out.join(prior, on=self.key_col, how="left").withColumn(
                 "prior_verdict_count",
                 F.coalesce(F.col("prior_verdict_count"), F.lit(0)),
             )
         if self.post_plan is not None:
             out = self.post_plan(batch_df, out)
-        out = out.persist()
-        try:
-            # -- single evaluation: the first action below materializes the
-            # cache; everything after reads it
+        obs = Observation()
+        floor = (prev_hw if prev_hw is not None else float("-inf")) - self.allowed_lateness_s
+        out = out.observe(
+            obs,
+            F.max(F.unix_timestamp(F.col("__timestamp"))).alias("mx"),
+            F.sum(
+                (F.unix_timestamp(F.col("__timestamp")) < F.lit(floor)).cast("long")
+            ).alias("late"),
+        )
+        t_plan = time.perf_counter()
+
+        def register_state() -> dict:
+            # runs after the data files and before the marker: the batch
+            # directory becomes each store's new generation (label, then
+            # verdict); a crash before the marker replays into these
+            # idempotent registrations, so no delta is lost or doubled
+            t_write = time.perf_counter()
+            target = self.sink.batch_dir(batch_id)
             if self.plan.labels:
-                # mutation rows explode the structs column of the SAME
-                # evaluated frame (HasLabel-dependent apply_if conditions
-                # included — the raw batch would miss resolved lookups)
-                mutations = self.plan.label_mutation_rows(out)
-                # state deltas FIRST (label, then verdict), sink commit
-                # marker LAST: a crash anywhere in between replays into
-                # idempotent per-batch state merges, so mutations are
-                # never lost or double-applied
-                self.labels.apply_mutations(mutations, batch_id=batch_id)
+                self.labels.register(self.spark, target, batch_id)
             if self.track_verdict_state:
-                self._update_verdict_state(out, batch_id)
-            prev_hw = self._prior_high_watermark(batch_id)
-            obs = Observation()
-            floor = (prev_hw if prev_hw is not None else float("-inf")) - self.allowed_lateness_s
-            to_write = out.drop(CompiledRuleset.MUTATION_STRUCTS_COL).observe(
-                obs,
-                F.max(F.unix_timestamp(F.col("__timestamp"))).alias("mx"),
-                F.sum(
-                    (F.unix_timestamp(F.col("__timestamp")) < F.lit(floor)).cast("long")
-                ).alias("late"),
-            )
-            self.sink.write_batch(
-                to_write, batch_id, extra=lambda: self._late_metrics_from(obs, prev_hw)
-            )
-            # tee to additional sinks (the MultiOutputSink analog,
-            # worker/sinks/sink/output_sink.py:54-120); each sink is isolated —
-            # one failing does not poison the committed result
+                self.verdict_state.register(self.spark, target, batch_id)
+            t_reg = time.perf_counter()
+            return {
+                **self._late_metrics_from(obs, prev_hw),
+                "phases": {
+                    "read_s": round(t_read - t0, 4),
+                    "plan_s": round(t_plan - t_read, 4),
+                    "write_s": round(t_write - t_plan, 4),
+                    "register_s": round(t_reg - t_write, 4),
+                },
+                "spark_jobs": len(self._job_ids() - jobs_before),
+            }
+
+        # the single evaluation of the plan
+        self.sink.write_batch(out, batch_id, extra=register_state)
+        if self.console or self.extra_sinks:
+            # tee the committed files to additional sinks (the
+            # MultiOutputSink analog, worker/sinks/sink/output_sink.py:
+            # 54-120); each sink is isolated — one failing does not poison
+            # the committed result
+            committed = self.spark.read.parquet(self.sink.batch_dir(batch_id))
             if self.console:
-                out.show(20, truncate=40)
+                committed.show(20, truncate=40)
             for sink_fn in self.extra_sinks:
                 try:
-                    sink_fn(out, batch_id)
+                    sink_fn(committed, batch_id)
                 except Exception:  # noqa: BLE001 — per-sink failure isolation
                     import logging
 
                     logging.getLogger(__name__).exception(
                         "extra sink failed (batch %s)", batch_id
                     )
-        finally:
-            out.unpersist()
         self._maybe_expire_state(batch_id)
 
     def _maybe_expire_state(self, batch_id: int) -> None:

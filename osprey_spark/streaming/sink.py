@@ -10,6 +10,14 @@ marker exists. Replayed batches (after failure/restart mid-commit) are
 skipped — idempotent under Structured Streaming's batch-id replay
 contract, which is exactly how the Iceberg sink achieves exactly-once.
 
+Commit order inside ``write_batch``: the data files, then the ``extra``
+callback, then the commit marker LAST. The streaming pipeline's callback
+registers the batch directory as the new generation of its label and
+verdict state stores, so the one data write is also both state deltas
+and the marker is the single point at which a batch becomes committed.
+A crash anywhere before the marker replays the batch: the data files are
+rewritten and the registrations are idempotent per batch id.
+
 Per-partition lineage: each committed batch records per-output-file row
 counts read from the parquet footers (driver-side metadata, no second
 evaluation of the plan — the Iceberg-manifest-statistics analog). The
@@ -40,6 +48,9 @@ class IdempotentParquetSink:
     def _commit_marker(self, batch_id: int) -> str:
         return os.path.join(self.commit_dir, f"{batch_id}.json")
 
+    def batch_dir(self, batch_id: int) -> str:
+        return os.path.join(self.data_dir, f"batch={batch_id}")
+
     def committed_batches(self) -> list[int]:
         return sorted(
             int(f[: -len(".json")])
@@ -59,12 +70,14 @@ class IdempotentParquetSink:
         """foreachBatch body. Returns False when the batch was already
         committed (replay after restart) — the exactly-once guard.
 
-        ``extra`` may be a callable evaluated AFTER the write action —
-        the hook for ``df.observe()`` metrics that only exist once the
-        single evaluation pass has run."""
+        ``extra`` may be a callable evaluated AFTER the data files are
+        written and BEFORE the marker — the hook for ``df.observe()``
+        metrics that only exist once the single evaluation pass has run,
+        and for anything that must land before the batch commits; what
+        it returns rides the marker."""
         if self.is_committed(batch_id):
             return False
-        target = os.path.join(self.data_dir, f"batch={batch_id}")
+        target = self.batch_dir(batch_id)
         t0 = time.time()
         df.write.mode("overwrite").parquet(target)
         # per-partition lineage from the written files' footers: one plan
@@ -91,7 +104,7 @@ class IdempotentParquetSink:
         batches = self.committed_batches()
         if not batches:
             return None
-        paths = [os.path.join(self.data_dir, f"batch={b}") for b in batches]
+        paths = [self.batch_dir(b) for b in batches]
         return spark.read.parquet(*paths)
 
     def marker(self, batch_id: int) -> dict:

@@ -15,12 +15,13 @@ MSCHEMA = (
 
 
 def test_crash_between_concurrent_state_merges_replays_exactly_once(spark, tmp_path):
-    """A batch applies the label merge, then the verdict merge, then the
-    sink marker. A crash AFTER the label merge landed but BEFORE the
-    verdict merge (and so before the sink marker) must replay into:
-    already-applied merge skipped (idempotent batch_id), missing merge
-    applied, sink row counts exact — and HasLabel must still see the
-    PRE-batch label snapshot on replay."""
+    """A batch writes the sink data files, registers them with the label
+    store, then with the verdict store, then writes the sink marker. A
+    crash AFTER the label registration landed but BEFORE the verdict one
+    (and so before the sink marker) must replay into: already-applied
+    registration skipped (idempotent batch_id), missing one applied, sink
+    row counts exact — and HasLabel must still see the PRE-batch label
+    snapshot on replay."""
     import datetime
 
     from pyspark.sql import functions as F
@@ -54,18 +55,18 @@ WhenRules(rules_any=[Repeat], then=[DeclareVerdict(verdict='repeat')])
 
     pipe.process_batch(batch(0), 0)
 
-    # crash batch 1 after the LABEL merge landed but before the VERDICT
-    # merge — and before the sink marker
-    orig = pipe._update_verdict_state
+    # crash batch 1 after the LABEL registration landed but before the
+    # VERDICT registration — and before the sink marker
+    orig = pipe.verdict_state.register
     calls = {"n": 0}
 
-    def boom(out, bid):
+    def boom(spark_, directory, bid):
         if bid == 1 and calls["n"] == 0:
             calls["n"] += 1
             raise RuntimeError("injected crash between state merges")
-        return orig(out, bid)
+        return orig(spark_, directory, bid)
 
-    pipe._update_verdict_state = boom
+    pipe.verdict_state.register = boom
     import pytest
 
     with pytest.raises(RuntimeError, match="injected crash"):

@@ -108,6 +108,22 @@ def test_merge_idempotent_per_batch(spark, tmp_path):
     assert store.read(spark, before_batch=1).count() == 5
 
 
+def test_conflicting_rows_in_one_apply_read_back_as_one(spark, tmp_path):
+    """``apply_mutations`` appends the raw rows; the read resolves the
+    in-batch rule: the higher status wins, then the later event."""
+    store = LabelStateStore(str(tmp_path / "labels"))
+    m = datetime.timedelta(minutes=1)
+    rows = [
+        ("User", "u1", "bad", 1, T0, None),
+        ("User", "u1", "bad", 0, T0 + m, None),  # later, but a lower status
+        ("User", "u2", "bad", 1, T0, None),
+        ("User", "u2", "bad", 1, T0 + m, None),  # same status, later event
+    ]
+    store.apply_mutations(spark.createDataFrame(rows, MSCHEMA), batch_id=0)
+    got = sorted((r["entity_id"], r["status"], r["created_at"]) for r in store.read(spark).collect())
+    assert got == [("u1", 1, T0), ("u2", 1, T0 + m)]
+
+
 def _jobs_during(spark, fn):
     """Spark jobs ``fn()`` launched, counted through the status store."""
     sc = spark.sparkContext._jsc.sc()

@@ -174,6 +174,30 @@ def test_experiment_when_is_not_a_bool_operand():
     assert "has type `list[bool]`, expected `bool`" in out
 
 
+def test_experiment_when_is_not_a_when_all_condition():
+    # a list[bool] condition used to validate and then fail in Spark with
+    # `cannot cast "ARRAY<BOOLEAN>" to "BOOLEAN"`
+    out = _errors("""
+    U: Entity[str] = EntityJson(type='User', path='$.uid')
+    Exp = Experiment(entity=U, buckets=['control', 'treat'], bucket_sizes=[50, 50])
+    W = ExperimentWhen(experiment=Exp, control=[True], treat=[False])
+    R = Rule(when_all=[W], description='d')
+    """)
+    assert "unsupported type for a `when_all` condition" in out
+    assert "has type `list[bool]`, expected `bool`" in out
+
+
+def test_bare_call_without_declared_return_type_rejected():
+    # StringStartsWith's row declares no return type; its result is
+    # still dropped when it stands alone as a statement
+    out = _errors("""
+    S: str = JsonData(path='$.s')
+    StringStartsWith(s=S, start='a')
+    """)
+    assert "you must use the result of this function call" in out
+    assert "`Foo = StringStartsWith(...)` is OK" in out
+
+
 def test_not_on_non_bool_rejected():
     out = _errors("""
     S: str = JsonData(path='$.s')
