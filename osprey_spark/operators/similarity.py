@@ -5,9 +5,8 @@
   k winners); the cosine is an Arrow-batched numpy matmul.
 - ``knn_join``: batch top-k for a whole table of queries via broadcast
   of the (small) query side + per-query window top-k.
-- ``lsh_topk``: the scale path — random-hyperplane bucket pruning with
-  multi-probe (flip 1 bit), exact re-rank inside probed buckets. At
-  100 TB the bucket predicate prunes the scan to ~(probes/2^b) of rows.
+- ``ivf_topk``: the scale path — k-means-lite inverted lists, probe the
+  query's nearest lists, exact re-rank inside them.
 """
 
 from __future__ import annotations
@@ -16,7 +15,7 @@ from typing import Optional, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -155,63 +154,6 @@ def signbits_udf(planes):
         return pd.Series((S * weights).sum(axis=1).astype(np.int64))
 
     return bits
-
-
-def hyperplane_bucket(
-    emb: Column, num_hyperplanes: int = 8, seed: int = 42, dim: int = 32
-) -> Column:
-    """Sign-LSH bucket id from ``num_hyperplanes`` fixed random planes —
-    one vectorized matmul per Arrow batch (kept as a Column-producing
-    helper so writers can MATERIALIZE the bucket as a partition column at
-    ingest, where it runs once per row ever)."""
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((num_hyperplanes, dim))
-    return signbits_udf(planes)(emb)
-
-
-def lsh_topk(
-    df: DataFrame,
-    query: Sequence[float],
-    k: int = 10,
-    emb_col: str = "embedding",
-    id_col: str = "vec_id",
-    num_hyperplanes: int = 8,
-    seed: int = 42,
-    multi_probe: int = 1,
-    bucket_col: Optional[str] = None,
-) -> DataFrame:
-    """Approximate cosine top-k: prune to the query's LSH bucket plus
-    all buckets within ``multi_probe`` bit flips, exact re-rank inside.
-
-    Pass ``bucket_col`` when the table carries a PRE-MATERIALIZED bucket
-    (written at ingest with ``hyperplane_bucket``, same planes/seed) —
-    then the probe set is a native IN-filter that partition-prunes the
-    scan. Without it the buckets are computed on the fly (one Arrow
-    matmul per batch), which still prunes the re-rank but must read
-    every row once."""
-    qv = np.asarray(query, dtype="float64")
-    dim = len(qv)
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((num_hyperplanes, dim))
-    qbits = 0
-    margins = []
-    for i in range(num_hyperplanes):
-        proj = float(planes[i] @ qv)
-        if proj >= 0:
-            qbits |= 1 << i
-        margins.append((abs(proj), i))
-    probe_buckets = {qbits}
-    if multi_probe > 0:
-        margins.sort()
-        for _, i in margins[:multi_probe]:
-            probe_buckets.add(qbits ^ (1 << i))
-
-    if bucket_col is not None:
-        pruned = df.filter(F.col(bucket_col).isin(list(probe_buckets)))
-    else:
-        bucket = hyperplane_bucket(F.col(emb_col), num_hyperplanes, seed, dim)
-        pruned = df.withColumn("_bkt", bucket).filter(F.col("_bkt").isin(list(probe_buckets)))
-    return cosine_topk(pruned, query, k=k, emb_col=emb_col, id_col=id_col)
 
 
 def kmeans_lite(

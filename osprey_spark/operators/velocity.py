@@ -9,10 +9,10 @@ Two shapes:
   `windowed_distinct`): one row per (window, key) — the classic
   streaming aggregation; works identically in batch and Structured
   Streaming (callers add the watermark in streaming).
-- **per-event trailing** (`attach_trailing_count` /
-  `attach_trailing_distinct`): the exact counter-service read semantics
-  — every event row gets the count over the trailing ``window_seconds``
-  for its key, via a range-bounded window function.
+- **per-event trailing** (`attach_trailing_count`): the exact
+  counter-service read semantics — every event row gets the count over
+  the trailing ``window_seconds`` for its key, via a range-bounded
+  window function.
 
 Scale: bucketed aggs are partial-aggregated map-side before one shuffle
 on (key, window). The trailing shape sorts within key partitions only;
@@ -123,25 +123,6 @@ def attach_trailing_count(
     'standard') evaluated at each event's own time (counters.py:11-56)."""
     return df.withColumn(
         out_col, F.count(F.lit(1)).over(_trailing_window(key, window_seconds, ts_col))
-    )
-
-
-def attach_trailing_distinct(
-    df: DataFrame,
-    key: KeyArg,
-    distinct_col: str,
-    window_seconds: int,
-    ts_col: str = "ts",
-    out_col: str = "trailing_distinct",
-) -> DataFrame:
-    """Per-event trailing distinct count (counter service 'unique').
-
-    Window functions can't do count_distinct over a range frame, so this
-    collects the trailing set and sizes it — bounded by per-key window
-    volume; use the bucketed shape at scale."""
-    w = _trailing_window(key, window_seconds, ts_col)
-    return df.withColumn(
-        out_col, F.size(F.array_distinct(F.collect_list(F.col(distinct_col)).over(w)))
     )
 
 

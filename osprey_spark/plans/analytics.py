@@ -180,10 +180,6 @@ def scan(
     return out.select(id_col, ts_col).orderBy(order, F.col(id_col)).limit(limit)
 
 
-def page_cursor(last_row_ts) -> str:
-    return base64.b64encode(str(last_row_ts).encode()).decode()
-
-
 def event_by_id(df: DataFrame, action_id: int, id_col: str = "__action_id") -> DataFrame:
     """Full stored execution result for one event (the console's event
     view, routes views/events.py → stored_execution_result). A point

@@ -239,8 +239,9 @@ class CompiledRuleset:
     # feature_name_to_entity_type_mapping.py:9): which entity type each
     # stored entity feature resolves to — the UI-API surface reads this
     feature_entity_types: dict[str, str] = None  # type: ignore[assignment]
-    # apply()'s output projections, keyed by include_mutation_structs
-    _projections: dict[bool, list[Column]] = field(
+    # apply()'s output ({lowercased name: name}, projection), keyed by
+    # include_mutation_structs
+    _projections: dict[bool, tuple[dict[str, str], list[Column]]] = field(
         default_factory=dict, repr=False, compare=False
     )
 
@@ -458,25 +459,30 @@ class CompiledRuleset:
             f"{sfx}_st", f"{sfx}_cr", f"{sfx}_exp", f"{sfx}_rsn", f"{sfx}_any"
         )
 
-    def output_columns(self) -> list[Column]:
-        cols = [f.col.alias(f.name) for f in self.features if f.extracted]
-        return cols + self.internal_columns()
+    def output_columns(self) -> list[tuple[str, Column]]:
+        """(name, Column) of each column ``apply`` adds after the
+        passthrough."""
+        cols = [(f.name, f.col) for f in self.features if f.extracted]
+        return cols + self._internal()
 
     def internal_columns(self) -> list[Column]:
+        return [c.alias(name) for name, c in self._internal()]
+
+    def _internal(self) -> list[tuple[str, Column]]:
         cols = []
         if self.action_id_col:
-            cols.append(F.col(self.action_id_col).alias("__action_id"))
-        cols.append(F.col(self.timestamp_col).alias("__timestamp"))
+            cols.append(("__action_id", F.col(self.action_id_col)))
+        cols.append(("__timestamp", F.col(self.timestamp_col)))
         if self.error_indicators:
             err = None
             for ind in self.error_indicators:
                 term = F.coalesce(ind.cast("int"), F.lit(0))
                 err = term if err is None else (err + term)
-            cols.append(err.alias("__error_count"))
+            cols.append(("__error_count", err))
         else:
-            cols.append(F.lit(0).alias("__error_count"))
-        cols.append(self.verdicts_col().alias("__verdicts"))
-        cols.append(self.label_mutations_col().alias("__entity_label_mutations"))
+            cols.append(("__error_count", F.lit(0)))
+        cols.append(("__verdicts", self.verdicts_col()))
+        cols.append(("__entity_label_mutations", self.label_mutations_col()))
         # plugin custom effect features (e.g. __ban_user)
         by_name: dict[str, list[CustomEffectEntry]] = {}
         for ce in self.custom_effects:
@@ -500,7 +506,7 @@ class CompiledRuleset:
                     for e in entries
                 ]
             )
-            cols.append(arr.alias(f"__{name}"))
+            cols.append((f"__{name}", arr))
         return cols
 
     # NOTE on the concat-of-conditional-singletons shape below: the
@@ -564,23 +570,36 @@ class CompiledRuleset:
 
         The output projection is built once per ruleset and reused: its
         Column tree is the same for every batch, and building it costs a
-        py4j call per node."""
+        py4j call per node.
+
+        Raises ``ValueError`` when a passthrough column and an output
+        column have the same name up to case: Spark resolves names
+        case-insensitively, so the output could not reference either."""
         pt = passthrough if passthrough is not None else df.columns
+        by_lower, cols = self._projection(include_mutation_structs)
+        for c in pt:
+            if c.lower() in by_lower:
+                raise ValueError(
+                    f"passthrough column {c!r} collides with output column "
+                    f"{by_lower[c.lower()]!r} (column names are case-insensitive); "
+                    "rename the feature or leave the column out of passthrough"
+                )
         df = self.resolve_label_lookups(
             df, label_state, unique_label_state=unique_label_state
         )
-        return df.select(*[F.col(c) for c in pt], *self._projection(include_mutation_structs))
+        return df.select(*[F.col(c) for c in pt], *cols)
 
-    def _projection(self, include_mutation_structs: bool) -> list[Column]:
-        cols = self._projections.get(include_mutation_structs)
-        if cols is None:
-            cols = self.output_columns()
+    def _projection(
+        self, include_mutation_structs: bool
+    ) -> tuple[dict[str, str], list[Column]]:
+        proj = self._projections.get(include_mutation_structs)
+        if proj is None:
+            named = self.output_columns()
             if include_mutation_structs:
-                cols.append(
-                    self.label_mutation_structs_col().alias(self.MUTATION_STRUCTS_COL)
-                )
-            self._projections[include_mutation_structs] = cols
-        return cols
+                named.append((self.MUTATION_STRUCTS_COL, self.label_mutation_structs_col()))
+            proj = ({n.lower(): n for n, _ in named}, [c.alias(n) for n, c in named])
+            self._projections[include_mutation_structs] = proj
+        return proj
 
     def label_mutation_structs_col(self) -> Column:
         """Array of applied-mutation structs for this row (empty when no

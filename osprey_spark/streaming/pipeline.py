@@ -55,9 +55,18 @@ from osprey_spark.streaming.label_state import LabelStateStore
 from osprey_spark.streaming.sink import IdempotentParquetSink
 from osprey_spark.streaming.state_store import GEN_COL, MorStateStore
 
+# The rule stream's input contract: the transcript table of the paper's
+# engine, declared once. ``WATERMARK`` is both the input stream's
+# watermark delay and the allowed lateness of the ``late_rows`` metric.
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
 )
+ACTION_NAME_COL = "role"
+TIMESTAMP_COL = "ts"
+KEY_COL = "conv_id"
+PASSTHROUGH = ("conv_id", "turn_idx")
+WATERMARK = "10 minutes"
+ALLOWED_LATENESS_S = interval_seconds(WATERMARK)
 
 
 def sample_rate_col(action_name_col: str, rates: Optional[dict[str, float]]) -> F.Column:
@@ -79,17 +88,10 @@ class RuleStreamPipeline:
         spark: SparkSession,
         sources: dict[str, str],
         workdir: str,
-        action_name_col: str = "role",
-        timestamp_col: str = "ts",
-        input_schema: Optional[str] = None,
-        watermark: str = "10 minutes",
-        passthrough: Optional[list[str]] = None,
         post_plan: Optional[Callable[[DataFrame, DataFrame], DataFrame]] = None,
         sample_rates: Optional[dict[str, float]] = None,
         track_verdict_state: bool = False,
-        key_col: str = "conv_id",
         extra_sinks: Optional[list[Callable[[DataFrame, int], None]]] = None,
-        console: bool = False,
         maintenance_every: int = 16,
         keep_versions: int = 8,
         label_max_delta_files: int = 8,
@@ -101,26 +103,17 @@ class RuleStreamPipeline:
         ``keep_versions`` must cover the replay window (the pipeline
         replays at most the last un-marked batch, so any value ≥ 2 is
         safe; the default keeps a deeper time-travel margin). 0 disables
-        maintenance.
-
-        ``watermark`` is both the input stream's watermark delay and the
-        allowed lateness of the ``late_rows`` metric, so it must be a
-        single ``'<N> seconds|minutes|hours|days'`` pair."""
+        maintenance."""
         # the rule-authoring surface rejects what the reference's
         # ast_validator rejects (typed errors with source spans) before
         # any Spark plan is built
         validate_sources(sources)
         self.spark = spark
         self.workdir = workdir
-        self.watermark = watermark
-        self.allowed_lateness_s = interval_seconds(watermark)
-        self.passthrough = passthrough or ["conv_id", "turn_idx"]
         self.post_plan = post_plan
         self.sample_rates = sample_rates
         self.track_verdict_state = track_verdict_state
         self.extra_sinks = extra_sinks or []
-        self.console = console
-        self.key_col = key_col
         self.maintenance_every = maintenance_every
         self.keep_versions = keep_versions
         self.sink = IdempotentParquetSink(os.path.join(workdir, "results"))
@@ -140,29 +133,26 @@ class RuleStreamPipeline:
         # once its live generation count passes the threshold
         self.verdict_state = MorStateStore(
             os.path.join(workdir, "verdict_state"),
-            schema=f"{key_col} string, prior_verdict_count long",
-            resolve_fn=lambda df: df.groupBy(key_col).agg(
+            schema=f"{KEY_COL} string, prior_verdict_count long",
+            resolve_fn=lambda df: df.groupBy(KEY_COL).agg(
                 F.sum("prior_verdict_count").alias("prior_verdict_count")
             ),
-            log_schema=f"{key_col} string, __verdicts array<string>",
+            log_schema=f"{KEY_COL} string, __verdicts array<string>",
             log_view=lambda df: df.select(
-                key_col,
+                KEY_COL,
                 F.size("__verdicts").cast("long").alias("prior_verdict_count"),
                 GEN_COL,
             ).filter(F.col("prior_verdict_count") > 0),
         )
-        schema_str = input_schema or TRANSCRIPT_SCHEMA
         from pyspark.sql.types import _parse_datatype_string
 
-        self.schema = _parse_datatype_string(schema_str)
-        self.action_name_col = action_name_col
+        self.schema = _parse_datatype_string(TRANSCRIPT_SCHEMA)
         self.plan: CompiledRuleset = RulesetCompiler(
             sources,
             input_schema=self.schema,
-            action_name_col=action_name_col,
-            timestamp_col=timestamp_col,
+            action_name_col=ACTION_NAME_COL,
+            timestamp_col=TIMESTAMP_COL,
         ).compile()
-        self.timestamp_col = timestamp_col
 
     # -- per-batch preprocessing --------------------------------------------
 
@@ -175,7 +165,7 @@ class RuleStreamPipeline:
         be re-weighted by 1/rate."""
         if not self.sample_rates:
             return df
-        rate_expr = sample_rate_col(self.action_name_col, self.sample_rates)
+        rate_expr = sample_rate_col(ACTION_NAME_COL, self.sample_rates)
         bucket = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(10000))
         return df.filter(bucket < rate_expr * 10000).withColumn(
             "__sample_rate", rate_expr
@@ -242,7 +232,7 @@ class RuleStreamPipeline:
         t_read = time.perf_counter()
 
         batch_df = self._sample(batch_df)
-        pt = list(self.passthrough)
+        pt = list(PASSTHROUGH)
         if self.sample_rates:
             pt.append("__sample_rate")
         out = self.plan.apply(
@@ -260,14 +250,14 @@ class RuleStreamPipeline:
             # the reference's labels: output_sink.py:186-211). No join
             # hint: the planner broadcasts the state while its scan is
             # under autoBroadcastJoinThreshold and shuffles it past that
-            out = out.join(prior, on=self.key_col, how="left").withColumn(
+            out = out.join(prior, on=KEY_COL, how="left").withColumn(
                 "prior_verdict_count",
                 F.coalesce(F.col("prior_verdict_count"), F.lit(0)),
             )
         if self.post_plan is not None:
             out = self.post_plan(batch_df, out)
         obs = Observation()
-        floor = (prev_hw if prev_hw is not None else float("-inf")) - self.allowed_lateness_s
+        floor = (prev_hw if prev_hw is not None else float("-inf")) - ALLOWED_LATENESS_S
         out = out.observe(
             obs,
             F.max(F.unix_timestamp(F.col("__timestamp"))).alias("mx"),
@@ -288,28 +278,30 @@ class RuleStreamPipeline:
                 self.labels.register(self.spark, target, batch_id)
             if self.track_verdict_state:
                 self.verdict_state.register(self.spark, target, batch_id)
-            t_reg = time.perf_counter()
-            return {
+            # the marker's own bookkeeping counts in register_s, so the
+            # phases cover the batch's wall up to the marker write
+            marker = {
                 **self._late_metrics_from(obs, prev_hw),
-                "phases": {
-                    "read_s": round(t_read - t0, 4),
-                    "plan_s": round(t_plan - t_read, 4),
-                    "write_s": round(t_write - t_plan, 4),
-                    "register_s": round(t_reg - t_write, 4),
-                },
                 "spark_jobs": len(self._job_ids() - jobs_before),
             }
+            t_reg = time.perf_counter()
+            marker["phases"] = {
+                "read_s": round(t_read - t0, 4),
+                "plan_s": round(t_plan - t_read, 4),
+                "write_s": round(t_write - t_plan, 4),
+                "register_s": round(t_reg - t_write, 4),
+            }
+            return marker
 
         # the single evaluation of the plan
         self.sink.write_batch(out, batch_id, extra=register_state)
-        if self.console or self.extra_sinks:
+        if self.extra_sinks:
             # tee the committed files to additional sinks (the
             # MultiOutputSink analog, worker/sinks/sink/output_sink.py:
-            # 54-120); each sink is isolated — one failing does not poison
-            # the committed result
+            # 54-120; a stdout sink is ``lambda df, b: df.show()``); each
+            # sink is isolated — one failing does not poison the committed
+            # result
             committed = self.spark.read.parquet(self.sink.batch_dir(batch_id))
-            if self.console:
-                committed.show(20, truncate=40)
             for sink_fn in self.extra_sinks:
                 try:
                     sink_fn(committed, batch_id)
@@ -348,7 +340,7 @@ class RuleStreamPipeline:
             self.spark.readStream.schema(self.schema)
             .option("maxFilesPerTrigger", "4")
             .parquet(input_dir)
-            .withWatermark(self.timestamp_col, self.watermark)
+            .withWatermark(TIMESTAMP_COL, WATERMARK)
         )
         writer = (
             stream.writeStream.foreachBatch(self.process_batch)
@@ -365,33 +357,3 @@ class RuleStreamPipeline:
     def results(self) -> Optional[DataFrame]:
         return self.sink.read(self.spark)
 
-
-def windowed_velocity_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema: str = TRANSCRIPT_SCHEMA,
-    key: str = "conv_id",
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    ts_col: str = "ts",
-):
-    """Streaming tumbling counts with watermark-driven eviction — the
-    counter-service replacement in streaming form. Returns the streaming
-    DataFrame (caller attaches the sink)."""
-    from pyspark.sql.types import _parse_datatype_string
-
-    stream = (
-        spark.readStream.schema(_parse_datatype_string(schema))
-        .parquet(input_dir)
-        .withWatermark(ts_col, watermark)
-    )
-    return (
-        stream.groupBy(F.window(ts_col, window).alias("w"), key)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            key,
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "n",
-        )
-    )

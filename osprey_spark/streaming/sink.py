@@ -32,7 +32,7 @@ import glob
 import json
 import os
 import time
-from typing import Callable, Optional, Union
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -65,12 +65,12 @@ class IdempotentParquetSink:
         self,
         df: DataFrame,
         batch_id: int,
-        extra: Union[dict, Callable[[], dict], None] = None,
+        extra: Optional[Callable[[], dict]] = None,
     ) -> bool:
         """foreachBatch body. Returns False when the batch was already
         committed (replay after restart) — the exactly-once guard.
 
-        ``extra`` may be a callable evaluated AFTER the data files are
+        ``extra`` is a callable evaluated AFTER the data files are
         written and BEFORE the marker — the hook for ``df.observe()``
         metrics that only exist once the single evaluation pass has run,
         and for anything that must land before the batch commits; what
@@ -82,10 +82,8 @@ class IdempotentParquetSink:
         df.write.mode("overwrite").parquet(target)
         # per-partition lineage from the written files' footers: one plan
         # evaluation total (the write), zero extra Spark jobs
-        partitions = {}
-        for fp in sorted(glob.glob(os.path.join(target, "*.parquet"))):
-            partitions[os.path.basename(fp)] = _footer_rows(fp)
-        extra_d = extra() if callable(extra) else (extra or {})
+        partitions = footer_rows(target)
+        extra_d = extra() if extra is not None else {}
         marker = {
             "batch_id": batch_id,
             "rows": int(sum(partitions.values())),
@@ -116,7 +114,12 @@ class IdempotentParquetSink:
         return [self.marker(b) for b in self.committed_batches()]
 
 
-def _footer_rows(path: str) -> int:
+def footer_rows(directory: str) -> dict[str, int]:
+    """Rows of each parquet file in ``directory``, by file name, from
+    the files' footers (a metadata read in this process, no Spark job)."""
     import pyarrow.parquet as pq
 
-    return int(pq.ParquetFile(path).metadata.num_rows)
+    return {
+        os.path.basename(fp): int(pq.ParquetFile(fp).metadata.num_rows)
+        for fp in sorted(glob.glob(os.path.join(directory, "*.parquet")))
+    }

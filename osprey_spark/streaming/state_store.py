@@ -66,7 +66,6 @@ write cost is the distributed analog of that per-entity cost model.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re
@@ -75,6 +74,8 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from osprey_spark.streaming.sink import footer_rows
 
 # Generation column. A written generation STAMPS it into its rows (a
 # literal of the write, so it costs nothing at scan); a log generation
@@ -305,7 +306,7 @@ class MorStateStore:
         its row count."""
         full = os.path.join(self.path, rel)
         df.withColumn(GEN_COL, F.lit(gen)).write.mode("overwrite").parquet(full)
-        return _dir_rows(full)
+        return sum(footer_rows(full).values())
 
     # -- snapshot expiry --------------------------------------------------------
 
@@ -346,14 +347,3 @@ class MorStateStore:
                 if v < min(keep):
                     os.remove(full)
         return removed
-
-
-def _dir_rows(directory: str) -> int:
-    """Rows in ``directory``'s parquet files, from their footers (a
-    metadata read in this process, no Spark job)."""
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.ParquetFile(fp).metadata.num_rows
-        for fp in glob.glob(os.path.join(directory, "*.parquet"))
-    )

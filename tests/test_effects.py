@@ -5,6 +5,7 @@ output_sink.py:186-211)."""
 
 import datetime
 
+import pytest
 from pyspark.sql import types as T
 
 from tests.helpers import run_parity
@@ -88,7 +89,7 @@ def test_applied_label_rows(spark):
         [tuple(r.get(f.name) for f in SCHEMA.fields) for r in rows], SCHEMA
     )
     plan = RulesetCompiler(SOURCES, input_schema=df.schema, action_name_col="action_name").compile()
-    out = plan.apply(df, include_mutation_structs=True)
+    out = plan.apply(df, passthrough=["__row_id"], include_mutation_structs=True)
     applied = plan.label_mutation_rows(out, extra_cols=["__row_id"]).collect()
     got = {(r["__row_id"], r["label_name"]): r for r in applied}
     # u1: plain + gated + fragile? Broken fired (x=1) → fragile applied; old removed
@@ -109,3 +110,22 @@ def test_entry_smoke(spark):
     df = e.entry(spark)
     assert df.count() > 0
     assert {"event_id", "UserId", "BigPurchase", "verdict", "n_mutations"} <= set(df.columns)
+
+
+def test_output_name_colliding_with_passthrough_up_to_case_rejected(spark):
+    """A feature named like a passthrough column up to case (input ``id``,
+    feature ``Id``) would give the output two columns Spark cannot tell
+    apart (AMBIGUOUS_REFERENCE); ``apply`` names both columns instead.
+    The internal output names collide the same way."""
+    from osprey_spark.sml.compiler import RulesetCompiler
+
+    df = spark.createDataFrame([("u1", "hi", TS)], "id string, text string, ts timestamp")
+    plan = RulesetCompiler(
+        {"main.sml": "Id: str = JsonData(path='$.id')\n"}, input_schema=df.schema
+    ).compile()
+    with pytest.raises(ValueError, match="'id' collides with output column 'Id'"):
+        plan.apply(df)
+    with pytest.raises(ValueError, match="'__Verdicts' collides with output column '__verdicts'"):
+        plan.apply(df.withColumnRenamed("text", "__Verdicts"), passthrough=["__Verdicts"])
+    row = plan.apply(df, passthrough=["text"]).select("text", "Id").collect()[0]
+    assert (row["text"], row["Id"]) == ("hi", "u1")

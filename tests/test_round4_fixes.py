@@ -45,12 +45,10 @@ def test_signbits_rejects_over_63_planes(spark):
     """ADVICE r3: 64+ hyperplanes silently wrap the uint64 weight shift
     and int64 cast, desyncing packed bits from Python-side query bits —
     must fail loud instead."""
-    from osprey_spark.operators.similarity import hyperplane_bucket, signbits_udf
+    from osprey_spark.operators.similarity import signbits_udf
 
     with pytest.raises(ValueError, match="63"):
         signbits_udf([[0.0] * 8] * 64)
-    with pytest.raises(ValueError, match="63"):
-        hyperplane_bucket(F.col("embedding"), num_hyperplanes=64, dim=8)
     # 63 is fine
     signbits_udf([[0.0] * 8] * 63)
 

@@ -181,9 +181,9 @@ MxOr = ResolveOptional(value=Mx, default='none')
 
 
 def test_console_sink_prints_batch(spark, tmp_path, capsys):
-    """The StdoutOutputSink analog (`console=True`): each committed batch
-    is shown on stdout alongside the durable sink — the debugging tee the
-    reference's stdout sink provides."""
+    """The StdoutOutputSink analog (a ``show`` sink in ``extra_sinks``):
+    each committed batch is shown on stdout alongside the durable sink —
+    the debugging tee the reference's stdout sink provides."""
     import datetime
 
     from osprey_spark.streaming.pipeline import RuleStreamPipeline
@@ -196,7 +196,10 @@ WhenRules(rules_any=[R], then=[DeclareVerdict(verdict='flag')])
 """
     }
     TS = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    pipe = RuleStreamPipeline(spark, RULES, str(tmp_path / "p"), console=True)
+    pipe = RuleStreamPipeline(
+        spark, RULES, str(tmp_path / "p"),
+        extra_sinks=[lambda df, _: df.show(20, truncate=40)],
+    )
     pipe.process_batch(
         spark.createDataFrame(
             [("c0", 0, "user", "hello world", "", datetime.datetime(2024, 1, 1))], TS

@@ -9,13 +9,10 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from osprey_spark.operators.velocity import tumbling_counts
 from osprey_spark.sources import transcripts_pdf
 from osprey_spark.streaming.label_state import LabelStateStore
-from osprey_spark.streaming.pipeline import (
-    TRANSCRIPT_SCHEMA,
-    RuleStreamPipeline,
-    windowed_velocity_stream,
-)
+from osprey_spark.streaming.pipeline import TRANSCRIPT_SCHEMA, RuleStreamPipeline
 from osprey_spark.streaming.sink import IdempotentParquetSink
 
 RULES = {
@@ -177,10 +174,15 @@ def test_streaming_cep(spark, rocksdb, workdir):
     assert got[0]["conv_id"] == "a" and got[0]["matched_at_turn"] == 2
 
 
-def test_windowed_velocity_stream(spark, workdir):
+def test_tumbling_counts_over_watermarked_stream(spark, workdir):
     input_dir = os.path.join(workdir, "vel_in")
     df = _write_input(spark, input_dir, n_convs=20)
-    agg = windowed_velocity_stream(spark, input_dir, window="1 hour", watermark="1 day")
+    stream = (
+        spark.readStream.schema(TRANSCRIPT_SCHEMA)
+        .parquet(input_dir)
+        .withWatermark("ts", "1 day")
+    )
+    agg = tumbling_counts(stream, "conv_id", window="1 hour")
     q = (
         agg.writeStream.outputMode("complete")
         .format("memory")

@@ -8,8 +8,13 @@ import time
 from pyspark.sql import SparkSession
 
 
+USAGE = "usage: rule_eval_job.py <input_dir>  (a parquet dir of transcript turns)"
+
+
 def main() -> None:
-    input_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/osprey_scaling_transcripts_150000"
+    if len(sys.argv) != 2:
+        sys.exit(USAGE)
+    input_dir = sys.argv[1]
     spark = SparkSession.builder.appName("osprey_rule_eval").getOrCreate()
     from osprey_spark.sml import RulesetCompiler
 
